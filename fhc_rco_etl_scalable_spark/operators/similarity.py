@@ -326,11 +326,9 @@ def _use_topk_kernel(assignments: DataFrame) -> bool:
     the small fixtures (sf0.001/sf0.01/sf0.1) exercise the join form,
     the sf1eq sweep the kernel form, and pytest pins kernel == join
     == brute on the same corpus."""
-    import os
+    from ..session import env_int
 
-    threshold = int(
-        os.environ.get("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", str(2 * 1024 * 1024))
-    )
+    threshold = env_int("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", 2 * 1024 * 1024)
     try:
         est = int(
             assignments._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -405,7 +403,12 @@ def _topk_candidate_kernel(
             allowed &= ids[:, None] != q_ids[None, :]
             keep = _local_topk_mask(np.where(allowed, sc, -np.inf), k)
             if pq is not None:
-                adc = base_lut[cells] if cells is not None else np.zeros_like(sc)
+                adc = np.zeros_like(sc)
+                if cells is not None:
+                    # a cell outside the LUT scores -inf, never an IndexError
+                    ok = (cells >= 0) & (cells < base_lut.shape[0])
+                    adc[~ok] = -np.inf
+                    adc[ok] = base_lut[cells[ok]]
                 codes = np.asarray(pdf["codes"].tolist(), dtype=np.int64)
                 for j, lut in enumerate(code_luts):
                     adc = adc + lut[codes[:, j]]

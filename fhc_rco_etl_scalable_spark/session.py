@@ -8,7 +8,9 @@ reproducible against the DuckDB oracle).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -26,6 +28,15 @@ def _default_driver_mem() -> str:
     return "2g"
 
 
+def env_int(name: str, default: int) -> int:
+    """Integer env knob; an unset or malformed value (e.g. "2MiB")
+    falls back to ``default`` instead of raising mid-run."""
+    try:
+        return int(os.environ[name])
+    except (KeyError, ValueError):
+        return default
+
+
 def get_spark(
     app_name: str = "fhc_rco_etl_scalable_spark",
     master: str | None = None,
@@ -39,7 +50,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = env_int("SPARK_GRAFT_SHUFFLE", 32)
 
     builder = (
         SparkSession.builder.master(master)
@@ -88,6 +99,15 @@ def get_spark(
     return spark
 
 
+#: Open fast_planning scopes per session: session -> [entrants, saved
+#: value]. The first entrant saves and sets the conf, the last leaver
+#: restores it, so overlapping scopes from site threads cannot leave
+#: the session with the conf switched off.
+_FAST_PLANNING: dict = {}
+_FAST_PLANNING_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
 def fast_planning(df):
     """Context manager: disable Catalyst constraint propagation while
     CONSTRUCTING a deep pipeline plan (the lazy-checkpoint subtree
@@ -97,22 +117,24 @@ def fast_planning(df):
     inferred isnotnull pushdowns — is redundant there because the
     pipelines filter their join/partition keys explicitly. Scoped to
     construction only: optimization at action time runs with the
-    session default."""
-    import contextlib
-
+    session default. Safe to enter from several threads at once on
+    one session (see ``_FAST_PLANNING``)."""
     spark = df.sparkSession
-
-    @contextlib.contextmanager
-    def cm():
-        key = "spark.sql.constraintPropagation.enabled"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return cm()
+    key = "spark.sql.constraintPropagation.enabled"
+    with _FAST_PLANNING_LOCK:
+        state = _FAST_PLANNING.setdefault(spark, [0, None])
+        if state[0] == 0:
+            state[1] = spark.conf.get(key, None)
+            spark.conf.set(key, "false")
+        state[0] += 1
+    try:
+        yield
+    finally:
+        with _FAST_PLANNING_LOCK:
+            state[0] -= 1
+            if state[0] == 0:
+                del _FAST_PLANNING[spark]
+                if state[1] is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, state[1])

@@ -15,46 +15,54 @@ parquet with a **version-pointer table layout** (the same idea Delta's
 transaction log and Iceberg's metadata pointer implement):
 
     <root>/<table>/
-        _schema.json      # target schema sidecar
+        _schema.json      # table schema, stored by every write
         _version.json     # {"version": N} — the ONLY mutable file
         v000001/ ...      # immutable data snapshots (flat or hive)
 
-Every write materializes the next snapshot ``v{N+1}`` completely —
-hard-linking the files of untouched partitions from ``v{N}`` (no data
-copy, same inodes) and writing only the touched partitions fresh —
-then commits by atomically replacing ``_version.json``. Readers
-resolve the pointer and scan one immutable snapshot, so a reader
-concurrent with a load sees either the old table or the new table,
-never a mix (snapshot isolation; property-tested by
+One private writer, :meth:`ParquetIncrementalSink._write_snapshot`,
+makes every snapshot. It writes the new frame into a private
+``.stage-*`` dir and hard-links files of the current snapshot forward
+(none, all, or every partition the new write did not produce — same
+inodes, no data copy). Then it stores the schema, claims ``v{N+1}``
+with one atomic rename and commits by atomically replacing
+``_version.json``. Each public write method builds its frame and
+calls that writer once.
+
+Readers resolve the pointer and scan one immutable snapshot with the
+stored schema, so nothing is inferred: hive partition values come back
+typed as stored (a ``"01"`` key stays ``"01"``). A reader concurrent
+with a load sees either the old table or the new table, never a mix
+(snapshot isolation; property-tested by
 tests/test_incremental.py::test_concurrent_reader_sees_single_version).
-Crash recovery is trivial by construction: a crash before the pointer
-flip leaves an orphan ``v{M}`` (M > pointer) that the next write
-garbage-collects; a crash after the flip is already committed. There
-is no partially-swapped state to roll back — this closes the round-4
-advice item on `_recover` leaving staged-only partitions behind.
+A crash before the pointer flip leaves an orphan ``v{M}`` (M >
+pointer) or ``.stage-*`` dir that no reader sees and a later commit
+garbage-collects once it is stale; a crash after the flip is already
+committed.
 
 ``delete_overlap_append`` tables are hive-partitioned by the
 delete-scope key (default ``LINE``/``Server``) and a load rewrites
-ONLY the partition directories whose keys appear in the batch (the
-``replaceWhere`` pattern) — survivors for those keys are read with a
-partition-pruned scan, unioned with the batch, and land in the new
-snapshot next to hard-links of every untouched partition. Write
-amplification is O(batch partitions), not O(table). Small state
-tables (brandcode master, Script_Data) snapshot whole — they are tiny
-by construction.
+ONLY the partitions whose keys appear in the batch (the
+``replaceWhere`` pattern): survivors for those keys come from a
+partition-pruned scan, union the batch, and land in the new snapshot
+next to hard-links of every untouched partition. Write amplification
+is O(batch partitions), not O(table). Small state tables (brandcode
+master, Script_Data) snapshot whole — they are tiny by construction.
 
 Idempotence invariant (property-tested): loading the same window twice
-yields byte-identical tables.
+yields the same table.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import time
 import uuid
+from collections.abc import Sequence
 from datetime import datetime, timedelta
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,26 +107,20 @@ def lookback_start(now: datetime, watermark: datetime | None) -> datetime:
     return anchor - timedelta(days=days)
 
 
-def _link_tree(src: str, dst: str, skip_rels: set[str] | None = None) -> None:
-    """Recursively hard-link every file under ``src`` into ``dst``,
-    skipping any subtree whose src-relative path is in ``skip_rels``.
-    Hard links preserve inodes — untouched partitions in a new
-    snapshot are literally the same file bytes on disk."""
-    skip = skip_rels or set()
-
-    def walk(s: str, rel: str) -> None:
-        if rel in skip:
-            return
-        os.makedirs(os.path.join(dst, rel) if rel else dst, exist_ok=True)
-        for name in os.listdir(s):
-            sub = os.path.join(s, name)
-            r = os.path.join(rel, name) if rel else name
-            if os.path.isdir(sub):
-                walk(sub, r)
-            elif r not in skip:
-                os.link(sub, os.path.join(dst, r))
-
-    walk(src, "")
+def _link_tree(src: str, dst: str, skip_written: bool = False) -> None:
+    """Hard-link every file under ``src`` into ``dst`` (same inodes, no
+    data copy), leaving files ``dst`` already has (the new write's
+    ``_SUCCESS`` marker) alone. With ``skip_written``, a leaf dir that
+    ``dst`` already has is skipped whole: the new write replaced that
+    partition (for a flat table the leaf is the root)."""
+    for d, subdirs, files in os.walk(src):
+        out = os.path.join(dst, os.path.relpath(d, src))
+        if skip_written and not subdirs and os.path.isdir(out):
+            continue
+        os.makedirs(out, exist_ok=True)
+        for name in files:
+            if not os.path.exists(os.path.join(out, name)):
+                os.link(os.path.join(d, name), os.path.join(out, name))
 
 
 class ParquetIncrementalSink:
@@ -141,55 +143,22 @@ class ParquetIncrementalSink:
     def _version_dir(self, table: str, n: int) -> str:
         return os.path.join(self._path(table), f"v{n:06d}")
 
-    def _current_version(self, table: str) -> int | None:
-        pp = self._pointer_path(table)
-        if not os.path.exists(pp):
-            return None
-        with open(pp) as f:
-            return int(json.load(f)["version"])
-
-    def _data_path(self, table: str) -> str | None:
-        """Path of the current immutable snapshot (resolving the
-        pointer), or the table dir itself for a legacy pre-pointer
-        layout, or None if the table doesn't exist."""
-        p = self._path(table)
-        n = self._current_version(table)
-        if n is not None:
-            return self._version_dir(table, n)
-        if os.path.isdir(p) and self._has_data_entries(p):
-            return p  # legacy layout: data directly in the table dir
-        return None
-
-    @staticmethod
-    def _has_data_entries(p: str) -> bool:
-        # "_" = sidecars (_schema.json, _version.json); "." = staging
-        return any(not e.startswith(("_", ".")) for e in os.listdir(p))
-
-    def _migrate_legacy(self, table: str) -> int:
-        """Move a legacy layout's data entries into ``v000001`` and
-        write the pointer. Returns the resulting current version (0 if
-        the table is empty/new). Only writers call this — readers
-        never mutate the table."""
-        p = self._path(table)
-        n = self._current_version(table)
-        if n is not None:
-            return n
-        if not (os.path.isdir(p) and self._has_data_entries(p)):
-            return 0
-        v1 = self._version_dir(table, 1)
-        os.makedirs(v1, exist_ok=True)
-        for e in os.listdir(p):
-            if not e.startswith(("_", ".")) and e != os.path.basename(v1):
-                os.rename(os.path.join(p, e), os.path.join(v1, e))
-        self._commit_version(table, 1)
-        return 1
-
     def _pointer_meta(self, table: str) -> dict:
         pp = self._pointer_path(table)
         if not os.path.exists(pp):
             return {}
         with open(pp) as f:
             return json.load(f)
+
+    def _current_version(self, table: str) -> int | None:
+        n = self._pointer_meta(table).get("version")
+        return None if n is None else int(n)
+
+    def _data_path(self, table: str) -> str | None:
+        """Path of the current immutable snapshot (resolving the
+        pointer), or None if the table doesn't exist."""
+        n = self._current_version(table)
+        return None if n is None else self._version_dir(table, n)
 
     def _commit_version(self, table: str, n: int, meta: dict | None = None) -> None:
         """Atomically flip the pointer to snapshot ``n`` (optionally
@@ -326,7 +295,7 @@ class ParquetIncrementalSink:
         between is detected at publish/commit instead of silently
         rebased).  Writers produce the full snapshot in the stage dir,
         then :meth:`_publish` claims ``v{n}`` atomically."""
-        cur = self._migrate_legacy(table)
+        cur = self._current_version(table) or 0
         stage = os.path.join(self._path(table), ".stage-" + uuid.uuid4().hex[:8])
         os.makedirs(stage, exist_ok=True)
         return stage, cur + 1
@@ -371,9 +340,11 @@ class ParquetIncrementalSink:
     # --- schema sidecar (hidden from parquet readers: leading "_") ----
 
     def _store_schema(self, table: str, schema: T.StructType) -> None:
-        os.makedirs(self._path(table), exist_ok=True)
-        with open(os.path.join(self._path(table), "_schema.json"), "w") as f:
+        # tmp + rename: a concurrent reader never sees a half-written file
+        tmp = os.path.join(self._path(table), "_schema.json.tmp-" + uuid.uuid4().hex[:8])
+        with open(tmp, "w") as f:
             f.write(schema.json())
+        os.replace(tmp, os.path.join(self._path(table), "_schema.json"))
 
     def _stored_schema(self, table: str) -> T.StructType | None:
         sp = os.path.join(self._path(table), "_schema.json")
@@ -382,32 +353,6 @@ class ParquetIncrementalSink:
         with open(sp) as f:
             return T.StructType.fromJson(json.load(f))
 
-    def _is_partitioned(self, table: str) -> bool:
-        dp = self._data_path(table)
-        return dp is not None and any(
-            "=" in d for d in os.listdir(dp) if os.path.isdir(os.path.join(dp, d))
-        )
-
-    def _read_raw(self, table: str) -> DataFrame:
-        """Read the current snapshot with partition values kept as RAW
-        strings ("01" must not become 1 — align_to_schema casts per the
-        stored schema). The inference conf is session-global, so
-        save/restore it around the (eager) schema+partition discovery
-        instead of mutating the caller's session permanently."""
-        return self._read_raw_at(self._data_path(table))
-
-    def _read_raw_at(self, dp: str) -> DataFrame:
-        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "false")
-        try:
-            return self.spark.read.option("basePath", dp).parquet(dp)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-
     def read(
         self,
         table: str,
@@ -415,86 +360,82 @@ class ParquetIncrementalSink:
         version: int | None = None,
     ) -> DataFrame | None:
         """Snapshot-isolated read: resolve the version pointer once and
-        scan that immutable snapshot. Never mutates the table (safe for
-        concurrent read-only consumers).
+        scan that immutable snapshot with the stored schema (no
+        inference job; hive partition values are typed as stored, so a
+        string key "01" never becomes 1), aligned to ``schema`` when
+        given. Never mutates the table (safe for concurrent read-only
+        consumers).
 
         ``version`` time-travels to a specific retained snapshot
         (the pointer keeps the last ``_KEEP_PREVIOUS_VERSIONS`` behind
         the current one alive). Raises ValueError for a version that
         was never committed or has been GC'd — silently reading the
         wrong snapshot is worse than failing."""
-        if self._data_path(table) is None:
+        cur = self._current_version(table)
+        if cur is None:
             return None
-        if version is not None:
-            cur = self._current_version(table)
-            vd = self._version_dir(table, version)
-            if cur is None or version > cur or not os.path.isdir(vd):
-                raise ValueError(
-                    f"{table}: snapshot v{version} not available "
-                    f"(current={cur}, retention={_KEEP_PREVIOUS_VERSIONS} back)"
-                )
-            df = self._read_raw_at(vd)
-        else:
-            df = self._read_raw(table)
-        schema = schema if schema is not None else self._stored_schema(table)
+        dp = self._version_dir(table, cur if version is None else version)
+        if version is not None and (version > cur or not os.path.isdir(dp)):
+            raise ValueError(
+                f"{table}: snapshot v{version} not available "
+                f"(current={cur}, retention={_KEEP_PREVIOUS_VERSIONS} back)"
+            )
+        stored = self._stored_schema(table)
+        reader = self.spark.read if stored is None else self.spark.read.schema(stored)
+        df = reader.option("basePath", dp).parquet(dp)
+        schema = schema if schema is not None else stored
         return align_to_schema(df, schema) if schema is not None else df
 
-    # --- snapshot writers -------------------------------------------------
+    # --- the snapshot writer ----------------------------------------------
 
-    def _atomic_write(self, df: DataFrame, table: str, schema: T.StructType | None = None) -> None:
-        stage, n = self._begin_write(table)
-        df.write.mode("overwrite").parquet(stage)
-        if schema is not None:
-            self._store_schema(table, schema)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
-
-    def _atomic_write_partitioned(
+    def _write_snapshot(
         self,
         df: DataFrame,
         table: str,
-        schema: T.StructType,
-        partition_cols: tuple[str, ...],
-    ) -> None:
+        schema: T.StructType | None = None,
+        partition_cols: Sequence[str] = (),
+        link: str | None = None,
+        meta: dict | None = None,
+    ) -> int:
+        """Make ``df`` the next snapshot of ``table``; return its version.
+
+        ``link`` says which files of the current snapshot carry forward
+        as hard links: None (``df`` is the whole table), ``"all"``
+        (``df`` is appended) or ``"untouched"`` (every partition ``df``
+        did not produce; ``df`` replaces the ones it writes). The
+        table's schema (``schema``, else ``df.schema``) is stored for
+        :meth:`read`; ``meta`` adds commit metadata to what the pointer
+        already carries."""
         stage, n = self._begin_write(table)
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
-        self._store_schema(table, schema)
+        writer = df.write.mode("append")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(stage)
+        if link is not None and n > 1:
+            _link_tree(
+                self._version_dir(table, n - 1), stage, skip_written=link == "untouched"
+            )
+        self._store_schema(table, schema if schema is not None else df.schema)
         self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
-
-    @staticmethod
-    def _leaf_partition_dirs(root: str, depth: int) -> list[str]:
-        """Relative paths of hive partition leaf dirs (``k=v/.../k=v``)."""
-        leaves: list[str] = []
-
-        def walk(d: str, rel: str, level: int) -> None:
-            for name in os.listdir(d):
-                sub = os.path.join(d, name)
-                if not (os.path.isdir(sub) and "=" in name):
-                    continue
-                r = os.path.join(rel, name) if rel else name
-                if level + 1 == depth:
-                    leaves.append(r)
-                else:
-                    walk(sub, r, level + 1)
-
-        walk(root, "", 0)
-        return leaves
+        self._commit_version(table, n, meta={**self._carry_meta(table), **(meta or {})})
+        return n
 
     def _layout_partition_cols(self, table: str) -> list[str]:
-        """Partition columns of an existing hive layout, read from the
-        first leaf dir's ``k=v`` path components."""
+        """Partition columns of the current snapshot's hive layout, read
+        from the first leaf dir's ``k=v`` path components ([] for a flat
+        or missing table)."""
         cols: list[str] = []
         d = self._data_path(table)
-        while True:
+        while d is not None:
             subs = [
                 n for n in os.listdir(d)
                 if "=" in n and os.path.isdir(os.path.join(d, n))
             ]
             if not subs:
-                return cols
+                break
             cols.append(subs[0].split("=", 1)[0])
             d = os.path.join(d, subs[0])
+        return cols
 
     def append_aligned(self, new_rows: DataFrame, table: str, schema: T.StructType) -> None:
         """S8: append with target-schema alignment (reorder, pad
@@ -502,25 +443,17 @@ class ParquetIncrementalSink:
         App/etl/overall_etl.py:12-43.
 
         The append lands in a NEW snapshot (existing files hard-linked,
-        new files appended beside them, pointer flipped once) so
+        new files written beside them, pointer flipped once) so
         concurrent readers never see a half-appended table.
 
         Appending into a partition-scoped table (see
         :meth:`delete_overlap_append`) follows the existing hive
         layout — a flat append there would mix layouts and break
         reads."""
-        aligned = align_to_schema(new_rows, schema)
-        partitioned = self._is_partitioned(table)
-        stage, n = self._begin_write(table)
-        if n > 1:
-            _link_tree(self._version_dir(table, n - 1), stage)
-        writer = aligned.write.mode("append")
-        if partitioned:
-            writer = writer.partitionBy(*self._layout_partition_cols(table))
-        writer.parquet(stage)
-        self._store_schema(table, schema)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
+        self._write_snapshot(
+            align_to_schema(new_rows, schema), table, schema,
+            self._layout_partition_cols(table), link="all",
+        )
 
     def delete_overlap_append(
         self,
@@ -545,6 +478,8 @@ class ParquetIncrementalSink:
         partitions are hard-links of the previous snapshot's files. At
         100 TB this bounds each load's write amplification to the
         touched (LINE, Server) partitions instead of the whole table.
+        A flat table (first written by :meth:`append_aligned`) is
+        rewritten whole into the partitioned layout once.
 
         Hive layout folds NULL and empty-string key values into the
         same ``__HIVE_DEFAULT_PARTITION__`` directory, which would
@@ -559,7 +494,7 @@ class ParquetIncrementalSink:
         if not keys:
             # Empty batch: the DELETE scope is the batch's keys — no
             # keys, nothing to delete or append. (Also keeps an empty
-            # FIRST load from creating a rowless, schema-less dir.)
+            # FIRST load from creating a rowless table.)
             return
         for row in keys:
             for k in partition_cols:
@@ -569,100 +504,43 @@ class ParquetIncrementalSink:
                         f"NULL/empty value in the batch — hive layout cannot "
                         f"round-trip it (folds into __HIVE_DEFAULT_PARTITION__)"
                     )
-        if self._data_path(table) is None:
-            self._atomic_write_partitioned(new_aligned, table, schema, partition_cols)
-            return
-        if not self._is_partitioned(table):
-            # One-time migration of a legacy unpartitioned table:
-            # full rewrite into the partitioned layout, then future
-            # loads are partition-scoped. Migrate the files under the
-            # version pointer FIRST — the read below is lazy, and the
-            # snapshot write that consumes it must not race the move.
-            self._migrate_legacy(table)
-            legacy = self.read(table, schema)
-            self._delete_overlap_full(
-                legacy, new_aligned, table, schema, ts_col, watermark,
-                partition_cols, pad_seconds,
-            )
-            return
-        cutoff = watermark - timedelta(seconds=pad_seconds)
-        # Partition cols read back as RAW strings (_read_raw); cast to
-        # the schema type BEFORE comparing so non-string keys match
-        # their hive encodings (str(True)='True' vs dir 'k=true',
-        # str(1e-07) vs '1.0E-7' — a string compare would silently
-        # match nothing and the new snapshot would drop pre-cutoff
-        # survivors).
-        types = {f.name: f.dataType for f in schema.fields}
-        raw = self._read_raw(table)
-        for k in partition_cols:
-            raw = raw.withColumn(k, F.col(k).cast(types[k]))
-        pred = None
-        for row in keys:
-            kc = None
-            for k in partition_cols:
-                kc_part = F.col(k).eqNullSafe(F.lit(row[k]).cast(types[k]))
-                kc = kc_part if kc is None else kc & kc_part
-            pred = kc if pred is None else pred | kc
-        # coalesce: `ts >= cutoff` is NULL for NULL-ts rows and a bare
-        # `~overlap` filter would silently drop them every load; the
-        # reference DELETE (`ts >= cutoff`) keeps NULL-ts rows, so must we.
-        overlap = F.coalesce(F.col(ts_col) >= F.lit(cutoff), F.lit(False))
-        scoped = raw.filter(pred)  # partition-pruned scan (string keys cast is a no-op)
-        survivors = align_to_schema(scoped.filter(~overlap), schema)
-        staging = os.path.join(self._path(table), ".stage-" + uuid.uuid4().hex[:8])
-        survivors.unionByName(new_aligned).write.mode("overwrite").partitionBy(
-            *partition_cols
-        ).parquet(staging)
-        # Assemble the next snapshot IN A PRIVATE STAGE DIR: hard-link
-        # every untouched partition from the current one, move the
-        # freshly written touched partitions in, then claim v{n} with
-        # one atomic rename and flip the pointer once.
-        stage, n = self._begin_write(table)
-        touched = set(self._leaf_partition_dirs(staging, len(partition_cols)))
-        _link_tree(self._version_dir(table, n - 1), stage, skip_rels=touched)
-        for rel in touched:
-            dst = os.path.join(stage, rel)
-            if os.path.exists(dst):
-                shutil.rmtree(dst, ignore_errors=True)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(os.path.join(staging, rel), dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
+        existing = self.read(table, schema)
+        link = None
+        if existing is not None:
+            # Cast each key literal to the column's schema type: a Python
+            # float is a double literal, and comparing it with a float
+            # column widens the column instead of matching the value.
+            types = {f.name: f.dataType for f in schema.fields}
+            in_batch = reduce(operator.or_, [
+                reduce(operator.and_, [
+                    F.col(k).eqNullSafe(F.lit(row[k]).cast(types[k]))
+                    for k in partition_cols
+                ])
+                for row in keys
+            ])
+            cutoff = watermark - timedelta(seconds=pad_seconds)
+            # coalesce: `ts >= cutoff` is NULL for NULL-ts rows and a bare
+            # `~overlap` filter would silently drop them every load; the
+            # reference DELETE (`ts >= cutoff`) keeps NULL-ts rows, so must we.
+            overlap = F.coalesce(F.col(ts_col) >= F.lit(cutoff), F.lit(False))
+            if self._layout_partition_cols(table):
+                existing = existing.filter(in_batch)  # partition-pruned scan
+                link = "untouched"
+            new_aligned = existing.filter(~(in_batch & overlap)).unionByName(new_aligned)
+        self._write_snapshot(new_aligned, table, schema, partition_cols, link=link)
 
-    def _delete_overlap_full(
-        self,
-        existing: DataFrame,
-        new_aligned: DataFrame,
-        table: str,
-        schema: T.StructType,
-        ts_col: str,
-        watermark: datetime,
-        partition_cols: tuple[str, ...],
-        pad_seconds: float,
+    def _replace_keys(
+        self, new_rows: DataFrame, table: str, schema: T.StructType, keys: list[str]
     ) -> None:
-        """Legacy full-rewrite path (also the partitioned-layout
-        migration): same semantics, whole-snapshot rewrite."""
-        cutoff = watermark - timedelta(seconds=pad_seconds)
-        keys = new_aligned.select(*partition_cols).distinct()
-        overlap = F.coalesce(F.col(ts_col) >= F.lit(cutoff), F.lit(False))
-        in_batch = None
-        for k in partition_cols:
-            c = F.col(f"__k_{k}").isNotNull()
-            in_batch = c if in_batch is None else (in_batch & c)
-        tagged = existing.join(
-            F.broadcast(
-                keys.select(*[F.col(k).alias(f"__k_{k}") for k in partition_cols])
-            ),
-            [existing[k].eqNullSafe(F.col(f"__k_{k}")) for k in partition_cols],
-            "left",
-        )
-        survivors = tagged.filter(~(in_batch & overlap)).select(
-            *[f.name for f in schema.fields]
-        )
-        self._atomic_write_partitioned(
-            survivors.unionByName(new_aligned), table, schema, partition_cols
-        )
+        """Anti-join rewrite shared by the two key merges: stored rows
+        whose key is absent from the batch are kept, everything else
+        comes from the batch (deduplicated on the key)."""
+        new_aligned = align_to_schema(new_rows, schema).dropDuplicates(keys)
+        existing = self.read(table, schema)
+        if existing is not None:
+            keep = existing.join(new_aligned.select(*keys), keys, "left_anti")
+            new_aligned = keep.unionByName(new_aligned)
+        self._write_snapshot(new_aligned, table, schema)
 
     def merge_dedup_overwrite(
         self,
@@ -675,14 +553,9 @@ class ParquetIncrementalSink:
         are kept; everything else comes from the batch (reference
         R:556-585 anti-join + rewrite). ``key`` may be composite —
         (BRANDCODE, Server) when several sites share the master table."""
-        keys = [key] if isinstance(key, str) else list(key)
-        new_aligned = align_to_schema(new_rows, schema).dropDuplicates(keys)
-        existing = self.read(table, schema)
-        if existing is None:
-            self._atomic_write(new_aligned, table, schema)
-            return
-        keep = existing.join(new_aligned.select(*keys), keys, "left_anti")
-        self._atomic_write(keep.unionByName(new_aligned), table, schema)
+        self._replace_keys(
+            new_rows, table, schema, [key] if isinstance(key, str) else list(key)
+        )
 
     def upsert_script_data(
         self,
@@ -694,13 +567,7 @@ class ParquetIncrementalSink:
         """S11: insert-or-replace state rows per (System, Server)
         (reference R:236-282 insert, :502-546 update). Delta
         equivalent: MERGE on the key."""
-        new_aligned = align_to_schema(new_rows, schema).dropDuplicates(list(keys))
-        existing = self.read(table, schema)
-        if existing is None:
-            self._atomic_write(new_aligned, table, schema)
-            return
-        keep = existing.join(new_aligned.select(*keys), list(keys), "left_anti")
-        self._atomic_write(keep.unionByName(new_aligned), table, schema)
+        self._replace_keys(new_rows, table, schema, list(keys))
 
     def maintain_rollup(
         self,
@@ -781,7 +648,7 @@ class ParquetIncrementalSink:
             merged = keep.unionByName(recomputed)
         if rollup_schema is not None:
             merged = align_to_schema(merged, rollup_schema)
-        self._atomic_write(merged, rollup_table, rollup_schema)
+        self._write_snapshot(merged, rollup_table, rollup_schema)
 
     def read_dim_as_of(self, table: str, ts: datetime) -> DataFrame | None:
         """Point-in-time read over an SCD2 dimension (``FOR SYSTEM_TIME
@@ -845,7 +712,7 @@ class ParquetIncrementalSink:
                 F.lit(None).cast("timestamp").alias("valid_to"),
                 F.lit(True).alias("is_current"),
             )
-            self._atomic_write(out, table)
+            self._write_snapshot(out, table)
             return
         history = existing.filter(~F.col("is_current"))
         # presence markers, NOT key-null checks: the join is eqNullSafe,
@@ -888,7 +755,7 @@ class ParquetIncrementalSink:
             .unionByName(closed.select(*cols))
             .unionByName(inserted.select(*cols))
         )
-        self._atomic_write(out, table)
+        self._write_snapshot(out, table)
 
     def changes_between(
         self, table: str, v_from: int, v_to: int, key_cols: tuple[str, ...]
@@ -951,32 +818,12 @@ class ParquetIncrementalSink:
 
         Returns the new version number. Concurrent readers keep their
         snapshot (old versions retained per the GC policy)."""
-        # Migrate a legacy layout under the version pointer BEFORE the
-        # (lazy) read: _begin_write's migration renames the data
-        # files, which would invalidate a file index built over the
-        # pre-migration paths (same ordering hazard delete_overlap_append
-        # documents).
-        self._migrate_legacy(table)
         df = self.read(table)
         if df is None:
             raise ValueError(f"{table}: nothing to compact")
-        schema = self._stored_schema(table)
-        pcols = self._layout_partition_cols(table) if self._is_partitioned(table) else []
-        stage, n = self._begin_write(table)
-        if pcols:
-            (
-                df.repartition(target_files, *[F.col(c) for c in pcols])
-                .write.mode("overwrite")
-                .partitionBy(*pcols)
-                .parquet(stage)
-            )
-        else:
-            df.coalesce(target_files).write.mode("overwrite").parquet(stage)
-        if schema is not None:
-            self._store_schema(table, schema)
-        self._publish(table, stage, n)
-        self._commit_version(table, n, meta=self._carry_meta(table))
-        return n
+        pcols = self._layout_partition_cols(table)
+        df = df.repartition(target_files, *pcols) if pcols else df.coalesce(target_files)
+        return self._write_snapshot(df, table, self._stored_schema(table), pcols)
 
     def _carry_meta(self, table: str) -> dict:
         """Commit metadata that must survive unrelated commits (e.g.
@@ -1017,22 +864,11 @@ class ParquetIncrementalSink:
         def append_batch(batch_df: DataFrame, batch_id: int) -> None:
             if batch_id <= self.last_stream_batch(table, query_id):
                 return  # replay of a committed batch
-            aligned = align_to_schema(batch_df, schema)
-            partitioned = self._is_partitioned(table)
-            stage, n = self._begin_write(table)
-            if n > 1:
-                _link_tree(self._version_dir(table, n - 1), stage)
-            if partitioned:
-                # follow the existing hive layout — a flat append would
-                # mix leaf depths and break partition discovery
-                pcols = self._layout_partition_cols(table)
-                aligned.write.mode("append").partitionBy(*pcols).parquet(stage)
-            else:
-                aligned.write.mode("append").parquet(stage)
-            self._store_schema(table, schema)
-            self._publish(table, stage, n)
-            meta = self._carry_meta(table)
-            meta[f"stream_batch:{query_id}"] = batch_id
-            self._commit_version(table, n, meta=meta)
+            # follows the existing hive layout, like append_aligned
+            self._write_snapshot(
+                align_to_schema(batch_df, schema), table, schema,
+                self._layout_partition_cols(table), link="all",
+                meta={f"stream_batch:{query_id}": batch_id},
+            )
 
         return append_batch

@@ -61,7 +61,7 @@ def _pin_timestamp_confs(spark: SparkSession) -> None:
     the ``spark.read`` call would hand back a frame whose execution
     behaves differently from its analyzed schema. Callers that need
     local-timezone rendering should scope their OWN conf change around
-    that work (as the sink's ``_read_raw`` does for inference).
+    that work.
     """
     for key, want in _PINNED_CONFS.items():
         if spark.conf.get(key, None) != want:

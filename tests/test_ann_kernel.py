@@ -93,6 +93,36 @@ def test_kernel_handles_empty_queries(spark, corpus):
     ]
 
 
+def test_pq_kernel_skips_out_of_range_cell():
+    # one assignment row whose cell is past the quantizer (cell ==
+    # n_cells): the kernel must neither raise nor return that row
+    import pandas as pd
+
+    rng = np.random.default_rng(0)
+    dim, n_cells, m, n_codes, nb = 8, 4, 2, 4, 6
+    cents = rng.normal(size=(n_cells, dim))
+    books = [rng.normal(size=(n_codes, dim // m)) for _ in range(m)]
+    q_ids = np.array([100, 101])
+    qmat = rng.normal(size=(len(q_ids), dim))
+    pdf = pd.DataFrame(
+        {
+            "__id": np.arange(nb),
+            "unit_vec": [list(v) for v in rng.normal(size=(nb, dim))],
+            "cell": [0, 1, 2, 3, 0, n_cells],
+            "codes": [[0, 1]] * nb,
+        }
+    )
+    kern, _ = SIM._topk_candidate_kernel(
+        q_ids, qmat, k=nb, qid_type="long", nid_type="long",
+        cell_lut=np.ones((n_cells, len(q_ids)), dtype=bool), pq=(cents, books),
+    )
+    out = pd.concat(list(kern(iter([pdf]))))
+    found = out[out["kind"] == 0]
+    assert len(found) == (nb - 1) * len(q_ids)
+    assert nb - 1 not in set(found["neighbor_id"])
+    assert (out[out["kind"] == 1]["n"] == nb - 1).all()
+
+
 def _semantic_dedup_reference(corpus_rows, n_cells, n_assign, threshold):
     """Independent numpy transcription of the semantic_dedup contract:
     id-ordered <=512 sample, Lloyd quantizer, top-n_assign cell route,

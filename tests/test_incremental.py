@@ -195,20 +195,22 @@ def test_untouched_partitions_not_rewritten(spark, tmp_path):
 
 
 def test_legacy_unpartitioned_table_migrates(spark, tmp_path):
-    # A table written before the partitioned layout (flat parquet dir)
-    # migrates in place on its first partition-scoped load.
+    # A flat table (first written by append_aligned) is rewritten whole
+    # into the partitioned layout on its first partition-scoped load.
     root = str(tmp_path / "t7")
     sink = ParquetIncrementalSink(spark, root)
     wm = T0 - timedelta(minutes=30)
-    legacy = _rows(spark, [("a", "L1", -120, 1.0, "S"), ("b", "L2", 0, 2.0, "S")])
+    flat = _rows(spark, [("a", "L1", -120, 1.0, "S"), ("b", "L2", 0, 2.0, "S")])
     import os
 
-    legacy.write.parquet(os.path.join(root, "co"))  # flat legacy layout
+    sink.append_aligned(flat, "co", CO_SCHEMA)
+    assert sink._layout_partition_cols("co") == []
     batch = _rows(spark, [("a2", "L1", 0, 9.0, "S")])
     sink.delete_overlap_append(batch, "co", CO_SCHEMA, "CO_StartTime", watermark=wm)
     got = _collect(sink, "co")
     assert got == sorted([("a", "L1", 1.0), ("a2", "L1", 9.0), ("b", "L2", 2.0)])
     assert os.path.isdir(os.path.join(sink._data_path("co"), "LINE=L1", "Server=S"))
+    assert os.path.isdir(os.path.join(sink._data_path("co"), "LINE=L2", "Server=S"))
 
 
 def test_append_into_partitioned_table_follows_layout(spark, tmp_path):
@@ -274,6 +276,22 @@ def test_delete_overlap_nonstring_partition_key(spark, tmp_path):
     got = sorted((r.id, r.flag, r.n) for r in sink.read("t").collect())
     # 'old' is pre-cutoff in the touched (true,7) partition -> survives
     assert got == [("keep", False, 8), ("new", True, 7), ("old", True, 7)]
+
+
+def test_delete_overlap_string_key_keeps_leading_zero(spark, tmp_path):
+    # A string partition key "01" is stored as dir 'LINE=01'; reading it
+    # back must not infer an int (which would turn it into 1 and make
+    # the second load's scoped delete match nothing).
+    sink = ParquetIncrementalSink(spark, str(tmp_path / "t10z"))
+    wm = T0 - timedelta(minutes=30)
+    seed = _rows(spark, [("old", "01", -120, 1.0, "S"), ("gone", "01", 0, 2.0, "S")])
+    sink.delete_overlap_append(seed, "co", CO_SCHEMA, "CO_StartTime", watermark=wm - timedelta(days=1))
+    batch = _rows(spark, [("new", "01", 5, 3.0, "S")])
+    sink.delete_overlap_append(batch, "co", CO_SCHEMA, "CO_StartTime", watermark=wm)
+    df = sink.read("co")
+    assert dict((f.name, f.dataType) for f in df.schema.fields)["LINE"] == T.StringType()
+    # 'gone' is at/after the cutoff in the touched partition -> replaced
+    assert _collect(sink, "co") == [("new", "01", 3.0), ("old", "01", 1.0)]
 
 
 def test_crashed_writer_leftovers_are_invisible_and_gcd(spark, tmp_path):
@@ -525,22 +543,6 @@ def test_foreach_batch_appender_real_stream(spark, tmp_path):
         shutil.rmtree(src, ignore_errors=True)
 
 
-def test_compact_legacy_layout(spark, tmp_path):
-    # compact() must migrate a legacy flat layout BEFORE building its
-    # (lazy) read plan — migrating after would rename the input files
-    # out from under the scan.
-    import os
-
-    root = str(tmp_path / "leg")
-    sink = ParquetIncrementalSink(spark, root)
-    legacy = _rows(
-        spark, [("a", "L1", 0, 1.0, "S"), ("b", "L2", 5, 2.0, "S")]
-    )
-    legacy.write.parquet(os.path.join(root, "co"))  # flat legacy layout
-    sink.compact("co", target_files=1)
-    assert _collect(sink, "co") == sorted([("a", "L1", 1.0), ("b", "L2", 2.0)])
-
-
 def test_foreach_batch_appender_partitioned_layout(spark, tmp_path):
     # Streaming appends into a hive-partitioned table must follow the
     # existing layout — flat files at the snapshot root would break
@@ -551,7 +553,7 @@ def test_foreach_batch_appender_partitioned_layout(spark, tmp_path):
     wm = T0 - timedelta(minutes=30)
     seed = _rows(spark, [("a", "L1", 0, 1.0, "S")])
     sink.delete_overlap_append(seed, "co", CO_SCHEMA, "CO_StartTime", watermark=wm)
-    assert sink._is_partitioned("co")
+    assert sink._layout_partition_cols("co") == ["LINE", "Server"]
     append = sink.foreach_batch_appender("co", CO_SCHEMA, query_id="qp")
     append(_rows(spark, [("b", "L2", 5, 2.0, "S")]), 0)
     got = _collect(sink, "co")
@@ -852,9 +854,9 @@ def test_changes_between_snapshots(spark, tmp_path):
     one full-outer join of two retained immutable snapshots."""
     sink = ParquetIncrementalSink(spark, str(tmp_path))
     s = "k long, v string"
-    sink._atomic_write(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], s), "t")
+    sink._write_snapshot(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], s), "t")
     v1 = sink._current_version("t")
-    sink._atomic_write(spark.createDataFrame([(2, "B"), (3, "c"), (4, "d")], s), "t")
+    sink._write_snapshot(spark.createDataFrame([(2, "B"), (3, "c"), (4, "d")], s), "t")
     v2 = sink._current_version("t")
     ch = {r.k: (r.change_type, r.before, r.after)
           for r in sink.changes_between("t", v1, v2, ("k",)).collect()}

@@ -1,0 +1,96 @@
+"""Session helpers: fast_planning's conf scoping under overlapping
+entrants, and integer env knobs that fall back on malformed values."""
+
+from types import SimpleNamespace
+
+from fhc_rco_etl_scalable_spark import session as S
+from fhc_rco_etl_scalable_spark.operators import similarity as SIM
+
+KEY = "spark.sql.constraintPropagation.enabled"
+
+
+def test_fast_planning_overlapping_scopes_restore_once(spark):
+    # Two site threads on one session: A enters, B enters, A exits,
+    # B exits. B's scope must still run with the conf off after A
+    # leaves, and the session must end where it started.
+    df = spark.range(1)
+    start = spark.conf.get(KEY, None)
+    a, b = S.fast_planning(df), S.fast_planning(df)
+    a.__enter__()
+    b.__enter__()
+    assert spark.conf.get(KEY, None) == "false"
+    a.__exit__(None, None, None)
+    assert spark.conf.get(KEY, None) == "false"
+    b.__exit__(None, None, None)
+    assert spark.conf.get(KEY, None) == start
+
+
+def test_fast_planning_threads_never_see_conf_restored_early(spark):
+    # More threads than cores enter and leave overlapping scopes on one
+    # session; inside any scope the conf must read "false", and the
+    # session must end where it started.
+    import sys
+    import threading
+
+    df = spark.range(1)
+    start = spark.conf.get(KEY, None)
+    bad = []
+
+    def worker():
+        for _ in range(10):
+            with S.fast_planning(df):
+                if spark.conf.get(KEY, None) != "false":
+                    bad.append(1)
+
+    threads = [threading.Thread(target=worker) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not bad
+    assert spark.conf.get(KEY, None) == start
+
+
+class _Builder:
+    """Stands in for SparkSession.builder: records the configs."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def master(self, _):
+        return self
+
+    def appName(self, _):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(setLogLevel=lambda _: None), conf=self.conf
+        )
+
+
+def test_malformed_shuffle_env_falls_back(monkeypatch):
+    monkeypatch.setattr(S, "SparkSession", SimpleNamespace(builder=_Builder()))
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "2MiB")
+    assert S.get_spark().conf["spark.sql.shuffle.partitions"] == "32"
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "12")
+    assert S.get_spark().conf["spark.sql.shuffle.partitions"] == "12"
+
+
+def test_malformed_ann_kernel_env_falls_back(monkeypatch, spark):
+    # a tiny frame sits below the 2 MiB default, so the join form wins
+    tiny = spark.range(3)
+    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", "2MiB")
+    assert SIM._use_topk_kernel(tiny) is False
+    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", "0")
+    assert SIM._use_topk_kernel(tiny) is True
