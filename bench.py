@@ -236,17 +236,7 @@ def main() -> None:
         # on whichever query runs late (observed: a 0.4 s query
         # spiking to 31 s cold). Queries are independent — release
         # eagerly between them so timings measure the query, not the
-        # backlog. EXCEPT the session-lifetime input-scaffolding
-        # checkpoints (harness_queries.PINNED_RDD_IDS): unpersisting a
-        # locally-checkpointed RDD strips its storage level, and its
-        # truncated lineage cannot recompute — the next consumer dies
-        # in Spark's local-checkpoint storage-level assertion.
-        try:
-            from fhc_rco_etl_scalable_spark.plans.harness_queries import (
-                PINNED_RDD_IDS,
-            )
-        except Exception:
-            PINNED_RDD_IDS = set()
+        # backlog.
         # Drop every DataFrame-cache entry FIRST (r15, measurement
         # honesty). At HEAD the pipeline fan-out barriers are
         # localCheckpoint (the persist() experiment was reverted in
@@ -257,15 +247,13 @@ def main() -> None:
         # sample's materialized cache, and the min would time a
         # partially-cached run instead of a from-parquet computation.
         # clearCache() touches only the CacheManager (DataFrame
-        # persists); the pinned scaffolding below is raw-RDD
-        # localCheckpoint state, unaffected.
+        # persists); the loop below releases the raw-RDD
+        # localCheckpoint state.
         try:
             spark.catalog.clearCache()
         except Exception:
             pass
         for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            if rdd.id() in PINNED_RDD_IDS:
-                continue
             rdd.unpersist(False)
 
     # Mid-run interference watch: loadavg BETWEEN queries still carries

@@ -1230,6 +1230,8 @@ def _pq_query(
             "query_id", "neighbor_id", "unit_vec"
         )
         return _exact_rerank(survivors, q_native, k)
+    # the fallback re-scans the assignments: release the checkpoint
+    reduced._jdf.queryExecution().analyzed().rdd().unpersist(False)
     return _pq_query_refine(
         assignments, cents, books, queries, id_col, vec_col, k, n_probe, refine
     )

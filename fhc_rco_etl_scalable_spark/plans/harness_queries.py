@@ -15,13 +15,16 @@ names + order-insensitive value hash):
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import os
 from collections.abc import Callable
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.parquet import load_table
+from ..sources.parquet import _path_fingerprint, load_table
 from ..operators.asof import asof_join
 from ..operators.interval_join import interval_overlap_join
 from ..operators.sessionize import rco_session_trigger, sessionize
@@ -811,9 +814,8 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         )
 
     try:
-        with _clamped_shuffle(spark), _staged_file_stream(
-            docs, n_batches, ["doc_id"], "sg-incded", cache_key=sf_dir
-        ) as src:
+        with _clamped_shuffle(spark):
+            src = _staged_file_stream(docs, n_batches, ["doc_id"], "sg-incded", sf_dir)
             stream = (
                 spark.readStream.schema("doc_id long, text string")
                 .option("maxFilesPerTrigger", 1)
@@ -1909,42 +1911,42 @@ def q_asof_preferenced(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: Session cache of the flattened downtime log, keyed like
-#: _INPUTS_CACHE. The derivation is a pure function of sf_dir and is
-#: input SCAFFOLDING (production reads this table from the lake);
-#: without the barrier every consumer — and every localCheckpoint
-#: inside mes_etl/gantt_analysis — re-optimizes and re-executes the
-#: same derivation subtree at plan-construction time.
-_DOWNTIME_LOG_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _scaffold_dir(sf_dir: str) -> str:
+    """This application's scaffold directory for the fixture at
+    ``sf_dir``, created on first use.
 
-#: RDD ids of the session-lifetime scaffolding checkpoints (the frames
-#: held by _DOWNTIME_LOG_CACHE/_INPUTS_CACHE). Harness runners that
-#: eagerly unpersist between independent queries (bench.py's
-#: release_checkpoints) MUST skip these: unpersisting a
-#: locally-checkpointed RDD strips its storage level and truncated
-#: lineage cannot recompute — the next consumer dies with Spark's
-#: "storage level is not appropriate for local checkpointing"
-#: assertion (found the hard way: bench crashed on the first staged
-#: write after the flattening landed, while the gate — which never
-#: unpersists — stayed green).
-PINNED_RDD_IDS: set[int] = set()
+    Harness scaffolding is input that production reads from the lake:
+    the downtime log derived from events, its flagged variants, the
+    mes_etl outputs gantt consumes, and the streaming entries' staged
+    sources. Analysis runs eagerly while a DataFrame is built, so a
+    derived input left as a plan re-optimizes its whole derivation
+    subtree inside every consumer; a parquet table gives each consumer
+    a flat scan and needs no pinned RDD. The directory lives under
+    ``SparkFiles.getRootDirectory()``, which Spark creates per
+    application and deletes at ``stop()``, so scaffolding lasts one
+    application and is never shared across applications. It is keyed
+    by the stat fingerprint of the fixture's ``events.parquet``, so a
+    rewritten fixture gets fresh scaffolding."""
+    from pyspark import SparkFiles
+
+    fp = _path_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    key = hashlib.sha1(repr(fp).encode()).hexdigest()[:16]
+    root = os.path.join(SparkFiles.getRootDirectory(), "harness-scaffold", key)
+    os.makedirs(root, exist_ok=True)
+    return root
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Lazy-localCheckpoint ``df`` for the session's lifetime and
-    record the checkpointed RDD's id (the LogicalRDD's backing RDD —
-    verified identical to the id in the persistent-RDD map)."""
-    out = df.localCheckpoint(eager=False)
-    try:
-        PINNED_RDD_IDS.add(out._jdf.queryExecution().analyzed().rdd().id())
-    except Exception as exc:  # pragma: no cover - Spark-internals drift
-        # A silently failed pin would reintroduce the exact bench
-        # crash the pin prevents (release_checkpoints unpersisting the
-        # scaffolding) — warn so an eventual crash is attributable.
-        import sys
-
-        print(f"WARN _pin: could not record pinned RDD id: {exc}", file=sys.stderr)
-    return out
+def _scaffold(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The scaffold table ``name``: written once per application from
+    ``build()`` (a table counts as written once its ``_SUCCESS`` file
+    exists), then read back through ``load_table``."""
+    root = _scaffold_dir(sf_dir)
+    path = os.path.join(root, f"{name}.parquet")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        build().write.mode("overwrite").parquet(path)
+    return load_table(spark, name, root)
 
 
 def harness_downtime_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1953,12 +1955,10 @@ def harness_downtime_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised — changeovers (signup), failures (error), blocked/starved
     propagation (view), excluded PR-Out stretches, brandcoded rows,
     constraint + non-constraint machines."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DOWNTIME_LOG_CACHE.get(key)
-    if hit is None:
-        hit = _pin(downtime_log_from_events(load_table(spark, "events", sf_dir)))
-        _DOWNTIME_LOG_CACHE[key] = hit
-    return hit
+    return _scaffold(
+        spark, sf_dir, "harness_downtime_log",
+        lambda: downtime_log_from_events(load_table(spark, "events", sf_dir)),
+    )
 
 
 def downtime_log_from_events(ev: DataFrame) -> DataFrame:
@@ -2400,56 +2400,25 @@ def q_co_event_log_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HARNESS_BASE = _CO_AGG_HARNESS_ORACLE.split(",\nco AS (")[0]
 
 
-#: Plan cache for the fixture-to-schema view layer: the harness input
-#: frames are PURE LAZY PLANS (no checkpoint/persist anywhere beneath —
-#: nothing is materialized, every consumer still executes the full
-#: pipeline), so reusing the analyzed DataFrame objects across the many
-#: catalog entries that share them only avoids re-paying the Catalyst
-#: analysis of an identical subtree — the same plan reuse any engine's
-#: view layer provides.  Keyed by (application, sf_dir) so a fresh
-#: session or different fixture never sees stale objects.
-_INPUTS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _harness_inputs(spark: SparkSession, sf_dir: str):
     """downtime log -> (variants dict, raw downtime, line_config) for
-    harness entries.
-
-    The frames are LAZY-localCheckpointed on first build (per
-    (application, sf_dir), like the streaming harnesses'
-    ``_STAGED_SRC_CACHE``): the fixture derivation from events is a
-    pure function of sf_dir and is INPUT scaffolding — production
-    reads these tables from the lake, it does not re-derive them per
-    query. Without the barrier every entry (and every localCheckpoint
-    inside mes_etl/gantt) re-OPTIMIZES and re-executes the same deep
-    derivation subtree: measured ~10 s of pure driver-side Catalyst
-    per site_etl_full call at sf0.1, all of it plan-construction on
-    trees that a flat scan replaces."""
+    harness entries; the variants are lazy filters over one scaffold
+    table of the flagged log."""
     from ..operators.extract import downtime_variants, with_derived_flags
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _INPUTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # harness_downtime_log already returns a _pin()-ed cached frame;
-    # re-pinning would persist a duplicate session-lifetime copy.
     downtime = harness_downtime_log(spark, sf_dir)
-    line_config = _pin(
-        downtime.select("LINE")
-        .distinct()
-        .select(
+    line_config = _scaffold(
+        spark, sf_dir, "line_config",
+        lambda: downtime.select("LINE").distinct().select(
             F.col("LINE").alias("MDC_Line_Name"),
             F.lit("CM").alias("Constraint_Machine_String"),
-        )
+        ),
     )
-    variants = {
-        name: _pin(df)
-        for name, df in downtime_variants(
-            with_derived_flags(downtime, line_config)
-        ).items()
-    }
-    _INPUTS_CACHE[key] = (variants, downtime, line_config)
-    return _INPUTS_CACHE[key]
+    flagged = _scaffold(
+        spark, sf_dir, "flagged_downtime_log",
+        lambda: with_derived_flags(downtime, line_config),
+    )
+    return downtime_variants(flagged), downtime, line_config
 
 
 _RUNTIME_CTES = """,
@@ -2912,42 +2881,27 @@ FROM (SELECT * FROM nc_final UNION ALL SELECT * FROM c_final)
 )
 
 
-#: (applicationId, sf_dir) -> pinned (CO_Aggregated_Data,
-#: CO_Event_Log). The machine-level analysis CONSUMES two of the eight
-#: persisted output tables (reference machine_level.py reads the
-#: already-loaded CO aggregate, not the raw log) — so for the two
-#: gantt catalog entries these frames are input scaffolding, same
-#: status as _harness_inputs. The pre-r15 shape re-ran the whole
-#: mes_etl chain inside EACH entry (VERDICT r14 #4: the only top-10
-#: entry slower than r13); now each entry times gantt_analysis itself
-#: — windows, boundary-point recurrence, emission — over stable
-#: inputs. Pinned AND eagerly materialized: bench.py releases every
-#: non-pinned checkpoint between queries, and a lazy frame whose plan
-#: references mes_etl's inner localCheckpoints would crash on
-#: truncated lineage at the second entry.
-_MES_OUT_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _gantt_harness_outputs(spark: SparkSession, sf_dir: str):
+    """gantt_analysis over the scaffolded CO_Aggregated_Data and
+    CO_Event_Log: the machine-level analysis consumes two persisted
+    mes_etl outputs (reference machine_level.py reads the loaded CO
+    aggregate), so each gantt entry times gantt_analysis alone."""
     from ..operators.gantt import gantt_analysis
     from .rco_pipeline import SiteParams, mes_etl
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MES_OUT_CACHE.get(key)
     v, _, _ = _harness_inputs(spark, sf_dir)
-    if hit is None:
-        outs = mes_etl(
+
+    @functools.cache
+    def mes_out():
+        return mes_etl(
             v["line_dt"], v["line_dt_full"],
             SiteParams(server="HARNESS", run_first_stop_analysis=False),
         )
-        hit = (
-            _pin(outs["CO_Aggregated_Data"]),
-            _pin(outs["CO_Event_Log"]),
-        )
-        for df in hit:
-            df.count()
-        _MES_OUT_CACHE[key] = hit
-    co_agg, co_event_log = hit
+
+    co_agg, co_event_log = (
+        _scaffold(spark, sf_dir, name, lambda name=name: mes_out()[name])
+        for name in ("CO_Aggregated_Data", "CO_Event_Log")
+    )
     return gantt_analysis(
         co_agg=co_agg,
         co_event_log=co_event_log,
@@ -3117,104 +3071,56 @@ def _clamped_shuffle(spark: SparkSession, n: int = 4):
 
 
 
-#: Staged-source reuse across calls (VERDICT r7 #2, streaming fixed
-#: cost): the sliced files are a PURE FUNCTION of (input frame, slice
-#: count, ordering) — for a harness entry that means of (sf_dir) — so
-#: re-staging identical files on every execution is scaffold cost, not
-#: operator cost. Keyed by (applicationId, prefix, cache_key,
-#: n_batches); cleaned at interpreter exit.
-_STAGED_SRC_CACHE: dict[tuple, str] = {}
-
-
-def _cleanup_staged_srcs() -> None:
-    import shutil
-
-    for d in _STAGED_SRC_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED_SRC_CACHE.clear()
-
-
 def _staged_file_stream(
-    df,
-    n_batches: int,
-    order_cols: list[str],
-    prefix: str,
-    cache_key: str | None = None,
-):
-    """Context manager: stage ``df`` as ``n_batches`` event-time-ordered
-    parquet files for a deterministic availableNow file-source replay.
+    df: DataFrame, n_batches: int, order_cols: list[str], prefix: str, sf_dir: str
+) -> str:
+    """Stage ``df`` as ``n_batches`` event-time-ordered parquet files
+    for a deterministic availableNow file-source replay and return the
+    source directory. The files are staged once per application into
+    the scaffold directory of ``sf_dir``, keyed by ``(prefix,
+    n_batches)``: the input frame is deterministic per fixture.
 
     Global-order ntile gives each slice a disjoint range of
     ``order_cols`` (the sort is one task over a harness-sized frame —
     plumbing, not an engine operator), and ``os.utime`` stamps strictly
     increasing mtimes: the file source processes oldest-first, so the
     replay presents batches in event-time order even on filesystems
-    with coarse mtime granularity. Yields the source directory; all
-    streaming harnesses share this scaffold so the ordering
-    guarantee cannot drift between them.
-
-    ``cache_key`` (harness entries pass ``sf_dir``) keeps the staged
-    directory alive across calls in the same session and re-yields it
-    instead of re-staging — the input frame is deterministic per
-    sf_dir, so the files are identical by construction. Without a
-    cache_key the directory is staged fresh and deleted on exit.
+    with coarse mtime granularity. All streaming harnesses share this
+    scaffold so the ordering guarantee cannot drift between them.
     """
-    import atexit
-    import contextlib
     import glob
-    import os
     import shutil
     import tempfile
 
-    @contextlib.contextmanager
-    def cm():
-        key = None
-        if cache_key is not None:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                prefix,
-                cache_key,
-                n_batches,
-            )
-            hit = _STAGED_SRC_CACHE.get(key)
-            if hit is not None and os.path.isdir(hit):
-                yield hit
-                return
-        sliced = df.withColumn(
-            "__k", F.ntile(n_batches).over(Window.orderBy(*order_cols))
+    root = _scaffold_dir(sf_dir)
+    src = os.path.join(root, f"{prefix}-{n_batches}")
+    if os.path.isdir(src):
+        return src
+    sliced = df.withColumn(
+        "__k", F.ntile(n_batches).over(Window.orderBy(*order_cols))
+    )
+    stage = tempfile.mkdtemp(prefix=f"{prefix}-stage-", dir=root)
+    try:
+        # ONE write job for all slices: repartition on __k + hive
+        # partitionBy gives exactly one file per slice dir.
+        slices = os.path.join(stage, "slices")
+        (
+            sliced.repartition(n_batches, "__k")
+            .write.partitionBy("__k")
+            .parquet(slices)
         )
-        src = tempfile.mkdtemp(prefix=f"{prefix}-src-")
-        stage = tempfile.mkdtemp(prefix=f"{prefix}-stage-")
-        try:
-            # ONE write job for all slices: repartition on __k + hive
-            # partitionBy gives exactly one file per slice dir.  The
-            # previous per-slice filter+coalesce(1) loop re-executed the
-            # whole upstream pipeline n_batches times — pure harness
-            # fixed cost (the four streaming entries were ~22 s of the
-            # round-5 driver bench, VERDICT r5 #9).
-            (
-                sliced.repartition(n_batches, "__k")
-                .write.mode("overwrite")
-                .partitionBy("__k")
-                .parquet(stage)
-            )
-            for k in range(1, n_batches + 1):
-                parts = glob.glob(os.path.join(stage, f"__k={k}", "part-*.parquet"))
-                assert len(parts) == 1, f"slice {k}: expected 1 file, got {parts}"
-                dst = os.path.join(src, f"batch-{k:03d}.parquet")
-                shutil.copy(parts[0], dst)
-                os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
-            if key is not None:
-                if not _STAGED_SRC_CACHE:
-                    atexit.register(_cleanup_staged_srcs)
-                _STAGED_SRC_CACHE[key] = src
-            yield src
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-            if key is None:
-                shutil.rmtree(src, ignore_errors=True)
-
-    return cm()
+        out = os.path.join(stage, "src")
+        os.mkdir(out)
+        for k in range(1, n_batches + 1):
+            parts = glob.glob(os.path.join(slices, f"__k={k}", "part-*.parquet"))
+            assert len(parts) == 1, f"slice {k}: expected 1 file, got {parts}"
+            dst = os.path.join(out, f"batch-{k:03d}.parquet")
+            shutil.move(parts[0], dst)
+            os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
+        os.rename(out, src)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return src
 
 
 def _ensure_trailing_empty_batch(
@@ -3275,24 +3181,14 @@ SELECT LINE, downtime_id, START_TIME, co_id AS CO_Identifier FROM sid
 """
 
 
-#: Checkpoint of the most recent sessionizer stream run, keyed by
-#: (applicationId, sf_dir) — the production topology in miniature: ONE
-#: stream maintains the state, and the state reader
-#: (streaming_state_inspect) inspects that stream's checkpoint instead
-#: of running a redundant stream of its own (VERDICT r7 #2: ~5 s of
-#: pure micro-batch machinery per inspection). Reuse is CORRECT, not
-#: just fast: the open-session state is a pure function of the input
-#: feed, so any run's checkpoint for the same (app, sf_dir) holds the
-#: identical state rows. Dirs are cleaned at interpreter exit.
-_SESS_CHK_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_sess_checkpoints() -> None:
-    import shutil
-
-    for d in _SESS_CHK_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _SESS_CHK_CACHE.clear()
+def _sess_checkpoint(sf_dir: str) -> str:
+    """Fixed path of the sessionizer stream's published checkpoint —
+    the production topology in miniature: ONE stream maintains the
+    state, and the state reader (streaming_state_inspect) inspects that
+    stream's checkpoint instead of running a stream of its own. The
+    open-session state is a pure function of the input feed, so any
+    run's checkpoint for the fixture holds the identical state rows."""
+    return os.path.join(_scaffold_dir(sf_dir), "sess-chk")
 
 
 def _harness_co_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3309,10 +3205,9 @@ def _harness_co_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_sessionize_stream(spark: SparkSession, sf_dir: str) -> str:
     """Run the applyInPandasWithState sessionizer over the staged CO
     feed with an explicit checkpoint; return the memory-sink table
-    name. The checkpoint survives the call (registered in
-    _SESS_CHK_CACHE, superseding — and deleting — any previous one for
-    the same key) so the state reader can inspect it."""
-    import atexit
+    name. Once the query has terminated its checkpoint is published at
+    :func:`_sess_checkpoint`, superseding any previous one, so the
+    state reader can inspect it."""
     import shutil
     import tempfile
     import uuid
@@ -3328,14 +3223,14 @@ def _run_sessionize_stream(spark: SparkSession, sf_dir: str) -> str:
     # partitions, r9 probe); r7 ran 4 batches, r9 runs the minimum
     # that still proves the carry.
     n_batches = 2
-    chk = tempfile.mkdtemp(prefix="sg-sess-chk-")
+    chk = tempfile.mkdtemp(prefix="sess-chk-", dir=_scaffold_dir(sf_dir))
     # 16, not the JVM-stateful default 4: applyInPandasWithState cost
     # is per-group python state protocol, which parallelizes (see
     # _clamped_shuffle docstring grid).
-    with _clamped_shuffle(spark, 16), _staged_file_stream(
-        co, n_batches, ["START_TIME", "downtime_id"], "sg-sess",
-        cache_key=sf_dir,
-    ) as src:
+    with _clamped_shuffle(spark, 16):
+        src = _staged_file_stream(
+            co, n_batches, ["START_TIME", "downtime_id"], "sg-sess", sf_dir
+        )
         events = (
             spark.readStream.schema(co.schema)
             .option("maxFilesPerTrigger", 1)
@@ -3357,13 +3252,9 @@ def _run_sessionize_stream(spark: SparkSession, sf_dir: str) -> str:
         assert n_microbatches >= n_batches, (
             f"expected >= {n_batches} micro-batches, got {n_microbatches}"
         )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if not _SESS_CHK_CACHE:
-        atexit.register(_cleanup_sess_checkpoints)
-    prev = _SESS_CHK_CACHE.get(key)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SESS_CHK_CACHE[key] = chk
+    published = _sess_checkpoint(sf_dir)
+    shutil.rmtree(published, ignore_errors=True)
+    os.rename(chk, published)
     return name
 
 
@@ -3794,10 +3685,10 @@ def q_streaming_tumbling_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = harness_downtime_log(spark, sf_dir).select("LINE", "START_TIME", "UPTIME")
     n_batches = 2  # 1 cross-batch window-state carry (r9 floor grid:
     # 3b 2.1 s -> 2b 1.55 s; boundary windows still span the batch cut)
-    with _clamped_shuffle(spark), _staged_file_stream(
-        feed, n_batches, ["START_TIME", "LINE"], "sg-tumb",
-        cache_key=sf_dir,
-    ) as src:
+    with _clamped_shuffle(spark):
+        src = _staged_file_stream(
+            feed, n_batches, ["START_TIME", "LINE"], "sg-tumb", sf_dir
+        )
         events = (
             spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
@@ -3856,10 +3747,10 @@ def q_streaming_hopping_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_batches = 2  # 1 cross-batch window-state carry, same floor
     # accounting as the tumbling twin (overlap makes boundary windows
     # span the batch cut on BOTH sides of the hop).
-    with _clamped_shuffle(spark), _staged_file_stream(
-        feed, n_batches, ["START_TIME", "LINE"], "sg-hop",
-        cache_key=sf_dir,
-    ) as src:
+    with _clamped_shuffle(spark):
+        src = _staged_file_stream(
+            feed, n_batches, ["START_TIME", "LINE"], "sg-hop", sf_dir
+        )
         events = (
             spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
@@ -4609,10 +4500,10 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n_batches = 2  # 1 cross-batch dedup-state carry (r9 floor work)
-    with _clamped_shuffle(spark), _staged_file_stream(
-        feed, n_batches, ["ts", "user_id"], "sg-dedup",
-        cache_key=sf_dir,
-    ) as src:
+    with _clamped_shuffle(spark):
+        src = _staged_file_stream(
+            feed, n_batches, ["ts", "user_id"], "sg-dedup", sf_dir
+        )
         stream = (
             spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
@@ -4852,9 +4743,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state commit is CPU-side serialization, tmpfs checkpoints were
     # measured flat).
     n_batches = 2
-    with _clamped_shuffle(spark, 2), _staged_file_stream(
-        ev, n_batches, ["ts", "event_id"], "sg-ssj", cache_key=sf_dir
-    ) as src:
+    with _clamped_shuffle(spark, 2):
+        src = _staged_file_stream(ev, n_batches, ["ts", "event_id"], "sg-ssj", sf_dir)
         feed = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -6143,10 +6033,10 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value", "ts"
     )
     n_batches = 2  # stateless: 2 batches still prove per-batch re-join
-    with _clamped_shuffle(spark), _staged_file_stream(
-        ev, n_batches, ["ts", "event_id"], "sg-enrich",
-        cache_key=sf_dir,
-    ) as src:
+    with _clamped_shuffle(spark):
+        src = _staged_file_stream(
+            ev, n_batches, ["ts", "event_id"], "sg-enrich", sf_dir
+        )
         stream = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
@@ -6781,11 +6671,9 @@ def q_streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure function of the input feed."""
     from ..streaming.state_inspect import read_state
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    chk = _SESS_CHK_CACHE.get(key)
-    if chk is None:
+    chk = _sess_checkpoint(sf_dir)
+    if not os.path.isdir(chk):
         _run_sessionize_stream(spark, sf_dir)
-        chk = _SESS_CHK_CACHE[key]
     g = F.col("value.groupState")
     state = read_state(spark, chk).select(
         F.col("key.LINE").alias("LINE"),
@@ -8990,9 +8878,10 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
             schema_txt,
         )
     )
-    with _clamped_shuffle(spark, 2), _staged_file_stream(
-        staged, n_batches, ["ts", "event_id"], "sg-ssjo", cache_key=sf_dir
-    ) as src:
+    with _clamped_shuffle(spark, 2):
+        src = _staged_file_stream(
+            staged, n_batches, ["ts", "event_id"], "sg-ssjo", sf_dir
+        )
         _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-ssjo")
         feed = (
             spark.readStream.schema(schema_txt)
@@ -9637,10 +9526,10 @@ def q_streaming_ewma_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_id", "ts", "value")
     )
     n_batches = 2  # 1 cross-batch numeric-state carry
-    with _clamped_shuffle(spark), _staged_file_stream(
-        feed, n_batches, ["ts", "event_id"], "sg-ewma",
-        cache_key=sf_dir,
-    ) as src:
+    with _clamped_shuffle(spark):
+        src = _staged_file_stream(
+            feed, n_batches, ["ts", "event_id"], "sg-ewma", sf_dir
+        )
         stream = (
             spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
@@ -10182,9 +10071,10 @@ def q_streaming_unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n_batches = 2  # 1 cross-batch DEDUP-state carry (the point)
-    with _clamped_shuffle(spark, 2), _staged_file_stream(
-        staged, n_batches, ["ts", "event_id"], "sg-uniq", cache_key=sf_dir
-    ) as src:
+    with _clamped_shuffle(spark, 2):
+        src = _staged_file_stream(
+            staged, n_batches, ["ts", "event_id"], "sg-uniq", sf_dir
+        )
         _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-uniq")
         feed = (
             spark.readStream.schema(schema_txt)
@@ -10262,9 +10152,10 @@ def q_streaming_unique_visitors_wm(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     n_batches = 2  # 1 cross-batch DEDUP-state carry (the point)
-    with _clamped_shuffle(spark, 2), _staged_file_stream(
-        staged, n_batches, ["ts", "event_id"], "sg-uniqwm", cache_key=sf_dir
-    ) as src:
+    with _clamped_shuffle(spark, 2):
+        src = _staged_file_stream(
+            staged, n_batches, ["ts", "event_id"], "sg-uniqwm", sf_dir
+        )
         _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-uniqwm")
         feed = (
             spark.readStream.schema(schema_txt)
@@ -10598,9 +10489,10 @@ def q_streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     n_batches = 1  # cross-batch carry is the inner twin's concern
-    with _clamped_shuffle(spark, 2), _staged_file_stream(
-        staged, n_batches, ["ts", "event_id"], "sg-ssjf", cache_key=sf_dir
-    ) as src:
+    with _clamped_shuffle(spark, 2):
+        src = _staged_file_stream(
+            staged, n_batches, ["ts", "event_id"], "sg-ssjf", sf_dir
+        )
         _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-ssjf")
         feed = (
             spark.readStream.schema(schema_txt)

@@ -77,7 +77,7 @@ def _pin_timestamp_confs(spark: SparkSession) -> None:
 #: pinned ingestion confs below, so the cached schema is exactly what
 #: a fresh inference would produce; the explicit-schema read then
 #: decodes identically (same nanosAsLong long mapping, same LTZ
-#: timestamps). Keyed by (path, mtime, size) — not path alone — so a
+#: timestamps). Keyed by :func:`_path_fingerprint` — not path alone — so a
 #: fixture regenerated in-process (tests, multi-round harnesses) gets
 #: a fresh inference instead of a silently mismatched explicit schema
 #: (ADVICE r15). Sessions differ merely in where the confs were
@@ -87,13 +87,24 @@ _SCHEMA_CACHE: dict[tuple, object] = {}
 
 def _path_fingerprint(path: str) -> tuple:
     """(path, mtime_ns, size) of a parquet file or, for a directory
-    dataset, of the directory entry itself (mtime bumps when files are
-    added/replaced) — cheap stat-level identity for the schema cache."""
+    dataset, of the directory entry plus ``(relpath, mtime_ns, size)``
+    of every file beneath it, so a rewrite inside a nested partition
+    dir changes the fingerprint too — cheap stat-level identity for the
+    schema cache."""
     try:
         st = os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
     except OSError:
         return (path, None, None)
+    fp = (path, st.st_mtime_ns, st.st_size)
+    if not os.path.isdir(path):
+        return fp
+    files = []
+    for d, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(d, n)
+            fst = os.stat(f)
+            files.append((os.path.relpath(f, path), fst.st_mtime_ns, fst.st_size))
+    return fp + tuple(sorted(files))
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -142,16 +153,14 @@ def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
     the identical 10 views on every SQL-surface query re-paid ~0.3 s of
     reader construction per call for no semantic effect. Re-registers
     whenever ``sf_dir`` changes so multi-fixture runners stay correct,
-    and re-verifies one sentinel view against the live catalog so a
-    user-dropped view never stays silently missing (ADVICE r15).
+    and whenever any of the views is missing from the live catalog
+    (each check is a cheap metadata lookup), so a user-dropped view
+    never stays silently missing.
     """
     sf_dir = sf_dir or DEFAULT_SF_DIR
     if _REGISTERED_VIEWS.get(spark) == sf_dir:
-        # trust-but-verify: the registry says views exist — confirm one
-        # against the session catalog (cheap metadata lookup) in case a
-        # caller dropped temp views since registration.
         try:
-            if spark.catalog.tableExists(TABLES[0]):
+            if all(spark.catalog.tableExists(n) for n in TABLES):
                 return
         except Exception:
             pass

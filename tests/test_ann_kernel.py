@@ -69,11 +69,20 @@ def test_pq_kernel_falls_back_when_refine_cuts(monkeypatch, spark, corpus):
     queries = corpus.filter(F.col("vec_id") < 7)
     a, c, b = SIM.ivfpq_index(corpus, n_cells=8, m_subvectors=4, n_codes=8)
     a = a.localCheckpoint(eager=True)
-    j, k = _both_paths(
-        monkeypatch,
-        lambda: SIM.ivfpq_topk_indexed(a, c, b, queries, k=5, n_probe=8, refine=2),
-    )
+    jsc = spark.sparkContext._jsc
+    held = []
+
+    def run():
+        # the kernel path's eager checkpoint must be released on the
+        # fallback branch: the call leaves no new persistent RDD
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = SIM.ivfpq_topk_indexed(a, c, b, queries, k=5, n_probe=8, refine=2)
+        held.append(set(jsc.getPersistentRDDs().keySet()) - before)
+        return out
+
+    j, k = _both_paths(monkeypatch, run)
     assert j == k and len(j) > 0
+    assert held == [set(), set()]
 
 
 def test_ivf_oneshot_kernel_equals_brute_probe_all(spark, corpus):

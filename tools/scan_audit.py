@@ -41,8 +41,9 @@ def table_scans(plan: str) -> dict[str, int]:
 # Review-queue adjudications (VERDICT r13 #6): every flagged entry's
 # measured verdict, so the tool's output carries the evidence instead
 # of pointing at PERFORMANCE.md prose. "wash"/"slower" = interleaved
-# min-of-3 A/B of the checkpoint variant at sf0.1 (tools/scanq_ab.py,
-# r14: bm25 0.98x, domain_mixture 1.01x, substring 1.10x, lttb 0.95x);
+# min-of-3 A/B of the checkpoint variant at sf0.1 (the interleaved A/B
+# script tools/scanq_ab.py, since deleted; see git history. r14: bm25
+# 0.98x, domain_mixture 1.01x, substring 1.10x, lttb 0.95x);
 # each operator keeps a materialize_* knob for cluster scale, where
 # the saved corpus scan dominates the barrier cost.
 ADJUDICATED: dict[str, str] = {

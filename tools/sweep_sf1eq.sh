@@ -1,7 +1,7 @@
 #!/bin/bash
 # Sweep a list of catalog entries through the gate replica at a
 # scale fixture (default sf1-equivalent), chunked so each Spark
-# session's pinned scaffolding stays bounded. Usage:
+# application's scaffolding stays bounded. Usage:
 #   tools/sweep_sf1eq.sh <entry-list-file> <log-file> [chunk-size] [fixture-dir]
 set -u
 LIST="$1"; LOG="$2"; CHUNK="${3:-16}"; FIXTURE="${4:-.scale/sf1eq}"
