@@ -8,12 +8,13 @@ oracle twin.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from fhc_rco_etl_scalable_spark.plans import harness_queries as hq
 

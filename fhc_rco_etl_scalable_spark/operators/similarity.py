@@ -253,7 +253,9 @@ def _collect_unit_queries(queries: DataFrame, id_col: str, vec_col: str):
     the collected rows (collected doubles round-trip exactly), so the
     final native re-rank broadcasts 10-ish local rows instead of
     re-scanning and re-normalizing the queries subtree as a second
-    Spark job per call."""
+    Spark job per call. It is built from pandas: with Arrow enabled the
+    rows reach the JVM directly, while a Python list would go through
+    ``parallelize`` and a Python-worker stage with one task per core."""
     qid_type = queries.schema[id_col].dataType.simpleString()
     rows = queries.select(
         F.col(id_col).alias("query_id"), _unit(F.col(vec_col)).alias("__qv")
@@ -263,7 +265,12 @@ def _collect_unit_queries(queries: DataFrame, id_col: str, vec_col: str):
     q_ids = np.asarray([r["query_id"] for r in rows])
     qmat = np.asarray([r["__qv"] for r in rows], dtype=np.float64)
     q_native = queries.sparkSession.createDataFrame(
-        [(r["query_id"], list(r["__qv"])) for r in rows],
+        pd.DataFrame(
+            {
+                "query_id": [r["query_id"] for r in rows],
+                "__qv": [list(r["__qv"]) for r in rows],
+            }
+        ),
         f"query_id {qid_type}, __qv array<double>",
     )
     return q_ids, qmat, q_native
@@ -307,37 +314,6 @@ def _spread_if_narrow(df: DataFrame) -> DataFrame:
     return df
 
 
-def _use_topk_kernel(assignments: DataFrame) -> bool:
-    """Size-adaptive path choice for the INDEXED query paths: the
-    local-top-k kernel pays a fixed ~0.5 s Arrow pass (worker
-    round-trip + vector re-ship), while the join-shaped form's cost
-    grows with |candidates| (interpreted dot ~3.5 us/pair + the
-    full-candidate window, plus the ADC Arrow pass on the PQ path).
-    Interleaved min-of-3 A/B (r16): at a 0.8 MB / 2k-row index the
-    join form wins by ~0.4 s; at 5.2 MB / 20k rows the kernel wins by
-    ~1 s and keeps winning as the index grows (it touches each
-    assignment row exactly once). The optimizer's sizeInBytes estimate
-    of the assignment frame picks the side; parameterized via
-    SPARK_GRAFT_ANN_KERNEL_MIN_BYTES (default 2 MiB, between the two
-    measured operating points), and an unavailable estimate assumes
-    BIG — the scale-safe default.
-
-    Both paths are result-identical and both stay oracle-certified:
-    the small fixtures (sf0.001/sf0.01/sf0.1) exercise the join form,
-    the sf1eq sweep the kernel form, and pytest pins kernel == join
-    == brute on the same corpus."""
-    from ..session import env_int
-
-    threshold = env_int("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", 2 * 1024 * 1024)
-    try:
-        est = int(
-            assignments._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return True
-    return est >= threshold
-
-
 def _topk_candidate_kernel(
     q_ids: np.ndarray,
     qmat: np.ndarray,
@@ -353,31 +329,27 @@ def _topk_candidate_kernel(
     corpus frame.
 
     - ``cell_lut``: restrict candidates to rows whose cell is probed by
-      the query (IVF routing; rows with out-of-range cells match no
-      probe, exactly like the old cell equi-join).
+      the query (IVF routing; a row whose cell is outside the LUT
+      matches no probe).
     - ``assign_cents``: compute the cell in-kernel via the same
       ``argmax(v @ cents.T)`` the assignment UDF ran (one-shot IVF —
       fuses away a whole Arrow pass).
-    - ``pq``: (cents, books) — additionally evaluate the ADC dot for
-      every candidate through the classic per-query lookup tables and
-      keep each query's ADC top-k too; emit kind=1 rows carrying the
-      per-(batch, query) candidate COUNT so the caller can prove the
-      refine filter vacuous (see _pq_query).
+    - ``pq``: (cents, books, adc_keep) — additionally evaluate the ADC
+      dot for every candidate through the classic per-query lookup
+      tables, keep each query's per-batch ADC top-``adc_keep`` too, and
+      emit every kept row's raw ADC score as column ``adc`` (NaN stays
+      NaN) so the JVM can rank the refine cut (see _pq_query).
     """
     nq = len(q_ids)
+    schema = f"query_id {qid_type}, neighbor_id {nid_type}, unit_vec array<double>"
     if pq is not None:
-        pq_cents, pq_books = pq
+        pq_cents, pq_books, adc_keep = pq
         base_lut = pq_cents @ qmat.T  # (n_cells, nq)
         sub = pq_books[0].shape[1]
         code_luts = [
             b @ qmat[:, j * sub : (j + 1) * sub].T for j, b in enumerate(pq_books)
         ]  # each (n_codes, nq)
-        schema = (
-            f"query_id {qid_type}, neighbor_id {nid_type}, "
-            "unit_vec array<double>, kind int, n long"
-        )
-    else:
-        schema = f"query_id {qid_type}, neighbor_id {nid_type}, unit_vec array<double>"
+        schema += ", adc double"
 
     def gen(batches):
         for pdf in batches:
@@ -413,8 +385,9 @@ def _topk_candidate_kernel(
                 for j, lut in enumerate(code_luts):
                     adc = adc + lut[codes[:, j]]
                 adc = np.where(allowed, adc, -np.inf)
-                adc[np.isnan(adc)] = np.inf
-                keep |= _local_topk_mask(adc, k)
+                # NaN ranks first under DESC in Spark; emitted raw below
+                ranked = np.where(np.isnan(adc), np.inf, adc)
+                keep |= _local_topk_mask(ranked, adc_keep)
             bi, qi = np.nonzero(keep)
             out = pd.DataFrame(
                 {
@@ -424,18 +397,7 @@ def _topk_candidate_kernel(
                 }
             )
             if pq is not None:
-                out["kind"] = np.int32(0)
-                out["n"] = np.int64(0)
-                cnt = pd.DataFrame(
-                    {
-                        "query_id": q_ids,
-                        "neighbor_id": np.repeat(ids[:1], nq),
-                        "unit_vec": [None] * nq,
-                        "kind": np.int32(1),
-                        "n": allowed.sum(axis=0).astype(np.int64),
-                    }
-                )
-                out = pd.concat([out, cnt], ignore_index=True)
+                out["adc"] = adc[bi, qi]
             yield out
 
     return gen, schema
@@ -954,71 +916,36 @@ def ivf_topk_indexed(
     Doubles round-trip exactly through parquet, so the stored-index
     result is bit-identical to the in-memory one.
 
-    r16 shape, size-adaptive (see :func:`_use_topk_kernel`): above the
-    size threshold, probe routing + candidate scoring run as ONE Arrow
-    pass over the stored assignment rows (the local-top-k kernel above;
-    cell routing reads the stored ``cell`` column through the same
-    membership test the cell equi-join applies); only each query's
-    per-batch top-k superset leaves Python for the native re-rank.
-    Below it, the join-shaped form — whose fixed cost is lower — runs
-    unchanged. Both produce identical rows.
+    Probe routing and candidate scoring run as ONE Arrow pass over the
+    stored assignment rows (the local-top-k kernel above): a row is a
+    candidate of a query iff its stored ``cell`` is among the query's
+    ``n_probe`` nearest cells, and only each query's per-batch top-k
+    superset leaves Python for the native re-rank. Each assignment row
+    is touched exactly once, whatever the index size.
     """
-    from pyspark.sql.functions import pandas_udf
-
     cent_rows = sorted(centroids.collect(), key=lambda r: r.cell)
     if not cent_rows:
         # empty index (built from an empty corpus) → no neighbors, same
         # typed-empty contract as ivf_index / ivf_topk.
         return _empty_topk_result(queries, id_col)
     cents = np.asarray([r.centroid for r in cent_rows], dtype=np.float64)
-    if _use_topk_kernel(assignments):
-        q_ids, qmat, q_native = _collect_unit_queries(queries, id_col, vec_col)
-        if q_ids is None:
-            return _empty_topk_result(queries, id_col)
-        kern, schema = _topk_candidate_kernel(
-            q_ids,
-            qmat,
-            k,
-            queries.schema[id_col].dataType.simpleString(),
-            assignments.schema[id_col].dataType.simpleString(),
-            cell_lut=_probe_lut(cents, qmat, n_probe),
-        )
-        src = _spread_if_narrow(
-            assignments.select(
-                F.col(id_col).alias("__id"), F.col("unit_vec"), F.col("cell")
-            )
-        )
-        return _exact_rerank(src.mapInPandas(kern, schema), q_native, k)
-    n_probe_eff = min(n_probe, len(cents))
-
-    @pandas_udf("array<int>")
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64)
-        order = np.argsort(-(v @ cents.T), axis=1)[:, :n_probe_eff].astype(np.int32)
-        return pd.Series(list(order))
-
-    c = assignments.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("unit_vec").alias("__cv"),
-        F.col("cell").alias("__cell"),
+    q_ids, qmat, q_native = _collect_unit_queries(queries, id_col, vec_col)
+    if q_ids is None:
+        return _empty_topk_result(queries, id_col)
+    kern, schema = _topk_candidate_kernel(
+        q_ids,
+        qmat,
+        k,
+        queries.schema[id_col].dataType.simpleString(),
+        assignments.schema[id_col].dataType.simpleString(),
+        cell_lut=_probe_lut(cents, qmat, n_probe),
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _unit(F.col(vec_col)).alias("__qv")
-    ).withColumn("__cell", F.explode(probe_cells(F.col("__qv"))))
-    cand = c.join(F.broadcast(q), "__cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    cand = cand.withColumn("cos_sim", dot(F.col("__qv"), F.col("__cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank"
+    src = _spread_if_narrow(
+        assignments.select(
+            F.col(id_col).alias("__id"), F.col("unit_vec"), F.col("cell")
         )
     )
+    return _exact_rerank(src.mapInPandas(kern, schema), q_native, k)
 
 
 def l2_dist(a: Column, b: Column) -> Column:
@@ -1168,31 +1095,28 @@ def _pq_query(
     from training) and :func:`ivfpq_topk_indexed` (arrays rebuilt from
     the stored centroid/codebook tables).
 
-    r16 two-path shape. ONE Arrow pass over the assignment rows (the
-    local-top-k kernel) evaluates, for every probed candidate, both the
-    ADC dot (classic per-query lookup tables over the stored codes —
-    the full PQ machinery still runs per candidate) and the approx
-    cosine, keeps each query's per-batch top-k of BOTH scores (plus
-    _APPROX_EPS boundary ties), and emits per-(batch, query) candidate
-    COUNTS. When ``refine * k >= max(per-query candidate count)`` the
-    ADC refine filter is PROVABLY vacuous — every candidate is in the
-    refine set, so the declared result is exactly the native-cosine
-    top-k of all candidates, and the kernel's cosine superset feeds the
-    native re-rank directly (the bench / oracle configuration:
-    probe-all + refine-all). Otherwise — approximate configs where the
-    ADC CUT is load-bearing — fall back to the original join-shaped
-    exact path below, whose ADC ranking semantics are preserved
-    operator-for-operator (it re-scans the assignments; those configs
-    run on pytest-sized corpora).
+    ONE Arrow pass over the assignment rows (the local-top-k kernel)
+    evaluates, for every probed candidate, the approx cosine and the
+    ADC dot (classic per-query lookup tables over the stored codes),
+    and keeps each query's per-batch cosine top-k plus its ADC
+    top-``R`` (both with _APPROX_EPS boundary ties), carrying the raw
+    ADC score. The refine cut then runs in the JVM: ``row_number()``
+    over ``(adc DESC, neighbor_id)`` per query keeps the top
+    ``refine * k``, and :func:`_exact_rerank` ranks those survivors by
+    native cosine.
 
-    Below the :func:`_use_topk_kernel` size threshold the join-shaped
-    path runs directly — its fixed cost is lower than the kernel's
-    Arrow pass at small index sizes, and its ADC semantics are the
-    reference ones for every config."""
-    if not _use_topk_kernel(assignments):
-        return _pq_query_refine(
-            assignments, cents, books, queries, id_col, vec_col, k, n_probe, refine
-        )
+    The cut is exact: a candidate in a query's global ADC top-``R`` is
+    beaten by at most ``R - 1`` candidates, hence by at most ``R - 1``
+    of its own batch, so the kernel keeps it and every candidate ranked
+    above it — its rank among the kept rows equals its global rank.
+    ``R = refine * k`` while that is below the number of assignment
+    rows; otherwise the cut cannot remove a candidate, the window
+    filter is a no-op, and ``R = k`` keeps the kernel output
+    k-superset-sized (the oracle configuration: probe-all +
+    refine-all). The row count scans only ``id_col`` — the encode UDF
+    of a fresh :func:`_pq_encode` frame is pruned from its plan."""
+    cut = refine * k
+    adc_keep = cut if cut < assignments.count() else k
     q_ids, qmat, q_native = _collect_unit_queries(queries, id_col, vec_col)
     if q_ids is None:
         return _empty_topk_result(queries, id_col)
@@ -1203,7 +1127,7 @@ def _pq_query(
         queries.schema[id_col].dataType.simpleString(),
         assignments.schema[id_col].dataType.simpleString(),
         cell_lut=_probe_lut(cents, qmat, n_probe),
-        pq=(cents, books),
+        pq=(cents, books, adc_keep),
     )
     src = _spread_if_narrow(
         assignments.select(
@@ -1213,99 +1137,16 @@ def _pq_query(
             F.col("codes"),
         )
     )
-    # Materialize the reduced frame once (it is k-superset-sized, not
-    # corpus-sized) so the vacuity decision and the final plan reuse
-    # one corpus pass instead of re-running the kernel per action.
-    reduced = src.mapInPandas(kern, schema).localCheckpoint(eager=True)
-    max_cand = (
-        reduced.filter(F.col("kind") == 1)
-        .groupBy("query_id")
-        .agg(F.sum("n").alias("__n"))
-        .agg(F.max("__n"))
-        .collect()[0][0]
-        or 0
-    )
-    if refine * k >= max_cand:
-        survivors = reduced.filter(F.col("kind") == 0).select(
-            "query_id", "neighbor_id", "unit_vec"
-        )
-        return _exact_rerank(survivors, q_native, k)
-    # the fallback re-scans the assignments: release the checkpoint
-    reduced._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    return _pq_query_refine(
-        assignments, cents, books, queries, id_col, vec_col, k, n_probe, refine
-    )
-
-
-def _pq_query_refine(
-    assignments: DataFrame,
-    cents: "np.ndarray",
-    books: list,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_probe: int,
-    refine: int,
-) -> DataFrame:
-    """The original join-shaped ADC-refine path — exact semantics for
-    configs where ``refine * k`` genuinely cuts the candidate set."""
-    from pyspark.sql.functions import pandas_udf
-
-    m_subvectors = len(books)
-    sub = books[0].shape[1]
-    n_probe_eff = min(n_probe, len(cents))
-
-    @pandas_udf("array<int>")
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64)
-        order = np.argsort(-(v @ cents.T), axis=1)[:, :n_probe_eff].astype(np.int32)
-        return pd.Series(list(order))
-
-    @pandas_udf("double")
-    def adc_dot(qv: pd.Series, cell: pd.Series, codes: pd.Series) -> pd.Series:
-        q = np.asarray(qv.tolist(), dtype=np.float64)
-        cel = np.asarray(cell, dtype=np.int64)
-        s = np.einsum("bd,bd->b", q, cents[cel])
-        code = np.asarray(codes.tolist(), dtype=np.int64)
-        for j in range(m_subvectors):
-            qs = q[:, j * sub : (j + 1) * sub]
-            vs = books[j][code[:, j]]
-            s = s + np.einsum("bs,bs->b", qs, vs)
-        return pd.Series(s)
-
-    c = assignments.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("unit_vec").alias("__cv"),
-        F.col("cell").alias("__cell"),
-        F.col("codes").alias("__codes"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _unit(F.col(vec_col)).alias("__qv")
-    ).withColumn("__cell", F.explode(probe_cells(F.col("__qv"))))
-    cand = c.join(F.broadcast(q), "__cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    cand = cand.withColumn(
-        "__adc", adc_dot(F.col("__qv"), F.col("__cell"), F.col("__codes"))
-    )
     w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").desc(), F.col("neighbor_id")
+        F.col("adc").desc(), F.col("neighbor_id")
     )
-    survivors = cand.withColumn("__arank", F.row_number().over(w_adc)).filter(
-        F.col("__arank") <= refine * k
+    survivors = (
+        src.mapInPandas(kern, schema)
+        .withColumn("__arank", F.row_number().over(w_adc))
+        .filter(F.col("__arank") <= cut)
+        .select("query_id", "neighbor_id", "unit_vec")
     )
-    survivors = survivors.withColumn("cos_sim", dot(F.col("__qv"), F.col("__cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank"
-        )
-    )
+    return _exact_rerank(survivors, q_native, k)
 
 
 def ivfpq_index(
@@ -1343,7 +1184,7 @@ def ivfpq_index(
     init, no RNG) and doubles round-trip parquet exactly, so an index
     built from the same corpus reproduces bit-identically and
     :func:`ivfpq_topk_indexed` over the stored index equals the
-    one-shot :func:`ivfpq_topk` (which now delegates through here).
+    one-shot :func:`ivfpq_topk` (both run :func:`_pq_query`).
     """
     spark = corpus.sparkSession
     trained = _pq_train(
@@ -1395,14 +1236,15 @@ def ivfpq_topk_indexed(
     ``n_probe`` nearest cells, rank candidates by the ADC dot product
     reconstructed from the stored codes, and exact-cosine re-rank the
     top ``refine * k`` survivors. Identical result contract to
-    :func:`ivfpq_topk` (which delegates here) — ``n_probe == n_cells``
-    with a big enough refine set equals brute force.
+    :func:`ivfpq_topk` (both run :func:`_pq_query`) — ``n_probe ==
+    n_cells`` with a big enough refine set equals brute force.
 
     ``centroids`` and ``codebooks`` are collected driver-side — a
     bounded-by-contract collect (n_cells + m*n_codes rows; the
     quantizer is model, not data-scale) — and broadcast as closure
-    constants; the only big-side work is the cell-keyed join against
-    ``assignments``. The corpus is never re-scanned or re-encoded.
+    constants; the only big-side work is one Arrow pass of the top-k
+    kernel over ``assignments`` plus a row count of it. The corpus is
+    never re-scanned or re-encoded.
     """
     cent_rows = sorted(centroids.collect(), key=lambda r: r.cell)
     if not cent_rows:

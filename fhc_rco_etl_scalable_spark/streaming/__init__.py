@@ -1,11 +1,8 @@
 from .sessionize_stream import streaming_runtime_per_day, streaming_sessionize
-from .sessionize_tws import streaming_sessionize_tws, tws_available
 from .state_inspect import open_sessions, read_state, state_operators
 
 __all__ = [
     "streaming_sessionize",
-    "streaming_sessionize_tws",
-    "tws_available",
     "streaming_runtime_per_day",
     "state_operators",
     "read_state",

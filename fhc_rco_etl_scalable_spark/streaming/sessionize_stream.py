@@ -70,11 +70,8 @@ def _sessionize_rows(
     p_minutes: float,
 ) -> tuple[list[tuple], tuple]:
     """Pure fold of event rows through the 4-clause rule: returns
-    (output rows, new state tuple). Shared by the v1
-    applyInPandasWithState function below AND the v2
-    transformWithStateInPandas processor (sessionize_tws.py) — the
-    streaming runtimes only move bytes around this function, so the
-    two APIs cannot drift semantically."""
+    (output rows, new state tuple). The applyInPandasWithState
+    function below only moves state and bytes around this fold."""
     if prior is not None:
         last_end, last_trig, last_brand, sess_id = prior
     else:

@@ -4,7 +4,6 @@ entrants, and integer env knobs that fall back on malformed values."""
 from types import SimpleNamespace
 
 from fhc_rco_etl_scalable_spark import session as S
-from fhc_rco_etl_scalable_spark.operators import similarity as SIM
 
 KEY = "spark.sql.constraintPropagation.enabled"
 
@@ -86,11 +85,3 @@ def test_malformed_shuffle_env_falls_back(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "12")
     assert S.get_spark().conf["spark.sql.shuffle.partitions"] == "12"
 
-
-def test_malformed_ann_kernel_env_falls_back(monkeypatch, spark):
-    # a tiny frame sits below the 2 MiB default, so the join form wins
-    tiny = spark.range(3)
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", "2MiB")
-    assert SIM._use_topk_kernel(tiny) is False
-    monkeypatch.setenv("SPARK_GRAFT_ANN_KERNEL_MIN_BYTES", "0")
-    assert SIM._use_topk_kernel(tiny) is True

@@ -145,128 +145,6 @@ def test_streaming_hopping_membership(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas (v2 stateful API) twin — the processor's
-# logic is a pure function shared with the v1 applyInPandasWithState
-# path, so it is driven directly (no streaming runtime, no protobuf);
-# the end-to-end streaming run is environment-gated on tws_available().
-# ---------------------------------------------------------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-
-    def getValueState(self, name, schema, ttl_duration_ms=None):
-        return self.state
-
-
-def _pdf(rows):
-    import pandas as pd
-
-    return pd.DataFrame(
-        rows,
-        columns=["downtime_id", "LINE", "START_TIME", "END_TIME", "DOWNTIME",
-                 "UPTIME", "BRANDCODE", "CAUSE_LEVELS_1_NAME",
-                 "CAUSE_LEVELS_2_NAME", "CAUSE_LEVELS_3_NAME"],
-    )
-
-
-def test_tws_processor_matches_v1_fn_across_batches():
-    """The v2 StatefulProcessor and the v1 applyInPandasWithState fn
-    must emit identical rows and carry identical state across a batch
-    boundary (they share one pure core; this pins the adapters)."""
-    from fhc_rco_etl_scalable_spark.streaming.sessionize_stream import (
-        make_session_fn,
-    )
-    from fhc_rco_etl_scalable_spark.streaming.sessionize_tws import (
-        make_session_processor,
-    )
-
-    batches = [
-        _pdf([ROWS[0]]),                  # d1 opens
-        _pdf([ROWS[1], ROWS[2]]),         # d2 continues, d3 splits
-    ]
-
-    proc = make_session_processor(30.0)
-    handle = _FakeHandle()
-    proc.init(handle)
-    v2_rows = []
-    for b in batches:
-        for out in proc.handleInputRows(("L1",), iter([b]), None):
-            v2_rows += list(map(tuple, out.itertuples(index=False)))
-    v2_state = handle.state.get()
-
-    class _V1State:
-        exists = False
-        get = None
-
-        def update(self, v):
-            self.get, self.exists = tuple(v), True
-
-    fn = make_session_fn(30.0)
-    st = _V1State()
-    v1_rows = []
-    for b in batches:
-        for out in fn(("L1",), iter([b]), st):
-            v1_rows += list(map(tuple, out.itertuples(index=False)))
-
-    assert v2_rows == v1_rows
-    assert v2_state == st.get
-    ids = {r[1]: r[3] for r in v2_rows}
-    assert ids["d1"] == "L1 - 2024-01-01 - d1"
-    assert ids["d2"] == "L1 - 2024-01-01 - d1"   # continued via carried state
-    assert ids["d3"] == "L1 - 2024-01-01 - d3"   # split
-
-
-def test_tws_streaming_end_to_end(spark, tmp_path_factory):
-    """Full transformWithStateInPandas run — requires protobuf + the
-    RocksDB provider; skipped where the v2 protocol cannot run."""
-    from fhc_rco_etl_scalable_spark.streaming.sessionize_tws import (
-        streaming_sessionize_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("python protobuf not installed: v2 state protocol cannot run")
-    src = str(tmp_path_factory.mktemp("tws_src"))
-    spark.createDataFrame(ROWS, SCHEMA).coalesce(1).write.mode("overwrite").parquet(src)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        events = spark.readStream.schema(SCHEMA).parquet(src)
-        sessions = streaming_sessionize_tws(events, p_minutes=30.0)
-        q = (
-            sessions.writeStream.outputMode("append").format("memory")
-            .queryName("tws_sess_out").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        got = {r.downtime_id: r.CO_Identifier
-               for r in spark.sql("SELECT * FROM tws_sess_out").collect()}
-        assert got["d2"] == "L1 - 2024-01-01 - d1"
-        assert got["d3"] == "L1 - 2024-01-01 - d3"
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-# ---------------------------------------------------------------------------
 # State Data Source inspection (streaming/state_inspect.py): read the
 # sessionizer's open-session state straight from the checkpoint.
 # ---------------------------------------------------------------------------

@@ -20,10 +20,12 @@ Usage: python tools/check_decontaminate_scale.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.check_oracle import canon_pandas, vanilla_spark  # noqa: E402
 
@@ -56,7 +58,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf1eq"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scale", "sf1eq")
 
     spark = vanilla_spark()
     t0 = time.time()

@@ -43,7 +43,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # DuckDB logical types whose pandas materialization diverges from (or
 # crashes against) Spark's toPandas under the driver's canon.

@@ -12,9 +12,10 @@ from __future__ import annotations
 
 import io
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_of(df) -> str:
@@ -809,26 +810,25 @@ def main() -> int:
     # 35c. Round-14 persisted-index family. incremental_dedup_index:
     #     both band joins are HASH joins on (band, band_sig) — no
     #     cartesian anywhere — and no per-row Python (the minhash
-    #     pipeline is native expressions). ann_index_query: the probe
-    #     side broadcasts (queries x n_probe rows); the assignments
-    #     side must not BroadcastNestedLoop (the cell key is an
-    #     equi-join). Its cell-assign/probe Pandas UDFs ARE Python
-    #     nodes by design (Arrow-batched matmuls), so only the join
-    #     strategy is asserted there.
+    #     pipeline is native expressions). ann_index_query and its PQ
+    #     twin: the stored assignment rows pass through the local-top-k
+    #     kernel exactly once (ONE MapInPandas: cell probing, scoring
+    #     and, for PQ, the ADC scores happen inside it), the collected
+    #     query vectors broadcast into the native re-rank, and nothing
+    #     joins the assignments against the queries as all-pairs. The
+    #     PQ refine cut is a plain window over the kernel's output.
     p = plan_of(hq.QUERIES["incremental_dedup_index"](spark, sf_dir))
     check("no_cartesian(incremental_dedup_index)",
           "CartesianProduct" not in p and "BroadcastNestedLoop" not in p)
     check("no_python(incremental_dedup_index)", "Python" not in p)
-    p = plan_of(hq.QUERIES["ann_index_query"](spark, sf_dir))
-    check("no_cartesian(ann_index_query)",
-          "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p)
-    check("broadcast(ann_index_query probes)", "BroadcastExchange" in p)
-    # r15 PQ twin: same invariants — cell-keyed join against the stored
-    # codes, probes broadcast, no all-pairs anywhere.
-    p = plan_of(hq.QUERIES["ann_index_query_pq"](spark, sf_dir))
-    check("no_cartesian(ann_index_query_pq)",
-          "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p)
-    check("broadcast(ann_index_query_pq probes)", "BroadcastExchange" in p)
+    for qname in ("ann_index_query", "ann_index_query_pq"):
+        p = plan_of(hq.QUERIES[qname](spark, sf_dir))
+        check(f"no_cartesian({qname})",
+              "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p)
+        check(f"broadcast({qname} queries)", "BroadcastExchange" in p)
+        n_kern = len(re.findall(r"^\(\d+\) MapInPandas", p, re.M))
+        check(f"one_kernel_pass({qname})", n_kern == 1,
+              detail=f"{n_kern} MapInPandas")
 
     # 36. S4 pruned REST scan, in-plan: the site IN-filter must be
     #     CONSUMED by pushFilters (no post-scan Filter survives) and

@@ -24,7 +24,7 @@ Generation is pure DuckDB (no Spark session): one COPY per table,
 single-file output, deterministic.
 
 Usage: python tools/make_scale_fixture.py [N] [out_dir] [src_dir]
-Defaults: N=10, out=/root/repo/.scale/sf1eq, src=/root/testdata/sf0.1
+Defaults: N=10, out=<checkout>/.scale/sf1eq, src=the sf0.1 fixture (SRC below).
 """
 
 from __future__ import annotations
@@ -36,7 +36,9 @@ import time
 import duckdb
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale/sf1eq"
+OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1eq"
+)
 SRC = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 
 # per-replica key offsets: larger than any base key space

@@ -25,10 +25,11 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def table_scans(plan: str) -> dict[str, int]:

@@ -5,8 +5,7 @@
 #   tools/sweep_sf1eq.sh <entry-list-file> <log-file> [chunk-size] [fixture-dir]
 set -u
 LIST="$1"; LOG="$2"; CHUNK="${3:-16}"; FIXTURE="${4:-.scale/sf1eq}"
-export PYSPARK_SUBMIT_ARGS="--driver-memory 48g pyspark-shell"
-cd /root/repo
+cd "$(dirname "$0")/.."
 mapfile -t ENTRIES < "$LIST"
 total=${#ENTRIES[@]}
 echo "sweep start: $total entries, chunk=$CHUNK, fixture=$FIXTURE" | tee -a "$LOG"
