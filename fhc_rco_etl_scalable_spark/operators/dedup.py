@@ -1301,7 +1301,6 @@ def substring_dedup(
     id_col: str,
     text_col: str,
     min_tokens: int = 8,
-    materialize_grams: bool = False,
 ) -> DataFrame:
     """Corpus-wide exact repeated-substring removal (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better": remove
@@ -1333,16 +1332,6 @@ def substring_dedup(
     it); the interval merge shuffles on the doc id. At 100 TB the
     gram key-space dominates the shuffle exactly like the paper's
     suffix-array build dominates theirs; nothing is quadratic.
-
-    ``materialize_grams`` localCheckpoints the positional gram table,
-    whose explode subtree otherwise re-derives for both consumers (the
-    duplicate-gram aggregate and the position join) — the same trade
-    jaccard_pairs' ``materialize`` makes, but this table is one row
-    per TOKEN POSITION (corpus-token-scale, much bigger than the
-    shingle set). Off by default: measured at sf0.1 (r14 scan-audit
-    A/B) the write-out of the full gram table costs more than the
-    saved re-explode; prefer it only when executor storage is cheap
-    relative to the text scan (e.g. remote object-store input).
     """
     from pyspark.sql.window import Window
 
@@ -1366,8 +1355,6 @@ def substring_dedup(
             )
         ).alias("pos", "gram"),
     )
-    if materialize_grams:
-        grams = grams.localCheckpoint(eager=False)
     dup = (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -1420,7 +1407,6 @@ def domain_mixture(
     id_col: str,
     total_budget: int,
     salt: str = "mix",
-    materialize_counts: bool = False,
 ) -> DataFrame:
     """Budget-constrained domain-mixture sampling: give every domain an
     equal share of ``total_budget`` documents and take a deterministic
@@ -1436,19 +1422,8 @@ def domain_mixture(
     Scale: one count aggregation over the domain column (tiny result),
     the rate table broadcasts back onto the corpus, and selection is a
     map-side filter — the full pass never shuffles the fact table.
-
-    ``materialize_counts`` localCheckpoints the domain-cardinality
-    aggregate, whose subtree otherwise re-derives from the corpus for
-    both consumers (the n_domains scalar and the rate table) — 3
-    corpus scans instead of 2 (the selection join's scan is
-    inherent). Off by default: measured no win at sf0.1 (r14
-    scan-audit A/B — the duplicated subtree is a map-side count, below
-    the barrier break-even); at cluster scale the saved scan is
-    corpus-sized, so turn it on there.
     """
     counts = df.groupBy(domain_col).agg(F.count(F.lit(1)).alias("avail"))
-    if materialize_counts:
-        counts = counts.localCheckpoint(eager=False)
     n_domains = counts.select(
         F.count(F.lit(1)).cast("double").alias("n_domains")
     )

@@ -33,23 +33,12 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    materialize_tf: bool = False,
 ) -> DataFrame:
     """Top-``k`` documents for a keyword ``query`` under BM25.
 
     Returns (id_col, score, rank) with ``score`` rounded to 6 decimals
     and ranks tie-broken by id — the rounded score keeps the ordering
     stable across engines/libm ulp differences.
-
-    ``materialize_tf`` localCheckpoints the per-(doc, term) postings
-    aggregate, whose subtree (scan + tokenize + explode + filter +
-    groupBy) otherwise re-derives for BOTH consumers (the score join
-    and the document-frequency rollup) — 2 corpus text passes instead
-    of 1. Off by default: at sf0.1 the barrier costs more than the
-    saved pass (measured r14, scan-audit A/B); at cluster scale where
-    the corpus scan dominates, turn it on (or persist tf to a table).
-    The third scan — the (N, avgdl) corpus scalars — is an inherent
-    separate stats pass either way.
     """
     terms = sorted({t.lower() for t in query.split() if t})
     if not terms:
@@ -63,8 +52,6 @@ def bm25_topk(
     # map-side selectivity: only query-term postings survive the scan
     hits = toks.filter(F.col("__t").isin(terms))
     tf = hits.groupBy(id_col, "__t", "__dl").agg(F.count("*").alias("__tf"))
-    if materialize_tf:
-        tf = tf.localCheckpoint(eager=False)
 
     df_counts = tf.groupBy("__t").agg(F.count("*").alias("__df"))
     corpus = docs.agg(

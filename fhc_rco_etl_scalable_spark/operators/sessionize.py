@@ -159,7 +159,6 @@ def sessionize_stitched(
     session_col: str = "session_num",
     session_id: Column | None = None,
     session_id_col: str = "session_id",
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """Composite-partition sessionization with boundary stitching —
     the 100 TB formulation of :func:`sessionize`.
@@ -193,12 +192,9 @@ def sessionize_stitched(
     ``prev_*`` columns are dropped from the output (they are NULL at
     bucket boundaries, not the true previous row).
 
-    ``broadcast_offsets`` (default True): the offsets frame has one row
-    per non-empty (key, bucket) — tiny when key cardinality is modest
-    (the skewed-few-lines regime this operator targets). With millions
-    of keys x many buckets it can exceed broadcast/driver limits; pass
-    False to route the correction through an ordinary shuffle join on
-    (key, bucket) instead. Semantics are identical.
+    The offsets frame has one row per non-empty (key, bucket), so it
+    is tiny in the skewed-few-keys regime this operator targets and is
+    always broadcast.
     """
     partition_by = list(partition_by)
     order_by = list(order_by)
@@ -266,9 +262,7 @@ def sessionize_stitched(
             F.lit(0),
         ).alias("__off"),
     )
-    if broadcast_offsets:
-        offs = F.broadcast(offs)
-    out = base.join(offs, [*partition_by, "__bkt"], "left").withColumn(
+    out = base.join(F.broadcast(offs), [*partition_by, "__bkt"], "left").withColumn(
         session_col, (F.col("__local_p1") + F.col("__delta") + F.col("__off")).cast("long")
     )
     if session_id is not None:

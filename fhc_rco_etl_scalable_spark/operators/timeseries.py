@@ -114,7 +114,6 @@ def lttb_downsample(
     value_col: str,
     id_col: str,
     n_out: int,
-    materialize_pts: bool = False,
 ) -> DataFrame:
     """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013)
     per key series, bucket-parallel variant.
@@ -136,15 +135,6 @@ def lttb_downsample(
     Shape: one (keys) exchange for the row numbering; the bucket
     averages are one aggregate over that same partitioning; the
     anchor attach is a broadcast-sized join back (k rows per key).
-
-    ``materialize_pts`` localCheckpoints the row-numbered point frame,
-    whose scan+window subtree otherwise re-derives for its consumers
-    (the bucket averages and the candidate join; the join's two
-    branches re-derive it again) — 3-4 source scans instead of 1. Off
-    by default: the frame is full-data-sized and at sf0.1 the barrier
-    write-out costs more than the saved re-scans (r14 scan-audit A/B);
-    at cluster scale against remote storage the saved scans dominate,
-    so turn it on there.
     """
     keys = list(keys)
     pts = df.select(
@@ -165,8 +155,6 @@ def lttb_downsample(
     pts = pts.withColumn(
         "bucket", F.expr(f"CAST(__rn AS BIGINT) * {int(n_out)} DIV __n")
     )
-    if materialize_pts:
-        pts = pts.localCheckpoint(eager=False)
 
     avgs = pts.groupBy(*keys, "bucket").agg(
         (

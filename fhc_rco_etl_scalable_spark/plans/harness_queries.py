@@ -18,11 +18,13 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+import uuid
 from collections.abc import Callable
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..sources.parquet import _path_fingerprint, load_table
 from ..operators.asof import asof_join
@@ -782,7 +784,6 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     same two-step application."""
     import shutil
     import tempfile
-    import uuid
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     n_batches = 2  # 1 cross-batch index carry (the point)
@@ -3124,7 +3125,7 @@ def _staged_file_stream(
 
 
 def _ensure_trailing_empty_batch(
-    spark: SparkSession, src: str, schema_txt: str, prefix: str
+    spark: SparkSession, src: str, schema: StructType, prefix: str
 ) -> None:
     """Idempotently add a ZERO-ROW trailing parquet file (newest
     mtime) to a staged streaming source dir.
@@ -3149,7 +3150,7 @@ def _ensure_trailing_empty_batch(
         if not f.endswith("zz-trailing-empty.parquet")
     )
     if not _os.path.exists(target):
-        empty = spark.createDataFrame([], schema_txt)
+        empty = spark.createDataFrame([], schema)
         tmpd = _tempfile.mkdtemp(prefix=f"{prefix}-empty-")
         try:
             empty.coalesce(1).write.mode("overwrite").parquet(
@@ -3160,6 +3161,65 @@ def _ensure_trailing_empty_batch(
         finally:
             _shutil.rmtree(tmpd, ignore_errors=True)
     _os.utime(target, (data_mtime + 1, data_mtime + 1))
+
+
+def _replay(
+    spark: SparkSession,
+    feed: DataFrame,
+    n_batches: int,
+    order_cols: list[str],
+    prefix: str,
+    sf_dir: str,
+    build: Callable[[DataFrame], DataFrame],
+    *,
+    mode: str = "append",
+    partitions: int = 4,
+    drain: bool = False,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Replay ``feed`` as a deterministic availableNow file stream
+    through ``build`` into a memory sink and return the sink table —
+    the one stage/start/await/count/stop protocol every memory-sink
+    streaming entry shares.
+
+    The feed is staged as ``n_batches`` event-time slices on
+    ``order_cols`` (:func:`_staged_file_stream`, keyed by ``prefix``)
+    and read back one file per trigger under a shuffle width of
+    ``partitions`` (:func:`_clamped_shuffle`). ``drain`` appends the
+    zero-row trailing batch that applies a sentinel-advanced watermark
+    (:func:`_ensure_trailing_empty_batch`), so ``n_batches + 1``
+    micro-batches are expected. ``checkpoint`` pins the query's
+    checkpoint directory (default: a temporary one). The query is
+    stopped whether or not it terminates in time."""
+    expected = n_batches + 1 if drain else n_batches
+    with _clamped_shuffle(spark, partitions):
+        src = _staged_file_stream(feed, n_batches, order_cols, prefix, sf_dir)
+        if drain:
+            _ensure_trailing_empty_batch(spark, src, feed.schema, prefix)
+        events = (
+            spark.readStream.schema(feed.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        name = f"{prefix.removeprefix('sg-')}_harness_{uuid.uuid4().hex[:8]}"
+        writer = (
+            build(events).writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+        )
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        q = writer.start()
+        try:
+            assert q.awaitTermination(300), f"{name}: stream timed out"
+            n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
+        finally:
+            q.stop()
+        assert n_microbatches >= expected, (
+            f"{name}: expected >= {expected} micro-batches, got {n_microbatches}"
+        )
+    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -3202,19 +3262,17 @@ def _harness_co_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_sessionize_stream(spark: SparkSession, sf_dir: str) -> str:
+def _run_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the applyInPandasWithState sessionizer over the staged CO
-    feed with an explicit checkpoint; return the memory-sink table
-    name. Once the query has terminated its checkpoint is published at
+    feed with an explicit checkpoint; return the memory-sink table.
+    Once the query has terminated its checkpoint is published at
     :func:`_sess_checkpoint`, superseding any previous one, so the
     state reader can inspect it."""
     import shutil
     import tempfile
-    import uuid
 
     from ..streaming.sessionize_stream import streaming_sessionize
 
-    co = _harness_co_feed(spark, sf_dir)
     # 2 data micro-batches = 1 cross-batch state carry under the hash
     # gate — the time-sliced cut lands mid-session for many of the
     # 1451 LINE groups, so carried python-state is exercised broadly,
@@ -3227,43 +3285,23 @@ def _run_sessionize_stream(spark: SparkSession, sf_dir: str) -> str:
     # 16, not the JVM-stateful default 4: applyInPandasWithState cost
     # is per-group python state protocol, which parallelizes (see
     # _clamped_shuffle docstring grid).
-    with _clamped_shuffle(spark, 16):
-        src = _staged_file_stream(
-            co, n_batches, ["START_TIME", "downtime_id"], "sg-sess", sf_dir
-        )
-        events = (
-            spark.readStream.schema(co.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sessions = streaming_sessionize(events, p_minutes=30.0)
-        name = f"sess_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming sessionize harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches, (
-            f"expected >= {n_batches} micro-batches, got {n_microbatches}"
-        )
+    sessions = _replay(
+        spark, _harness_co_feed(spark, sf_dir), n_batches,
+        ["START_TIME", "downtime_id"], "sg-sess", sf_dir,
+        lambda events: streaming_sessionize(events, p_minutes=30.0),
+        partitions=16, checkpoint=chk,
+    )
     published = _sess_checkpoint(sf_dir)
     shutil.rmtree(published, ignore_errors=True)
     os.rename(chk, published)
-    return name
+    return sessions
 
 
 @query("streaming_sessionize_harness", _STREAMING_SESS_ORACLE)
 def q_streaming_sessionize_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = _run_sessionize_stream(spark, sf_dir)
     # the memory sink holds the rows driver-side; the source files
     # are no longer needed once the query has terminated.
-    return spark.table(name).select(
+    return _run_sessionize_stream(spark, sf_dir).select(
         "LINE", "downtime_id", "START_TIME", "CO_Identifier"
     )
 
@@ -3678,45 +3716,23 @@ FROM ds GROUP BY 1, 2
 
 @query("streaming_tumbling_harness", _STREAMING_TUMBLING_ORACLE)
 def q_streaming_tumbling_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from ..streaming.sessionize_stream import streaming_runtime_per_day
 
     feed = harness_downtime_log(spark, sf_dir).select("LINE", "START_TIME", "UPTIME")
     n_batches = 2  # 1 cross-batch window-state carry (r9 floor grid:
     # 3b 2.1 s -> 2b 1.55 s; boundary windows still span the batch cut)
-    with _clamped_shuffle(spark):
-        src = _staged_file_stream(
-            feed, n_batches, ["START_TIME", "LINE"], "sg-tumb", sf_dir
-        )
-        events = (
-            spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        rollup = streaming_runtime_per_day(events)
-        name = f"tumb_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            rollup.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming tumbling harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches, (
-            f"expected >= {n_batches} micro-batches, got {n_microbatches}"
-        )
-        # ISO-string Date on both engines (VERDICT r13 #4): Spark DATE
-        # lands in pandas as 'O' vs DuckDB's 'M', so the old hash
-        # leaned on the driver canon's midnight collapse.
-        return spark.table(name).select(
-            F.date_format("Date", "yyyy-MM-dd").alias("Date"),
-            "LINE",
-            F.round("Runtime", 2).alias("Runtime"),
-        )
+    rollup = _replay(
+        spark, feed, n_batches, ["START_TIME", "LINE"], "sg-tumb", sf_dir,
+        streaming_runtime_per_day, mode="complete",
+    )
+    # ISO-string Date on both engines (VERDICT r13 #4): Spark DATE
+    # lands in pandas as 'O' vs DuckDB's 'M', so the old hash
+    # leaned on the driver canon's midnight collapse.
+    return rollup.select(
+        F.date_format("Date", "yyyy-MM-dd").alias("Date"),
+        "LINE",
+        F.round("Runtime", 2).alias("Runtime"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3739,44 +3755,23 @@ GROUP BY 1, 2
 
 @query("streaming_hopping_harness", _STREAMING_HOPPING_ORACLE)
 def q_streaming_hopping_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from ..streaming.sessionize_stream import streaming_hopping_runtime
 
     feed = harness_downtime_log(spark, sf_dir).select("LINE", "START_TIME", "UPTIME")
     n_batches = 2  # 1 cross-batch window-state carry, same floor
     # accounting as the tumbling twin (overlap makes boundary windows
     # span the batch cut on BOTH sides of the hop).
-    with _clamped_shuffle(spark):
-        src = _staged_file_stream(
-            feed, n_batches, ["START_TIME", "LINE"], "sg-hop", sf_dir
-        )
-        events = (
-            spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        rollup = streaming_hopping_runtime(events, size_days=2, slide_days=1)
-        name = f"hop_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            rollup.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming hopping harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches, (
-            f"expected >= {n_batches} micro-batches, got {n_microbatches}"
-        )
-        # ISO-string WindowStart on both engines (r14 WARN sweep).
-        return spark.table(name).select(
-            F.date_format("WindowStart", "yyyy-MM-dd").alias("WindowStart"),
-            "LINE",
-            F.round("Runtime", 2).alias("Runtime"),
-        )
+    rollup = _replay(
+        spark, feed, n_batches, ["START_TIME", "LINE"], "sg-hop", sf_dir,
+        lambda events: streaming_hopping_runtime(events, size_days=2, slide_days=1),
+        mode="complete",
+    )
+    # ISO-string WindowStart on both engines (r14 WARN sweep).
+    return rollup.select(
+        F.date_format("WindowStart", "yyyy-MM-dd").alias("WindowStart"),
+        "LINE",
+        F.round("Runtime", 2).alias("Runtime"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4489,8 +4484,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (7 days vs the 1-day key recurrence window), so the
     streamed first-arrival key set equals the batch DISTINCT —
     hash-compared via the driver oracle."""
-    import uuid
-
     from ..streaming.dedup_stream import streaming_exact_dedup
 
     feed = (
@@ -4500,38 +4493,18 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n_batches = 2  # 1 cross-batch dedup-state carry (r9 floor work)
-    with _clamped_shuffle(spark):
-        src = _staged_file_stream(
-            feed, n_batches, ["ts", "user_id"], "sg-dedup", sf_dir
-        )
-        stream = (
-            spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        deduped = streaming_exact_dedup(
+    deduped = _replay(
+        spark, feed, n_batches, ["ts", "user_id"], "sg-dedup", sf_dir,
+        lambda stream: streaming_exact_dedup(
             stream, ["user_id", "event_type", "Date"], event_time="ts", delay="7 days"
-        )
-        name = f"dedup_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming dedup harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches, (
-            f"expected >= {n_batches} micro-batches, got {n_microbatches}"
-        )
-        # ISO-string Date on both engines (r14 WARN sweep)
-        return spark.table(name).select(
-            "user_id",
-            "event_type",
-            F.date_format("Date", "yyyy-MM-dd").alias("Date"),
-        )
+        ),
+    )
+    # ISO-string Date on both engines (r14 WARN sweep)
+    return deduped.select(
+        "user_id",
+        "event_type",
+        F.date_format("Date", "yyyy-MM-dd").alias("Date"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4729,8 +4702,6 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks; Spark bounds each side's join state from the range
     predicate. availableNow ordered replay + generous watermark ==
     exactly the batch join, hash-compared via the oracle."""
-    import uuid
-
     from ..streaming.join_stream import stream_stream_interval_join
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -4743,13 +4714,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state commit is CPU-side serialization, tmpfs checkpoints were
     # measured flat).
     n_batches = 2
-    with _clamped_shuffle(spark, 2):
-        src = _staged_file_stream(ev, n_batches, ["ts", "event_id"], "sg-ssj", sf_dir)
-        feed = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+
+    def build(feed: DataFrame) -> DataFrame:
         purchases = feed.filter(F.col("event_type") == "purchase").select(
             "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
         )
@@ -4762,25 +4728,17 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             purchases, views, key="user_id",
             left_time="p_ts", right_time="v_ts", lookback="1 hour",
         )
-        out = joined.select(
+        return joined.select(
             F.col("l.user_id").alias("user_id"),
             F.col("l.p_id").alias("purchase_id"),
             F.col("r.v_id").alias("view_id"),
             (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
         )
-        name = f"ssj_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "stream-stream join harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches
-        return spark.table(name)
+
+    return _replay(
+        spark, ev, n_batches, ["ts", "event_id"], "sg-ssj", sf_dir, build,
+        partitions=2,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5877,10 +5835,12 @@ WHERE levenshtein(a.p_name, b.p_name) <= 4
 )
 def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked edit-distance self-match over part names
-    (operators/fuzzy.py::fuzzy_self_match): length banding generates
-    candidates (|len diff| <= d is necessary for levenshtein <= d),
-    exact verify after. The DuckDB oracle brute-forces all pairs —
-    equality of the two proves the banding loses nothing."""
+    (operators/fuzzy.py::fuzzy_self_match): segment-pigeonhole
+    blocking generates candidates (a name within d edits keeps one of
+    the other's d+1 segments verbatim, so the candidate join is an
+    equi-join on (length, segment index, segment text)), exact verify
+    after. The DuckDB oracle brute-forces all pairs — equality of the
+    two proves the blocking loses nothing."""
     from ..operators.fuzzy import fuzzy_self_match
 
     part = load_table(spark, "part", sf_dir)
@@ -6019,8 +5979,6 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions per batch (no state store at all — static sides are
     re-broadcast, the canonical pattern for slowly-refreshed dims).
     Stateless, so streamed output == the batch join, hash-verified."""
-    import uuid
-
     from pyspark.sql.functions import broadcast
 
     cust = load_table(spark, "customer", sf_dir).select(
@@ -6033,16 +5991,9 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value", "ts"
     )
     n_batches = 2  # stateless: 2 batches still prove per-batch re-join
-    with _clamped_shuffle(spark):
-        src = _staged_file_stream(
-            ev, n_batches, ["ts", "event_id"], "sg-enrich", sf_dir
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        enriched = (
+    return _replay(
+        spark, ev, n_batches, ["ts", "event_id"], "sg-enrich", sf_dir,
+        lambda stream: (
             stream.filter(F.col("event_type") == "error")
             .join(broadcast(cust), F.col("user_id") % 150 == F.col("cust_mod"))
             .join(broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -6053,22 +6004,8 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_name").alias("nation_name"),
                 "value",
             )
-        )
-        name = f"enrich_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            enriched.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming enrich harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches, (
-            f"expected >= {n_batches} micro-batches, got {n_microbatches}"
-        )
-        return spark.table(name)
+        ),
+    )
 
 
 @query(
@@ -8846,7 +8783,6 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     (module doc of streaming/join_stream.py) is what makes the outer
     side deterministic on a bounded replay."""
     import datetime as _dt
-    import uuid
 
     from ..streaming.join_stream import stream_stream_interval_join
 
@@ -8868,26 +8804,17 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     # other, 2h > lookback+delay). The single ZERO-ROW trailing batch
     # is what applies the advanced watermark (real-max + 30d - delay)
     # and drains every real unmatched purchase: 2 micro-batches total.
-    schema_txt = "user_id long, event_id long, ts timestamp, event_type string"
     staged = ev.unionByName(
         spark.createDataFrame(
             [
                 (-1, -1, max_ts + _dt.timedelta(days=30), "purchase"),
                 (-1, -2, max_ts + _dt.timedelta(days=30, hours=2), "view"),
             ],
-            schema_txt,
+            "user_id long, event_id long, ts timestamp, event_type string",
         )
     )
-    with _clamped_shuffle(spark, 2):
-        src = _staged_file_stream(
-            staged, n_batches, ["ts", "event_id"], "sg-ssjo", sf_dir
-        )
-        _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-ssjo")
-        feed = (
-            spark.readStream.schema(schema_txt)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+
+    def build(feed: DataFrame) -> DataFrame:
         purchases = feed.filter(F.col("event_type") == "purchase").select(
             "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
         )
@@ -8901,34 +8828,26 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
             left_time="p_ts", right_time="v_ts", lookback="1 hour",
             delay="1 minute", how="left_outer",
         )
-        # The sentinel filter must stay OUT of the streaming query:
-        # user_id >= 0 is a predicate on the equi-join KEY, so Catalyst
-        # legally pushes it through the join into BOTH source scans —
-        # which prunes the sentinel rows before the watermark operator
-        # ever sees them, and the watermark (computed post-scan) never
-        # passes the real data. Found the hard way: offsets advanced,
-        # srcIn=0, one unmatched purchase never drained. Filter on the
-        # SINK table instead (a batch query, outside the stream).
-        out = joined.select(
+        return joined.select(
             F.col("l.user_id").alias("user_id"),
             F.col("l.p_id").alias("purchase_id"),
             F.col("r.v_id").alias("view_id"),
             (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
         )
-        name = f"ssjo_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "outer stream-stream join timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        # data batch (sentinels riding along) + zero-row applier
-        assert n_microbatches >= n_batches + 1
-        return spark.table(name).filter(F.col("user_id") >= 0)
+
+    out = _replay(
+        spark, staged, n_batches, ["ts", "event_id"], "sg-ssjo", sf_dir, build,
+        partitions=2, drain=True,
+    )
+    # The sentinel filter must stay OUT of the streaming query:
+    # user_id >= 0 is a predicate on the equi-join KEY, so Catalyst
+    # legally pushes it through the join into BOTH source scans —
+    # which prunes the sentinel rows before the watermark operator
+    # ever sees them, and the watermark (computed post-scan) never
+    # passes the real data. Found the hard way: offsets advanced,
+    # srcIn=0, one unmatched purchase never drained. Filter on the
+    # SINK table instead (a batch query, outside the stream).
+    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -9516,8 +9435,6 @@ def q_streaming_ewma_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user streaming EWMA (alpha = 1/2) over two event-time
     sliced micro-batches, state carried across the slice; per-row
     values hashed unrounded against the batch fold."""
-    import uuid
-
     from ..streaming.ewma_stream import streaming_ewma
 
     feed = (
@@ -9526,31 +9443,10 @@ def q_streaming_ewma_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_id", "ts", "value")
     )
     n_batches = 2  # 1 cross-batch numeric-state carry
-    with _clamped_shuffle(spark):
-        src = _staged_file_stream(
-            feed, n_batches, ["ts", "event_id"], "sg-ewma", sf_dir
-        )
-        stream = (
-            spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        smoothed = streaming_ewma(stream, alpha=0.5)
-        name = f"ewma_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            smoothed.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming ewma harness timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches, (
-            f"expected >= {n_batches} micro-batches, got {n_microbatches}"
-        )
-        return spark.table(name)
+    return _replay(
+        spark, feed, n_batches, ["ts", "event_id"], "sg-ewma", sf_dir,
+        lambda stream: streaming_ewma(stream, alpha=0.5),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10060,58 +9956,34 @@ def q_streaming_unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     single zero-row trailing batch applies it: n_batches + 1
     micro-batches total, each stateful batch carrying real work."""
     import datetime as _dt
-    import uuid
 
     ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts")
     max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
-    schema_txt = "user_id long, event_id long, ts timestamp"
     staged = ev.unionByName(
         spark.createDataFrame(
-            [(-1, -1, max_ts + _dt.timedelta(days=30))], schema_txt
+            [(-1, -1, max_ts + _dt.timedelta(days=30))],
+            "user_id long, event_id long, ts timestamp",
         )
     )
     n_batches = 2  # 1 cross-batch DEDUP-state carry (the point)
-    with _clamped_shuffle(spark, 2):
-        src = _staged_file_stream(
-            staged, n_batches, ["ts", "event_id"], "sg-uniq", sf_dir
-        )
-        _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-uniq")
-        feed = (
-            spark.readStream.schema(schema_txt)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        visitors = (
+    visitors = _replay(
+        spark, staged, n_batches, ["ts", "event_id"], "sg-uniq", sf_dir,
+        lambda feed: (
             feed.withWatermark("ts", "1 minute")
             .withColumn("day", F.date_trunc("day", F.col("ts")))
             .dropDuplicates(["day", "user_id"])
             .groupBy(F.window("ts", "1 day").alias("w"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_visitors"))
             .select(F.col("w.start").cast("date").alias("Date"), "n_visitors")
-        )
-        name = f"uniq_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            visitors.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "unique-visitors stream timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches + 1
-        # the sentinel's own far-future window never closes, so it
-        # never reaches the sink; the bound filter is defensive only.
-        # ISO-string Date on both engines (r14 WARN sweep).
-        return (
-            spark.table(name)
-            .filter(F.col("Date") <= F.lit(max_ts.date()))
-            .select(
-                F.date_format("Date", "yyyy-MM-dd").alias("Date"),
-                "n_visitors",
-            )
-        )
+        ),
+        partitions=2, drain=True,
+    )
+    # the sentinel's own far-future window never closes, so it
+    # never reaches the sink; the bound filter is defensive only.
+    # ISO-string Date on both engines (r14 WARN sweep).
+    return visitors.filter(F.col("Date") <= F.lit(max_ts.date())).select(
+        F.date_format("Date", "yyyy-MM-dd").alias("Date"), "n_visitors"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10141,28 +10013,19 @@ def q_streaming_unique_visitors_wm(spark: SparkSession, sf_dir: str) -> DataFram
     max+30d row rides IN the last data batch (watermarks update at
     batch end) and the single zero-row trailing batch applies it."""
     import datetime as _dt
-    import uuid
 
     ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts")
     max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
-    schema_txt = "user_id long, event_id long, ts timestamp"
     staged = ev.unionByName(
         spark.createDataFrame(
-            [(-1, -1, max_ts + _dt.timedelta(days=30))], schema_txt
+            [(-1, -1, max_ts + _dt.timedelta(days=30))],
+            "user_id long, event_id long, ts timestamp",
         )
     )
     n_batches = 2  # 1 cross-batch DEDUP-state carry (the point)
-    with _clamped_shuffle(spark, 2):
-        src = _staged_file_stream(
-            staged, n_batches, ["ts", "event_id"], "sg-uniqwm", sf_dir
-        )
-        _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-uniqwm")
-        feed = (
-            spark.readStream.schema(schema_txt)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        visitors = (
+    visitors = _replay(
+        spark, staged, n_batches, ["ts", "event_id"], "sg-uniqwm", sf_dir,
+        lambda feed: (
             # 2-day delay: a (day, user) pair's duplicates span < 24h
             # of event time and batches arrive ts-ordered, so every
             # duplicate lands while the first occurrence's state is
@@ -10174,30 +10037,15 @@ def q_streaming_unique_visitors_wm(spark: SparkSession, sf_dir: str) -> DataFram
             .groupBy(F.window("ts", "1 day").alias("w"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_visitors"))
             .select(F.col("w.start").cast("date").alias("Date"), "n_visitors")
-        )
-        name = f"uniqwm_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            visitors.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "unique-visitors-wm stream timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches + 1
-        # the sentinel's own far-future window never closes, so it
-        # never reaches the sink; the bound filter is defensive only.
-        # ISO-string Date on both engines (r14 WARN sweep).
-        return (
-            spark.table(name)
-            .filter(F.col("Date") <= F.lit(max_ts.date()))
-            .select(
-                F.date_format("Date", "yyyy-MM-dd").alias("Date"),
-                "n_visitors",
-            )
-        )
+        ),
+        partitions=2, drain=True,
+    )
+    # the sentinel's own far-future window never closes, so it
+    # never reaches the sink; the bound filter is defensive only.
+    # ISO-string Date on both engines (r14 WARN sweep).
+    return visitors.filter(F.col("Date") <= F.lit(max_ts.date())).select(
+        F.date_format("Date", "yyyy-MM-dd").alias("Date"), "n_visitors"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10470,7 +10318,6 @@ def q_streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFram
     BOTH watermarks at its end; the single zero-row trailing batch
     applies them (r12 floor accounting)."""
     import datetime as _dt
-    import uuid
 
     from ..streaming.join_stream import stream_stream_interval_join
 
@@ -10478,27 +10325,18 @@ def q_streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFram
         "user_id", "event_id", "ts", "event_type"
     )
     max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
-    schema_txt = "user_id long, event_id long, ts timestamp, event_type string"
     staged = ev.unionByName(
         spark.createDataFrame(
             [
                 (-1, -1, max_ts + _dt.timedelta(days=30), "purchase"),
                 (-1, -2, max_ts + _dt.timedelta(days=30, hours=2), "view"),
             ],
-            schema_txt,
+            "user_id long, event_id long, ts timestamp, event_type string",
         )
     )
     n_batches = 1  # cross-batch carry is the inner twin's concern
-    with _clamped_shuffle(spark, 2):
-        src = _staged_file_stream(
-            staged, n_batches, ["ts", "event_id"], "sg-ssjf", sf_dir
-        )
-        _ensure_trailing_empty_batch(spark, src, schema_txt, "sg-ssjf")
-        feed = (
-            spark.readStream.schema(schema_txt)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+
+    def build(feed: DataFrame) -> DataFrame:
         purchases = feed.filter(F.col("event_type") == "purchase").select(
             "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
         )
@@ -10512,29 +10350,23 @@ def q_streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFram
             left_time="p_ts", right_time="v_ts", lookback="1 hour",
             delay="1 minute", how="full_outer",
         )
-        # sentinel filter stays OUT of the stream (see the outer twin:
-        # an equi-key predicate pushes into both scans and stalls the
-        # watermark); the sink filter needs BOTH sides' user_id since
-        # either may be the null-padded one.
-        out = joined.select(
+        # the sink filter needs BOTH sides' user_id since either may
+        # be the null-padded one.
+        return joined.select(
             F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
             F.col("l.p_id").alias("purchase_id"),
             F.col("r.v_id").alias("view_id"),
             (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
         )
-        name = f"ssjf_harness_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "full stream-stream join timed out"
-        n_microbatches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-        q.stop()
-        assert n_microbatches >= n_batches + 1
-        return spark.table(name).filter(F.col("user_id") >= 0)
+
+    out = _replay(
+        spark, staged, n_batches, ["ts", "event_id"], "sg-ssjf", sf_dir, build,
+        partitions=2, drain=True,
+    )
+    # sentinel filter stays OUT of the stream (see the outer twin: an
+    # equi-key predicate pushes into both scans and stalls the
+    # watermark).
+    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------

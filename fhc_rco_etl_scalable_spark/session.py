@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import threading
 
 from pyspark.sql import SparkSession
@@ -29,12 +30,19 @@ def _default_driver_mem() -> str:
 
 
 def env_int(name: str, default: int) -> int:
-    """Integer env knob; an unset or malformed value (e.g. "2MiB")
-    falls back to ``default`` instead of raising mid-run."""
+    """Positive integer env knob; an unset, malformed (e.g. "2MiB")
+    or non-positive value falls back to ``default`` instead of raising
+    mid-run."""
     try:
-        return int(os.environ[name])
+        value = int(os.environ[name])
     except (KeyError, ValueError):
         return default
+    return value if value > 0 else default
+
+
+#: A JVM byte string as Spark parses it: digits, an optional k/m/g/t
+#: unit, an optional trailing "b" ("512m", "4g", "2gb").
+_JVM_BYTES = re.compile(r"\d+[kmgt]?b?", re.IGNORECASE)
 
 
 def get_spark(
@@ -44,13 +52,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism,
-    ``SPARK_GRAFT_SHUFFLE`` the shuffle partition count.
+    Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism
+    (``local[*]`` when unset or malformed), ``SPARK_GRAFT_SHUFFLE`` the
+    shuffle partition count, ``SPARK_GRAFT_DRIVER_MEM`` the driver heap.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
+    cpus = env_int("SPARK_GRAFT_CPUS", 0)
+    master = master or (f"local[{cpus}]" if cpus else "local[*]")
     if shuffle_partitions is None:
         shuffle_partitions = env_int("SPARK_GRAFT_SHUFFLE", 32)
+    # a malformed heap size would abort the JVM launch
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "")
+    if not _JVM_BYTES.fullmatch(driver_mem):
+        driver_mem = _default_driver_mem()
 
     builder = (
         SparkSession.builder.master(master)
@@ -64,10 +77,7 @@ def get_spark(
         # gets a modest heap instead of an overcommitted 48g that the
         # OOM killer would reap mid-job). Only effective before the JVM
         # launches; a caller-provided session keeps its own setting.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
-        )
+        .config("spark.driver.memory", driver_mem)
         # AQE: runtime coalescing, skew-join splitting, plan re-opt.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,5 +1,5 @@
 """Session helpers: fast_planning's conf scoping under overlapping
-entrants, and integer env knobs that fall back on malformed values."""
+entrants, and env knobs that fall back on malformed values."""
 
 from types import SimpleNamespace
 
@@ -57,12 +57,13 @@ def test_fast_planning_threads_never_see_conf_restored_early(spark):
 
 
 class _Builder:
-    """Stands in for SparkSession.builder: records the configs."""
+    """Stands in for SparkSession.builder: records master and configs."""
 
     def __init__(self):
         self.conf = {}
 
-    def master(self, _):
+    def master(self, m):
+        self.conf["master"] = m
         return self
 
     def appName(self, _):
@@ -85,3 +86,24 @@ def test_malformed_shuffle_env_falls_back(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "12")
     assert S.get_spark().conf["spark.sql.shuffle.partitions"] == "12"
 
+
+def test_malformed_cpus_env_falls_back(monkeypatch):
+    monkeypatch.setattr(S, "SparkSession", SimpleNamespace(builder=_Builder()))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert S.get_spark().conf["master"] == "local[*]"
+    for bad in ("4x", "0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        assert S.get_spark().conf["master"] == "local[*]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert S.get_spark().conf["master"] == "local[3]"
+
+
+def test_malformed_driver_mem_env_falls_back(monkeypatch):
+    monkeypatch.setattr(S, "SparkSession", SimpleNamespace(builder=_Builder()))
+    default = S._default_driver_mem()
+    for bad in ("4 GiB", "lots", "g", ""):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", bad)
+        assert S.get_spark().conf["spark.driver.memory"] == default
+    for good in ("512m", "3g", "2gb", "1048576"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", good)
+        assert S.get_spark().conf["spark.driver.memory"] == good

@@ -404,3 +404,60 @@ def test_ssjo_match_in_later_batch_suppresses_null_pad(spark, tmp_path_factory):
     # P2: the null-pad must drain once the sentinel watermark applies.
     assert rows.count((200, None)) == 1
     assert len(rows) == 2
+
+
+# ---------------------------------------------------------------------------
+# The catalog's replay runner (plans/harness_queries.py::_replay): one
+# seeded feed through the drained two-batch protocol the sentinel
+# entries use.
+# ---------------------------------------------------------------------------
+
+
+def test_replay_drains_sentinel_feed_to_batch_result(spark, tmp_path):
+    """A daily unique-visitor rollup replayed in 2 micro-batches plus
+    the zero-row drain batch equals the batch count(DISTINCT); the
+    query is gone afterwards and the session's shuffle width is back
+    where it was."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from fhc_rco_etl_scalable_spark.plans.harness_queries import _replay
+
+    rng = random.Random(11)
+    t0 = datetime(2024, 3, 1)
+    rows = [
+        (rng.randrange(25), i, t0 + timedelta(minutes=rng.randrange(4 * 24 * 60)))
+        for i in range(300)
+    ]
+    # the sentinel rides in the last data batch and closes every real day
+    sentinel = (-1, -1, max(r[2] for r in rows) + timedelta(days=30))
+    feed = spark.createDataFrame(
+        rows + [sentinel], "user_id long, event_id long, ts timestamp"
+    )
+
+    def shuffle_setting():
+        explicit = {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+        return explicit.get("spark.sql.shuffle.partitions")
+
+    before = shuffle_setting()
+    sink = _replay(
+        spark, feed, 2, ["ts", "event_id"], "sg-replaytest", str(tmp_path),
+        lambda events: (
+            events.withWatermark("ts", "1 minute")
+            .withColumn("day", F.date_trunc("day", "ts"))
+            .dropDuplicates(["day", "user_id"])
+            .groupBy(F.window("ts", "1 day").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("w.start").alias("day"), "n")
+        ),
+        partitions=2, drain=True,
+    )
+    want = (
+        feed.filter(F.col("user_id") >= 0)
+        .groupBy(F.date_trunc("day", "ts").alias("day"))
+        .agg(F.countDistinct("user_id").alias("n"))
+    )
+    assert sorted(map(tuple, sink.collect())) == sorted(map(tuple, want.collect()))
+    assert not spark.streams.active
+    assert shuffle_setting() == before

@@ -163,11 +163,11 @@ def vanilla_spark():
     needs — the actual driver contract.  An entry that goes red here
     is a bug in the entry, never a reason to re-add a conf below.
     """
-    import os
-
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from fhc_rco_etl_scalable_spark.session import env_int
+
+    cpus = env_int("SPARK_GRAFT_CPUS", 32)
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("oracle-check-vanilla")

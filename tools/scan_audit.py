@@ -44,30 +44,30 @@ def table_scans(plan: str) -> dict[str, int]:
 # of pointing at PERFORMANCE.md prose. "wash"/"slower" = interleaved
 # min-of-3 A/B of the checkpoint variant at sf0.1 (the interleaved A/B
 # script tools/scanq_ab.py, since deleted; see git history. r14: bm25
-# 0.98x, domain_mixture 1.01x, substring 1.10x, lttb 0.95x);
-# each operator keeps a materialize_* knob for cluster scale, where
-# the saved corpus scan dominates the barrier cost.
+# 0.98x, domain_mixture 1.01x, substring 1.10x, lttb 0.95x). No
+# checkpoint variant won, so the operators carry none; git history
+# keeps the variants for a cluster-scale re-measure.
 ADJUDICATED: dict[str, str] = {
     "bm25_search": (
         "A/B wash (0.98x): tf-checkpoint saves 1 of 3 scans; corpus "
-        "stats pass inherent; knob bm25_topk(materialize_tf=True)"
+        "stats pass inherent; no checkpoint"
     ),
     "hybrid_rrf_search": (
         "inherent: composes bm25's postings+stats passes with the "
-        "embedding pass; improves iff bm25's knob is on"
+        "embedding pass; follows bm25_search"
     ),
     "domain_mixture": (
         "A/B wash (1.01x): duplicated subtree is a map-side count, "
-        "below barrier break-even; knob materialize_counts=True"
+        "below barrier break-even; no checkpoint"
     ),
     "substring_dedup": (
         "A/B slower (1.10x): gram table is corpus-token-scale, "
         "write-out beats the saved re-explode only off remote "
-        "storage; knob materialize_grams=True"
+        "storage; no checkpoint"
     ),
     "lttb_downsample": (
         "A/B wash (0.95x, within noise): pts frame is full-data-"
-        "sized; knob materialize_pts=True"
+        "sized; no checkpoint"
     ),
     "neighbor_feature_agg": (
         "A/B no win (r13: 0.67s vs 0.92s, high variance): sym "
