@@ -73,9 +73,10 @@ def _green_history() -> dict[str, int]:
     import json
     import re
 
+    here = os.path.dirname(os.path.abspath(__file__))
     green: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path)
+    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+        m = re.search(r"r(\d+)", os.path.basename(path))
         if not m:
             continue
         rnd = int(m.group(1))

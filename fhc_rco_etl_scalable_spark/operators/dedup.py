@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_fingerprint
+from ..session import release_checkpoint
 
 
 def md5_int(c: Column) -> Column:
@@ -697,10 +698,12 @@ def connected_components(
       Use for adversarial long-chain graphs where propagation would
       exceed the round bound.
 
-    Each round ``localCheckpoint``s its output to truncate lineage and
-    unpersists the previous round's checkpoint, so executor storage
-    stays O(1 round), not O(max_iterations). The driver loop inspects
-    only a tiny convergence aggregate per round (no data collected).
+    Each round ``localCheckpoint``s its output to truncate lineage and,
+    once the round's count has materialized it, releases the previous
+    round's checkpoint (``session.release_checkpoint``), so executor
+    storage stays O(1 round), not O(max_iterations). The driver loop
+    inspects only a tiny convergence aggregate per round (no data
+    collected).
     """
     if algorithm == "star":
         return _connected_components_star(edges, src, dst, max_iterations)
@@ -712,11 +715,11 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    labels = (
+    # ckpt is the current round's checkpoint frame; labels drops its
+    # __changed flag
+    ckpt = labels = (
         sym.select("u").distinct().select("u", F.col("u").alias("label"))
     ).localCheckpoint(eager=False)
-    prev = None  # previous round's eager checkpoint, unpersisted once superseded
-    converged = False
     for _ in range(max_iterations):
         # neighbor labels: for each node u, min label among v's labels
         nbr = (
@@ -724,7 +727,7 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        new_ckpt = (
             labels.join(nbr, "u", "left")
             .select(
                 "u",
@@ -737,15 +740,12 @@ def connected_components(
             )
             .localCheckpoint()  # eager: materialize once, reuse twice below
         )
-        changed = new_labels.filter(F.col("__changed")).limit(1).count()
-        if prev is not None:
-            prev.unpersist()  # ADVICE r4: don't accumulate 50 checkpoints
-        prev = new_labels
-        labels = new_labels.drop("__changed")
+        changed = new_ckpt.filter(F.col("__changed")).limit(1).count()
+        release_checkpoint(ckpt)
+        ckpt, labels = new_ckpt, new_ckpt.drop("__changed")
         if changed == 0:
-            converged = True
             break
-    if not converged:
+    else:
         # Silent partial convergence would split transitive clusters
         # and silently keep near-duplicate docs — fail loudly instead.
         raise RuntimeError(
@@ -806,7 +806,6 @@ def _connected_components_star(
         return (row.n, row.h)
 
     sig = signature(e)
-    converged = False
     for _ in range(max_iterations):
         # large-star: operate on the symmetric view; for each node u,
         # hook every neighbor v > u onto m = min(Γ(u) ∪ {u}).
@@ -833,13 +832,12 @@ def _connected_components_star(
         hooked = m_small.select("u", F.col("m").alias("v"))
         new_e = attach.unionByName(hooked).distinct().localCheckpoint()
         new_sig = signature(new_e)
-        e.unpersist()
+        release_checkpoint(e)
         e = new_e
         if new_sig == sig:
-            converged = True
             break
         sig = new_sig
-    if not converged:
+    else:
         raise RuntimeError(
             f"connected_components(star) did not converge in "
             f"{max_iterations} iterations — not expected for any graph "

@@ -1,40 +1,37 @@
-"""Link-analysis centrality (PageRank) as an iterative DataFrame loop.
+"""Graph operators over edge-list DataFrames: PageRank centrality,
+triangle census, bounded BFS, k-core peeling (fixed-round and to the
+fixed point), neighbor feature aggregation (one round and stacked),
+and deterministic label propagation (fixed-round and to the fixed
+point). Every result is exact integer arithmetic or an exact argmax,
+so each is reproducible bit-for-bit by a SQL oracle under any
+partitioning.
 
-Web-corpus pipelines weight crawl domains by link centrality before
-sampling (Common Crawl publishes harmonic-centrality / PageRank-style
-host rankings exactly for this; OpenWebText filtered by inbound-link
-karma).  This module ships the distributed part: fixed-iteration
-PageRank over an edge list, written the idiomatic Spark way — a
-driver-side loop over LAZY DataFrame plans with a lineage-truncating
-``localCheckpoint`` per iteration, so plan depth (and Catalyst
-re-analysis cost) stays O(1) in the iteration count instead of the
-O(iterations)-deep tree a naive loop builds.
+The iterative operators are driver-side loops over LAZY DataFrame
+plans. Each round ends in ``localCheckpoint``, which cuts the lineage,
+so plan depth (and Catalyst re-analysis cost) stays O(1) in the round
+count instead of growing one round per iteration.
 
-Arithmetic is INTEGER-SCALED (the catalog's margin_pairs micro-cosine
-precedent): ranks live as longs at ``scale``, per-edge contributions
-use integer division by out-degree, and the damping mix is integer
-``div`` — so every sum is exact whatever partition order executes it,
-and a SQL oracle reproduces the result bit-for-bit.  Float PageRank
-would hash-diverge on summation order alone.
+Checkpoint/release rule:
 
-Dangling nodes (no out-edges) simply leak their mass — the common
-simplification; the rule is part of the operator contract and the
-oracle transcribes it.
-
-Scale shape per iteration: one equi-join of ranks to edges on the
-source key, one aggregate on the destination key, one left join back
-to the node set — all key-partitioned shuffles, nothing quadratic.
-At cluster scale, pre-partition (or bucket) the edge list by source
-once and persist it; the per-iteration join then co-locates against
-the (much smaller) rank frame.
+- A fixed-round loop releases nothing. Its cuts are lazy and still
+  unmaterialized when the function returns; the caller's action
+  materializes them.
+- A loop run to the fixed point runs one count action per round. Once
+  that count has materialized the new round's checkpoint, nothing
+  reads the previous round any more, and the loop drops it with
+  :func:`~..session.release_checkpoint`. Executor storage then holds
+  O(1) rounds, not O(rounds). (``DataFrame.unpersist`` does not drop a
+  ``localCheckpoint`` RDD.)
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import release_checkpoint
 
 
 def pagerank(
@@ -45,7 +42,8 @@ def pagerank(
     scale: int = 10_000_000,
     damping_pct: int = 85,
 ) -> DataFrame:
-    """Fixed-iteration integer-scaled PageRank.
+    """Fixed-iteration integer-scaled PageRank (link centrality, as
+    web-corpus pipelines use to weight crawl hosts before sampling).
 
     ``edges``: a directed edge list (duplicates allowed; they weight
     the edge, matching the multigraph reading of repeated links).
@@ -53,6 +51,14 @@ def pagerank(
     destination, with its rank after ``iterations`` rounds, as longs
     at ``scale`` (initial rank = ``scale``; base term =
     ``scale - scale*damping_pct div 100``).
+
+    Ranks are longs, per-edge contributions use integer division by
+    out-degree and the damping mix is integer ``div``, so every sum is
+    exact in any partition order (float PageRank would hash-diverge on
+    summation order alone). Dangling nodes (no out-edges) leak their
+    mass; the oracle transcribes that rule. Per iteration: one
+    equi-join of ranks to edges on the source key, one aggregate on
+    the destination key, one left join back to the node set.
     """
     # Loop-invariant handling (r16, guide §2.4/§5). The r15 experiment
     # that checkpointed e / nodes / out_deg SEPARATELY lost at sf0.1
@@ -125,6 +131,22 @@ def undirected_simple_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
+def _symmetric(und: DataFrame) -> DataFrame:
+    """Both directions of normalized edges (a, b) as (__node, __nbr):
+    one union, no distinct, since the (a, b) pairs are unique and
+    a != b."""
+    return und.select(
+        F.col("a").alias("__node"), F.col("b").alias("__nbr")
+    ).unionByName(und.select(F.col("b").alias("__node"), F.col("a").alias("__nbr")))
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, degree) of the normalized undirected edges (a, b)."""
+    return _symmetric(und).groupBy(F.col("__node").alias("node")).agg(
+        F.count(F.lit(1)).alias("degree")
+    )
+
+
 def orient_edges(und: DataFrame, orient: str = "degree") -> DataFrame:
     """Orient normalized undirected edges (a, b) low->high under a
     total node order: ``"degree"`` orders by (degree, id) — the
@@ -134,15 +156,10 @@ def orient_edges(und: DataFrame, orient: str = "degree") -> DataFrame:
         return und
     if orient != "degree":
         raise ValueError(f"orient must be 'degree' or 'id', got {orient!r}")
-    deg = (
-        und.select(F.col("a").alias("x"))
-        .unionByName(und.select(F.col("b").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(und)
     return (
-        und.join(deg.select(F.col("x").alias("a"), F.col("d").alias("__da")), "a")
-        .join(deg.select(F.col("x").alias("b"), F.col("d").alias("__db")), "b")
+        und.join(deg.select(F.col("node").alias("a"), F.col("degree").alias("__da")), "a")
+        .join(deg.select(F.col("node").alias("b"), F.col("degree").alias("__db")), "b")
         .select(
             F.when(
                 (F.col("__da") < F.col("__db"))
@@ -190,11 +207,7 @@ def triangle_count(
     # the frames are edge-sized, never larger than the input.
     und = undirected_simple_edges(edges, src, dst).localCheckpoint(eager=False)
     e = orient_edges(und, orient).localCheckpoint(eager=False)
-    nodes = (
-        und.select(F.col("a").alias("x"))
-        .unionByName(und.select(F.col("b").alias("x")))
-        .distinct()
-    )
+    nodes = _symmetric(und).select("__node").distinct()
     # Directed-path closure: a triangle x<y<z under the total order
     # has oriented edges x->y, y->z, x->z — exactly one path
     # (x->y)(y->z), closed by (x->z). Join fan-out is
@@ -266,6 +279,18 @@ def bfs_levels(
     return dist
 
 
+def _peel(e: DataFrame, k: int) -> DataFrame:
+    """One k-core round: keep the edges whose endpoints both have
+    degree >= k. Two key-partitioned semi-joins, so no value column
+    crosses; cut lazily."""
+    keep = _degrees(e).filter(F.col("degree") >= k).select("node")
+    return (
+        e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+        .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
+        .localCheckpoint(eager=False)
+    )
+
+
 def kcore(
     edges: DataFrame, src: str, dst: str, k: int, rounds: int
 ) -> DataFrame:
@@ -278,10 +303,8 @@ def kcore(
 
     Fixed-round peeling is deterministic and SQL-transcribable (the
     oracle unrolls the rounds); :func:`kcore_converged` is the
-    fixed-point form (loop until the edge count stops changing) —
-    each round is one degree aggregate + two key-partitioned
-    semi-joins, localCheckpointed so plan depth stays O(1) in rounds
-    (the :func:`pagerank` discipline).
+    fixed-point form (loop until the edge count stops changing). Each
+    round is one degree aggregate + two key-partitioned semi-joins.
     Nodes with zero surviving edges leave the edge-list representation
     — consistent with any k >= 1.
     """
@@ -289,24 +312,8 @@ def kcore(
         raise ValueError("k must be >= 1")
     e = undirected_simple_edges(edges, src, dst)
     for _ in range(int(rounds)):
-        deg = (
-            e.select(F.col("a").alias("x"))
-            .unionByName(e.select(F.col("b").alias("x")))
-            .groupBy("x")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("x")
-        e = (
-            e.join(keep.withColumnRenamed("x", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("x", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
+        e = _peel(e, k)
+    return _degrees(e)
 
 
 def kcore_converged(
@@ -316,22 +323,20 @@ def kcore_converged(
     k: int,
     max_rounds: int = 50,
 ) -> tuple[DataFrame, int]:
-    """k-core peeling run to the FIXED POINT (the true k-core), the
-    convergence form :func:`kcore`'s docstring promises: loop "drop
-    every node with degree < k" until the edge count stops changing.
-    Returns ``(survivors, rounds)`` — the (node, degree) frame of the
-    core plus the number of peel rounds executed (the last round is
-    the confirming no-op).
+    """k-core peeling run to the FIXED POINT (the true k-core): loop
+    "drop every node with degree < k" until the edge count stops
+    changing. Returns ``(survivors, rounds)`` — the (node, degree)
+    frame of the core plus the number of peel rounds executed (the
+    last round is the confirming no-op).
 
     Each round costs one degree aggregate + two key-partitioned
     semi-joins + ONE ``count()`` action — the convergence test is the
     price of not knowing the cascade length up front (the fixed-round
     form stays the choice when the round budget is known). The edge
     count is monotonically nonincreasing, so count-unchanged ==
-    vertex-set-unchanged == fixed point; ``localCheckpoint`` per
-    round keeps the composed plan O(1) deep (the :func:`pagerank`
-    discipline) and makes each count reuse the previous round's
-    materialization instead of recomputing the whole cascade.
+    vertex-set-unchanged == fixed point. The count materializes the
+    round's checkpoint, so the next round reads it instead of
+    recomputing the cascade, and the previous round is released.
 
     ``max_rounds`` caps the loop LOUDLY (RuntimeError, never a silent
     truncation): a cascade can legitimately run O(n) rounds on
@@ -345,27 +350,12 @@ def kcore_converged(
     e = undirected_simple_edges(edges, src, dst).localCheckpoint(eager=False)
     prev = e.count()
     for rounds in range(1, int(max_rounds) + 1):
-        deg = (
-            e.select(F.col("a").alias("x"))
-            .unionByName(e.select(F.col("b").alias("x")))
-            .groupBy("x")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("x")
-        e = (
-            e.join(keep.withColumnRenamed("x", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("x", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        cur = e.count()
+        peeled = _peel(e, k)
+        cur = peeled.count()
+        release_checkpoint(e)
+        e = peeled
         if cur == prev:
-            survivors = (
-                e.select(F.col("a").alias("node"))
-                .unionByName(e.select(F.col("b").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-            )
-            return survivors, rounds
+            return _degrees(e), rounds
         prev_before, prev = prev, cur
     # prev_before/cur is the LAST round's real delta (prev has already
     # been advanced to cur, so printing prev->cur would show X -> X).
@@ -373,6 +363,23 @@ def kcore_converged(
         f"kcore_converged: no fixed point within max_rounds={max_rounds} "
         f"(edge count still falling: {prev_before} -> {cur}); raise "
         "max_rounds or use the fixed-round kcore()"
+    )
+
+
+def _int64_sum(overflow_msg: str) -> Column:
+    """``nbr_sum``: the DECIMAL(38,0) ``__sum_dec`` back as a long.
+    A sum of in-range longs can exceed int64 on a high-fan-in node,
+    and non-ANSI Spark wraps sum(long) silently, so past the two-sided
+    long range (-2^63 is representable) this raises ``overflow_msg``
+    in-plan instead."""
+    dec = F.col("__sum_dec")
+    # 2^63 exceeds a py4j long literal: ship the bounds as strings
+    lo, hi = (F.lit(str(b)).cast("decimal(38,0)") for b in (-(2**63), 2**63 - 1))
+    return (
+        F.when(dec.isNull(), F.lit(None).cast("long"))
+        .when((dec >= lo) & (dec <= hi), dec.cast("long"))
+        .otherwise(F.raise_error(F.lit(overflow_msg)))
+        .alias("nbr_sum")
     )
 
 
@@ -407,12 +414,7 @@ def neighbor_agg(
     """
     from pyspark.sql import types as T
 
-    und = undirected_simple_edges(edges, src, dst)
-    sym = und.select(
-        F.col("a").alias("__node"), F.col("b").alias("__nbr")
-    ).unionByName(
-        und.select(F.col("b").alias("__node"), F.col("a").alias("__nbr"))
-    )
+    sym = _symmetric(undirected_simple_edges(edges, src, dst))
     feat = features.select(
         F.col(id_col).alias("__nbr"), F.col(value_col).alias("__v")
     )
@@ -422,24 +424,7 @@ def neighbor_agg(
     )
     if integral:
         sum_cell = F.sum(F.col("__v").cast("decimal(38,0)")).alias("__sum_dec")
-        guard = (
-            F.when(F.col("__sum_dec").isNull(), F.lit(None).cast("long"))
-            .when(
-                # two-sided long range (ADVICE r13): -2^63 is a
-                # representable int64; abs(sum) < 2^63 rejected it.
-                (F.col("__sum_dec") >= F.lit(str(-(2**63))).cast("decimal(38,0)"))
-                & (F.col("__sum_dec") <= F.lit(str(2**63 - 1)).cast("decimal(38,0)")),
-                F.col("__sum_dec").cast("long"),
-            )
-            .otherwise(
-                F.raise_error(
-                    F.lit(
-                        "neighbor_agg: neighbor feature sum overflows int64"
-                    )
-                )
-            )
-            .alias("nbr_sum")
-        )
+        guard = _int64_sum("neighbor_agg: neighbor feature sum overflows int64")
     else:
         sum_cell = F.sum("__v").alias("__sum_dec")
         guard = F.col("__sum_dec").cast("long").alias("nbr_sum")
@@ -501,35 +486,21 @@ def neighbor_agg_rounds(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = undirected_simple_edges(edges, src, dst)
-    sym = (
-        und.select(F.col("a").alias("__node"), F.col("b").alias("__nbr"))
-        .unionByName(
-            und.select(F.col("b").alias("__node"), F.col("a").alias("__nbr"))
-        )
-        .localCheckpoint(eager=False)
+    sym = _symmetric(undirected_simple_edges(edges, src, dst)).localCheckpoint(
+        eager=False
     )
     feat = features.select(
         F.col(id_col).alias("__nbr"), F.col(value_col).cast("long").alias("__v")
     )
-    agg = None
-    # 2^63 exceeds a py4j long literal — ship them as strings once.
-    # Two-sided long range (ADVICE r13): -2^63 IS representable.
-    lo_bound = F.lit(str(-(2**63))).cast("decimal(38,0)")
-    hi_bound = F.lit(str(2**63 - 1)).cast("decimal(38,0)")
     # the cross-round quotient guard below stays one-sided
     # (|prod| < 2^63*n): a quotient of exactly -2^63 raises — a
     # documented one-value conservatism, vs. tracking truncation
     # direction at the negative boundary.
     sum_bound = F.lit(str(2**63)).cast("decimal(38,0)")
     for r in range(int(rounds)):
-        # The per-round sum itself runs in DECIMAL(38,0): each __v is
-        # an in-range long, but a node with many large-feature
-        # neighbors can push sum(long) past int64, and non-ANSI Spark
-        # wraps that SILENTLY — the wrapped value would then pass the
-        # cross-round |prod| guard and propagate wrong. Decimal(38,0)
-        # is exact for any realistic fan-in (< 10^38), and the guard
-        # below raises in-plan before casting back to long.
+        # The per-round sum runs in DECIMAL(38,0) (exact for any
+        # realistic fan-in, < 10^38): a wrapped sum(long) would pass the
+        # cross-round |prod| guard and propagate wrong.
         agg = (
             sym.join(feat, "__nbr")
             .groupBy(F.col("__node").alias("node"))
@@ -540,22 +511,11 @@ def neighbor_agg_rounds(
             .select(
                 "node",
                 "n_neighbors",
-                F.when(F.col("__sum_dec").isNull(), F.lit(None).cast("long"))
-                .when(
-                    (F.col("__sum_dec") >= lo_bound)
-                    & (F.col("__sum_dec") <= hi_bound),
-                    F.col("__sum_dec").cast("long"),
-                )
-                .otherwise(
-                    F.raise_error(
-                        F.lit(
-                            "neighbor_agg_rounds: neighbor feature sum "
-                            f"overflows int64 at round {r + 1}; lower "
-                            "`scale` or `rounds`"
-                        )
-                    )
-                )
-                .alias("nbr_sum"),
+                _int64_sum(
+                    "neighbor_agg_rounds: neighbor feature sum "
+                    f"overflows int64 at round {r + 1}; lower "
+                    "`scale` or `rounds`"
+                ),
             )
         )
         if r < rounds - 1:
@@ -595,6 +555,32 @@ def neighbor_agg_rounds(
     return agg.withColumn("nbr_mean", F.col("nbr_sum") / F.col("n_neighbors"))
 
 
+def _initial_labels(sym: DataFrame) -> DataFrame:
+    """(node, label) with every node labelled by its own id. The label
+    inherits the node's type (numeric or string ids both work; the
+    min-label tie rule is then the type's natural ordering)."""
+    return sym.select(F.col("__node").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+
+
+def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous round: every node adopts its neighbors' most
+    frequent label, ties to the smallest; cut lazily."""
+    freq = (
+        sym.join(labels.select(F.col("node").alias("__nbr"), "label"), "__nbr")
+        .groupBy(F.col("__node").alias("node"), "label")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+    w = Window.partitionBy("node").orderBy(F.col("__c").desc(), F.col("label").asc())
+    return (
+        freq.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("node", "label")
+        .localCheckpoint(eager=False)
+    )
+
+
 def label_propagation(
     edges: DataFrame,
     src: str,
@@ -622,41 +608,12 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = undirected_simple_edges(edges, src, dst)
-    sym = (
-        und.select(F.col("a").alias("__node"), F.col("b").alias("__nbr"))
-        .unionByName(
-            und.select(F.col("b").alias("__node"), F.col("a").alias("__nbr"))
-        )
-        .localCheckpoint(eager=False)
+    sym = _symmetric(undirected_simple_edges(edges, src, dst)).localCheckpoint(
+        eager=False
     )
-    # label inherits node's type (numeric OR string ids work; the
-    # min-label tie rule is then the type's natural ordering).
-    labels = sym.select(F.col("__node").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    from pyspark.sql import Window
-
+    labels = _initial_labels(sym)
     for _ in range(int(rounds)):
-        freq = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("__nbr"), F.col("label")
-                ),
-                "__nbr",
-            )
-            .groupBy(F.col("__node").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        w = Window.partitionBy("node").orderBy(
-            F.col("__c").desc(), F.col("label").asc()
-        )
-        labels = (
-            freq.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("node", "label")
-            .localCheckpoint(eager=False)
-        )
+        labels = _lpa_round(sym, labels)
     return labels
 
 
@@ -695,43 +652,14 @@ def label_propagation_converged(
     """
     if max_rounds < 1:
         raise ValueError("max_rounds must be >= 1")
-    und = undirected_simple_edges(edges, src, dst)
-    sym = (
-        und.select(F.col("a").alias("__node"), F.col("b").alias("__nbr"))
-        .unionByName(
-            und.select(F.col("b").alias("__node"), F.col("a").alias("__nbr"))
-        )
-        .localCheckpoint(eager=False)
+    sym = _symmetric(undirected_simple_edges(edges, src, dst)).localCheckpoint(
+        eager=False
     )
-    labels = (
-        sym.select(F.col("__node").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    from pyspark.sql import Window
-
+    labels = _initial_labels(sym).localCheckpoint(eager=False)
     for rounds in range(1, int(max_rounds) + 1):
-        freq = (
-            sym.join(
-                labels.select(F.col("node").alias("__nbr"), F.col("label")),
-                "__nbr",
-            )
-            .groupBy(F.col("__node").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        w = Window.partitionBy("node").orderBy(
-            F.col("__c").desc(), F.col("label").asc()
-        )
-        new_labels = (
-            freq.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("node", "label")
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.join(
-            labels, ["node", "label"], "left_anti"
-        ).count()
+        new_labels = _lpa_round(sym, labels)
+        changed = new_labels.join(labels, ["node", "label"], "left_anti").count()
+        release_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             return labels, rounds

@@ -2221,22 +2221,32 @@ FROM agg a LEFT JOIN cur1 USING (co_id) LEFT JOIN nxt1 USING (co_id)
 """
 
 
-@query("co_aggregated_harness", _CO_AGG_HARNESS_ORACLE)
-def q_co_aggregated_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _harness_inputs(spark: SparkSession, sf_dir: str):
+    """downtime log -> (variants dict, raw downtime, line_config) for
+    harness entries; the variants are lazy filters over one scaffold
+    table of the flagged log."""
     from ..operators.extract import downtime_variants, with_derived_flags
-    from .rco_pipeline import SiteParams, mes_etl
 
     downtime = harness_downtime_log(spark, sf_dir)
-    line_config = (
-        downtime.select("LINE")
-        .distinct()
-        .select(
+    line_config = _scaffold(
+        spark, sf_dir, "line_config",
+        lambda: downtime.select("LINE").distinct().select(
             F.col("LINE").alias("MDC_Line_Name"),
             F.lit("CM").alias("Constraint_Machine_String"),
-        )
+        ),
     )
-    flagged = with_derived_flags(downtime, line_config)
-    v = downtime_variants(flagged)
+    flagged = _scaffold(
+        spark, sf_dir, "flagged_downtime_log",
+        lambda: with_derived_flags(downtime, line_config),
+    )
+    return downtime_variants(flagged), downtime, line_config
+
+
+@query("co_aggregated_harness", _CO_AGG_HARNESS_ORACLE)
+def q_co_aggregated_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .rco_pipeline import SiteParams, mes_etl
+
+    v, _, _ = _harness_inputs(spark, sf_dir)
     outs = mes_etl(
         v["line_dt"],
         v["line_dt_full"],
@@ -2252,20 +2262,9 @@ def q_co_aggregated_harness_stitched(spark: SparkSession, sf_dir: str) -> DataFr
     # through the composite-partition stitched sessionizer — the hot-line
     # / 100 TB plan is now a production-pipeline knob, not a hand-wired
     # operator, and must hash-match the plain plan end-to-end.
-    from ..operators.extract import downtime_variants, with_derived_flags
     from .rco_pipeline import SiteParams, mes_etl
 
-    downtime = harness_downtime_log(spark, sf_dir)
-    line_config = (
-        downtime.select("LINE")
-        .distinct()
-        .select(
-            F.col("LINE").alias("MDC_Line_Name"),
-            F.lit("CM").alias("Constraint_Machine_String"),
-        )
-    )
-    flagged = with_derived_flags(downtime, line_config)
-    v = downtime_variants(flagged)
+    v, _, _ = _harness_inputs(spark, sf_dir)
     outs = mes_etl(
         v["line_dt"],
         v["line_dt_full"],
@@ -2328,20 +2327,9 @@ FROM fs_first WHERE rn = 1
 
 @query("first_stop_harness", _FIRST_STOP_HARNESS_ORACLE)
 def q_first_stop_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.extract import downtime_variants, with_derived_flags
     from .rco_pipeline import SiteParams, mes_etl
 
-    downtime = harness_downtime_log(spark, sf_dir)
-    line_config = (
-        downtime.select("LINE")
-        .distinct()
-        .select(
-            F.col("LINE").alias("MDC_Line_Name"),
-            F.lit("CM").alias("Constraint_Machine_String"),
-        )
-    )
-    flagged = with_derived_flags(downtime, line_config)
-    v = downtime_variants(flagged)
+    v, _, _ = _harness_inputs(spark, sf_dir)
     outs = mes_etl(v["line_dt"], v["line_dt_full"], SiteParams(server="HARNESS"))
     return outs["First_Stop_after_CO_Data"]
 
@@ -2367,20 +2355,9 @@ FROM sid
 
 @query("co_event_log_harness", _CO_EVENT_LOG_HARNESS_ORACLE)
 def q_co_event_log_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.extract import downtime_variants, with_derived_flags
     from .rco_pipeline import SiteParams, mes_etl
 
-    downtime = harness_downtime_log(spark, sf_dir)
-    line_config = (
-        downtime.select("LINE")
-        .distinct()
-        .select(
-            F.col("LINE").alias("MDC_Line_Name"),
-            F.lit("CM").alias("Constraint_Machine_String"),
-        )
-    )
-    flagged = with_derived_flags(downtime, line_config)
-    v = downtime_variants(flagged)
+    v, _, _ = _harness_inputs(spark, sf_dir)
     outs = mes_etl(
         v["line_dt"],
         v["line_dt_full"],
@@ -2399,27 +2376,6 @@ def q_co_event_log_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared CTE prefixes carved from the co_aggregated oracle chain:
 # through line_dt_full (adapter + flags) and through agg (sessions).
 _HARNESS_BASE = _CO_AGG_HARNESS_ORACLE.split(",\nco AS (")[0]
-
-
-def _harness_inputs(spark: SparkSession, sf_dir: str):
-    """downtime log -> (variants dict, raw downtime, line_config) for
-    harness entries; the variants are lazy filters over one scaffold
-    table of the flagged log."""
-    from ..operators.extract import downtime_variants, with_derived_flags
-
-    downtime = harness_downtime_log(spark, sf_dir)
-    line_config = _scaffold(
-        spark, sf_dir, "line_config",
-        lambda: downtime.select("LINE").distinct().select(
-            F.col("LINE").alias("MDC_Line_Name"),
-            F.lit("CM").alias("Constraint_Machine_String"),
-        ),
-    )
-    flagged = _scaffold(
-        spark, sf_dir, "flagged_downtime_log",
-        lambda: with_derived_flags(downtime, line_config),
-    )
-    return downtime_variants(flagged), downtime, line_config
 
 
 _RUNTIME_CTES = """,

@@ -13,7 +13,7 @@ import os
 import re
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -107,6 +107,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame.
+
+    ``DataFrame.unpersist`` does not: it only uncaches a plan from the
+    CacheManager, and the checkpoint RDD stays in
+    ``getPersistentRDDs()``. The plan of a checkpoint frame is a
+    ``LogicalRDD``; this unpersists that RDD. Release a frame only
+    after every frame that reads it has materialized its own
+    checkpoint. Raises ``TypeError`` on any other plan (a frame
+    derived from the checkpoint, say), which would release nothing.
+    """
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError(
+            f"release_checkpoint needs a localCheckpoint frame, got a "
+            f"{plan.nodeName()} plan"
+        )
+    plan.rdd().unpersist(False)
 
 
 #: Open fast_planning scopes per session: session -> [entrants, saved

@@ -107,3 +107,23 @@ def test_malformed_driver_mem_env_falls_back(monkeypatch):
     for good in ("512m", "3g", "2gb", "1048576"):
         monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", good)
         assert S.get_spark().conf["spark.driver.memory"] == good
+
+
+def test_release_checkpoint_drops_the_rdd(spark):
+    # DataFrame.unpersist leaves a localCheckpoint RDD registered;
+    # release_checkpoint must drop it, eager or lazy, while a frame cut
+    # from it afterwards still collects
+    import pytest
+
+    jsc = spark.sparkContext._jsc
+    for eager in (True, False):
+        base = spark.range(40).localCheckpoint(eager=eager)
+        base_id = base._jdf.queryExecution().logical().rdd().id()
+        later = base.filter("id % 4 = 0").localCheckpoint()
+        assert base_id in set(jsc.getPersistentRDDs().keySet())
+        S.release_checkpoint(base)
+        assert base_id not in set(jsc.getPersistentRDDs().keySet())
+        assert sorted(r.id for r in later.collect()) == list(range(0, 40, 4))
+        with pytest.raises(TypeError, match="localCheckpoint"):
+            S.release_checkpoint(later.select("id"))
+        S.release_checkpoint(later)

@@ -530,6 +530,7 @@ def run_graph(spark, edges) -> dict:
         triangle_count,
         undirected_simple_edges,
     )
+    from fhc_rco_etl_scalable_spark.session import release_checkpoint
 
     und = undirected_simple_edges(edges, "src", "dst").localCheckpoint()
     res: dict = {"edges": und.count()}
@@ -545,7 +546,7 @@ def run_graph(spark, edges) -> dict:
         wrow = w.agg(F.sum("w").alias("s"), F.max("w").alias("m")).first()
         res[f"wedges_{orient}"] = int(wrow["s"] or 0)
         res[f"max_node_wedges_{orient}"] = int(wrow["m"] or 0)
-    und.unpersist()
+    release_checkpoint(und)
     return res
 
 

@@ -24,7 +24,6 @@ Prints one line per flagged entry + a JSON summary; exit 0 always
 from __future__ import annotations
 
 import json
-import re
 import os
 import sys
 from collections import Counter
@@ -32,11 +31,28 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def table_scans(plan: str) -> dict[str, int]:
-    scans = re.findall(
-        r"FileScan \w+ \[[^\]]*\].*?file:([^\]\s,]+)", plan
-    )
-    return dict(Counter(p.rsplit("/", 1)[-1] for p in scans))
+def table_scans(plan) -> dict[str, int]:
+    """FileScan count per table of a JVM physical plan, subqueries
+    included, keyed by the full root path(s) of each
+    ``FileSourceScanExec``. The plan's string form abbreviates long
+    locations (every scaffold table under one ``userF...``), so the
+    key comes from the scan's relation instead. A reused exchange or
+    subquery scans nothing again and is not descended into."""
+    counts: Counter = Counter()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths()
+            counts[",".join(roots.apply(i).toString() for i in range(roots.size()))] += 1
+        elif kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        if kind in ("ReusedExchangeExec", "ReusedSubqueryExec"):
+            continue
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return dict(counts)
 
 
 # Review-queue adjudications (VERDICT r13 #6): every flagged entry's
@@ -100,7 +116,7 @@ def main() -> int:
     for name, fn in entry_mod.queries().items():
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = df._jdf.queryExecution().executedPlan()
         except Exception as e:  # plan build only; runtime errors differ
             errors[name] = str(e)[:200]
             continue
