@@ -51,17 +51,9 @@ def _hit_counter(toks: Column, words: tuple[str, ...]) -> Column:
 
 
 def _stop_ratio(lowered: Column, words: tuple[str, ...]) -> Column:
-    """Stopword-hit ratio over an ALREADY-lowered token array — the one
-    implementation both :func:`stopword_ratio` and :func:`quality_score`
-    read (ADVICE r15), so token-filtering/casefolding semantics cannot
-    drift between the two call sites."""
+    """Stopword-hit ratio over an ALREADY-lowered token array, as
+    :func:`quality_score` reads it."""
     return _hit_counter(lowered, words) / F.greatest(F.size(lowered), F.lit(1))
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    words = LANG_STOPWORDS[lang]
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
-    return _stop_ratio(toks, words)
 
 
 def language_scores(text: Column | str) -> Column:
@@ -129,7 +121,7 @@ def quality_score(text: Column | str, lang: str = "en") -> Column:
     c = F.col(text) if isinstance(text, str) else text
     words = LANG_STOPWORDS[lang]
 
-    # Token array bound once (r15): token_count + stopword_ratio each
+    # Token array bound once (r15): token_count + the stopword ratio each
     # re-ran the tokenizer (4+ split/filter passes per row); all the
     # token-derived terms now read the bound value. Numerically
     # identical: same counts, same ratios, same fold.

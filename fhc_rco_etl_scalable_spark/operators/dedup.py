@@ -77,33 +77,16 @@ def exact_dedup(
     )
 
 
-def char_shingles(text: Column, k: int = 8) -> Column:
-    """Distinct k-char shingles of casefolded text.
-
-    The normalized string is bound as a LAMBDA VARIABLE (1-element-
-    array transform) so the ``regexp_replace`` runs once per document —
-    embedding ``norm`` in the per-shingle lambda re-evaluates the
-    whole regex pass per shingle, O(len^2) per doc (the higher-order
-    re-evaluation trap documented at
-    functions/text.py::winnow_fingerprints; found live here in r15)."""
-    norm = F.regexp_replace(F.lower(text), r"\s+", " ")
-
-    def shingle(s: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.length(s) - k + 1, F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: s.substr(i, F.lit(k))))
-
-    return F.transform(F.array(norm), shingle)[0]
-
-
 def token_ngrams(text: Column, n: int = 3) -> Column:
     """Distinct token n-grams (strings).
 
     The token array is bound as a lambda variable so tokenization runs
     once per document — ``F.slice(toks, i, n)`` inside the per-gram
-    lambda would re-run split+filter per gram, O(len^2) per doc (same
-    trap as :func:`char_shingles`; this builder feeds decontaminate /
-    jaccard_pairs / minhash_bands, so the quadratic rode every text-
-    dedup entry)."""
+    lambda would re-run split+filter per gram, O(len^2) per doc (the
+    higher-order re-evaluation trap documented at
+    functions/text.py::winnow_fingerprints; this builder feeds
+    decontaminate / jaccard_pairs / minhash_bands, so the quadratic
+    rode every text-dedup entry)."""
     toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
     def grams(ts: Column) -> Column:
@@ -113,23 +96,6 @@ def token_ngrams(text: Column, n: int = 3) -> Column:
         )
 
     return F.transform(F.array(toks), grams)[0]
-
-
-def _perm_min(base_hashes: Column, i: int) -> Column:
-    a, b = _perm_coeffs(i)
-    return F.array_min(
-        F.transform(
-            base_hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
-        )
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as an array column: min over shingles of the
-    i-th arithmetic permutation of the base md5 hash. Column-level twin
-    of the long-format path in ``minhash_lsh_candidates``."""
-    base = F.transform(shingles, lambda s: md5_int(s))
-    return F.array(*[_perm_min(base, i) for i in range(num_hashes)])
 
 
 def minhash_bands(
@@ -148,10 +114,11 @@ def minhash_bands(
     also the shared first stage of :func:`minhash_lsh_candidates`.
 
     Long format: explode grams once, hash per (doc, perm), min-reduce.
-    The inlined-array alternative (minhash_signature) re-evaluates the
-    gram expression per permutation — a 16x expression blowup that
-    falls out of whole-stage codegen; this shape is also the one that
-    scales (hashing is map-side, one shuffle for the min-reduce).
+    An inlined signature array (one ``array_min`` per permutation)
+    would re-evaluate the gram expression per permutation — a 16x
+    expression blowup that falls out of whole-stage codegen; this
+    shape is also the one that scales (hashing is map-side, one
+    shuffle for the min-reduce).
     ``materialize`` keeps the localCheckpoint barrier callers that
     read the frame twice need (the self-join); pass False when the
     rows go straight to a sink.

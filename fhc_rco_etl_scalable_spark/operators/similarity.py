@@ -761,6 +761,20 @@ def ivf_topk(
     return _exact_rerank(src.mapInPandas(kern, schema), q_native, k)
 
 
+def _assign_cell_udf(cents: np.ndarray):
+    """pandas UDF mapping each unit vector to the row index of its
+    highest-dot centroid in ``cents`` — the one IVF assignment rule of
+    :func:`ivf_index` and :func:`ivf_index_append`."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("int")
+    def assign_cell(vecs: pd.Series) -> pd.Series:
+        v = np.asarray(vecs.tolist(), dtype=np.float64)
+        return pd.Series(np.argmax(v @ cents.T, axis=1).astype(np.int32))
+
+    return assign_cell
+
+
 def ivf_index(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -784,8 +798,6 @@ def ivf_index(
     Lloyd quantizer as ``ivf_topk`` (id-ordered sample, no RNG), so
     an index built from the same corpus reproduces bit-identically.
     """
-    from pyspark.sql.functions import pandas_udf
-
     from .skew import spread
 
     sample = _unit_sample(corpus, id_col, vec_col, sample_size)
@@ -804,15 +816,10 @@ def ivf_index(
         return assignments, centroids
     cents = _kmeans_centroids(sample, min(n_cells, len(sample)))
 
-    @pandas_udf("int")
-    def assign_cell(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64)
-        return pd.Series(np.argmax(v @ cents.T, axis=1).astype(np.int32))
-
     assignments = spread(corpus, id_col).select(
         F.col(id_col),
         _unit(F.col(vec_col)).alias("unit_vec"),
-    ).withColumn("cell", assign_cell(F.col("unit_vec")))
+    ).withColumn("cell", _assign_cell_udf(cents)(F.col("unit_vec")))
     spark = corpus.sparkSession
     centroids = spark.createDataFrame(
         [(int(i), [float(x) for x in row]) for i, row in enumerate(cents)],
@@ -842,8 +849,6 @@ def ivf_index_append(
     about recall quality (vectors landing in cells whose centroid no
     longer represents them), not correctness of the assignment rule.
     """
-    from pyspark.sql.functions import pandas_udf
-
     cent_rows = sorted(centroids.collect(), key=lambda r: r.cell)
     if not cent_rows:
         raise ValueError(
@@ -852,15 +857,10 @@ def ivf_index_append(
         )
     cents = np.asarray([r.centroid for r in cent_rows], dtype=np.float64)
 
-    @pandas_udf("int")
-    def assign_cell(vecs: pd.Series) -> pd.Series:
-        v = np.asarray(vecs.tolist(), dtype=np.float64)
-        return pd.Series(np.argmax(v @ cents.T, axis=1).astype(np.int32))
-
     return new_vectors.select(
         F.col(id_col),
         _unit(F.col(vec_col)).alias("unit_vec"),
-    ).withColumn("cell", assign_cell(F.col("unit_vec")))
+    ).withColumn("cell", _assign_cell_udf(cents)(F.col("unit_vec")))
 
 
 def ivf_drift_stats(

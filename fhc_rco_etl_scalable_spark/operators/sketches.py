@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,7 +75,3 @@ def merge_sketches(
         "n_distinct_est", F.hll_sketch_estimate(F.col("sketch")).cast("long")
     )
 
-
-def sketch_estimate(sketch: Column) -> Column:
-    """Estimate column for a stored sketch."""
-    return F.hll_sketch_estimate(sketch).cast("long")

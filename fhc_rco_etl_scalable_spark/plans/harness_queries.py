@@ -308,18 +308,9 @@ FROM f WHERE is_left = 1
 
 @query("asof_backward", _ASOF_BACKWARD_ORACLE)
 def q_asof_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("event_id").alias("last_view_id"),
-        F.col("value").alias("last_view_value"),
-    )
-    out = asof_join(
-        purchases, views, on=["user_id"], left_ts="purchase_ts", right_ts="ts",
-        value_cols=["last_view_id", "last_view_value"],
-        direction="backward", strict=False, tie_break=["last_view_id"],
+    out = _purchase_asof(
+        spark, sf_dir, "view", "last_view_id", "backward",
+        last_view_value="value",
     )
     return out.withColumn("last_view_value", F.round("last_view_value", 2))
 
@@ -346,17 +337,8 @@ FROM f WHERE is_left = 1
 
 @query("asof_forward", _ASOF_FORWARD_ORACLE)
 def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("purchase_ts")
-    )
-    signups = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("event_id").alias("next_signup_id")
-    )
-    return asof_join(
-        purchases, signups, on=["user_id"], left_ts="purchase_ts", right_ts="ts",
-        value_cols=["next_signup_id"],
-        direction="forward", strict=True, tie_break=["next_signup_id"],
+    return _purchase_asof(
+        spark, sf_dir, "signup", "next_signup_id", "forward", strict=True
     )
 
 
@@ -392,18 +374,8 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides the same one-shuffle union+ffill plan (the matched right
     timestamp travels inside the picked struct; the check is one
     post-window projection), so the tolerance costs zero exchanges."""
-    ev = load_table(spark, "events", sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("event_id").alias("recent_view_id")
-    )
-    return asof_join(
-        purchases, views, on=["user_id"], left_ts="purchase_ts", right_ts="ts",
-        value_cols=["recent_view_id"],
-        direction="backward", strict=False, tie_break=["recent_view_id"],
+    return _purchase_asof(
+        spark, sf_dir, "view", "recent_view_id", "backward",
         tolerance="30 minutes",
     )
 
@@ -451,19 +423,7 @@ def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps. The oracle computes both directional picks with two
     windows and transcribes the identical least-abs-distance /
     backward-tie rule."""
-    ev = load_table(spark, "events", sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("event_id").alias("nearest_view_id")
-    )
-    return asof_join(
-        purchases, views, on=["user_id"], left_ts="purchase_ts", right_ts="ts",
-        value_cols=["nearest_view_id"],
-        direction="nearest", strict=False, tie_break=["nearest_view_id"],
-    )
+    return _purchase_asof(spark, sf_dir, "view", "nearest_view_id", "nearest")
 
 
 # ---------------------------------------------------------------------------
@@ -1866,14 +1826,8 @@ def q_asof_preferenced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join_range
 
     ev = load_table(spark, "events", sf_dir)
-    anchors = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withColumn("__anchor_id", F.col("purchase_id"))
+    anchors = _purchases(ev, "p_ts").withColumn(
+        "__anchor_id", F.col("purchase_id")
     )
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", "event_id", "value"
@@ -2240,6 +2194,267 @@ def _harness_inputs(spark: SparkSession, sf_dir: str):
         lambda: with_derived_flags(downtime, line_config),
     )
     return downtime_variants(flagged), downtime, line_config
+
+
+# ---------------------------------------------------------------------------
+# Shared catalog inputs: one derivation per frame that several entry
+# families read. A helper returning a DataFrame composes into the same
+# logical plan as the inlined code it replaces, so each entry keeps its
+# plan and its hash.
+# ---------------------------------------------------------------------------
+
+
+def _purchases(ev: DataFrame, ts_alias: str = "purchase_ts") -> DataFrame:
+    """The purchase events as ``(user_id, purchase_id, <ts_alias>)``,
+    the left side of every as-of entry."""
+    return ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias(ts_alias),
+    )
+
+
+def _purchase_asof(
+    spark: SparkSession,
+    sf_dir: str,
+    right_type: str,
+    right_id: str,
+    direction: str,
+    *,
+    strict: bool = False,
+    tolerance: str | None = None,
+    **right_values: str,
+) -> DataFrame:
+    """As-of join of every purchase (:func:`_purchases`) to the same
+    user's ``right_type`` events: the right side carries its
+    ``event_id`` as ``right_id`` (also the tie break) plus
+    ``right_values`` (output alias -> events column)."""
+    ev = load_table(spark, "events", sf_dir)
+    right = ev.filter(F.col("event_type") == right_type).select(
+        "user_id", "ts", F.col("event_id").alias(right_id),
+        *[F.col(c).alias(a) for a, c in right_values.items()],
+    )
+    return asof_join(
+        _purchases(ev), right, on=["user_id"], left_ts="purchase_ts", right_ts="ts",
+        value_cols=[right_id, *right_values],
+        direction=direction, strict=strict, tie_break=[right_id],
+        tolerance=tolerance,
+    )
+
+
+def _lineitem_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic ~997-node lineitem multigraph ``(src, dst)``
+    the fixed-size graph entries share (duplicate edges and self-loops
+    kept; each operator collapses them as its contract says)."""
+    li = load_table(spark, "lineitem", sf_dir)
+    return li.select(
+        (F.col("l_orderkey") % 997).alias("src"),
+        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
+            "dst"
+        ),
+    )
+
+
+def _lineitem_graph_features(spark: SparkSession, sf_dir: str):
+    """``(edges, feats)``: :func:`_lineitem_graph` and the integer
+    feature ``f = node % 97`` of each of its nodes."""
+    edges = _lineitem_graph(spark, sf_dir)
+    nodes = edges.select(F.col("src").alias("node")).unionByName(
+        edges.select(F.col("dst").alias("node"))
+    ).distinct()
+    return edges, nodes.select("node", (F.col("node") % 97).alias("f"))
+
+
+def _lineitem_star_chain(
+    spark: SparkSession, sf_dir: str, *, head_loops: bool
+) -> DataFrame:
+    """The sf-growing star+chain multigraph ``(src, dst)``: every
+    l_orderkey stars onto its 32-key block head and each head chains
+    to the previous one. ``head_loops=False`` drops the heads' own
+    star rows (``key % 32 == 0``, self-loops)."""
+    li = load_table(spark, "lineitem", sf_dir)
+    key = F.col("l_orderkey").cast("long")
+    head = (key - (key % 32)).cast("long")
+    star_rows = li if head_loops else li.filter(key % 32 != 0)
+    stars = star_rows.select(key.alias("src"), head.alias("dst"))
+    chain = li.filter(head >= 32).select(
+        head.alias("src"), (head - 32).alias("dst")
+    )
+    return stars.unionByName(chain)
+
+
+def _sentinel_staged(spark: SparkSession, ev: DataFrame, *event_types: str):
+    """``(staged, max_ts)``: the bounded feed ``ev`` plus the sentinel
+    rows (``user_id`` and ``event_id`` negative) that push a drained
+    replay's watermark past every real row, and ``ev``'s max ts.
+
+    One sentinel per event type, the first at ``max_ts + 30 d`` and
+    each next one 2 h later: 30 d is far past any match window, and
+    2 h exceeds lookback + delay, so the purchase and view sentinels
+    of the outer interval joins cannot join each other. With no types,
+    one untyped row at ``max_ts + 30 d``. The sentinels ride in the
+    last data batch (watermarks update at batch end), and the zero-row
+    trailing batch of ``_replay(drain=True)`` applies them."""
+    import datetime as _dt
+
+    max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
+    far = max_ts + _dt.timedelta(days=30)
+    if event_types:
+        rows = [
+            (-1, -1 - i, far + _dt.timedelta(hours=2 * i), t)
+            for i, t in enumerate(event_types)
+        ]
+        schema = "user_id long, event_id long, ts timestamp, event_type string"
+    else:
+        rows = [(-1, -1, far)]
+        schema = "user_id long, event_id long, ts timestamp"
+    return ev.unionByName(spark.createDataFrame(rows, schema)), max_ts
+
+
+def _interval_join_stream(
+    spark: SparkSession, sf_dir: str, how: str, prefix: str, n_batches: int
+) -> DataFrame:
+    """The stream-stream interval join of the views within 1 h before
+    each purchase, per user, replayed as a ``how`` join in
+    ``n_batches`` data batches under the checkpoint tag ``prefix``.
+
+    The outer joins drain: their sentinel pair rides in the data
+    batch, both watermarks trail by 1 minute, and the sentinel rows
+    are filtered from the sink table. That filter must stay OUT of the
+    streaming query: ``user_id >= 0`` is a predicate on the equi-join
+    key, so Catalyst pushes it through the join into both source
+    scans, which prunes the sentinels before the watermark operator
+    sees them (offsets advanced, srcIn=0, one unmatched purchase never
+    drained)."""
+    from ..streaming.join_stream import stream_stream_interval_join
+
+    feed = load_table(spark, "events", sf_dir).select(
+        "user_id", "event_id", "ts", "event_type"
+    )
+    drain = how != "inner"
+    if drain:
+        feed, _ = _sentinel_staged(spark, feed, "purchase", "view")
+
+    def build(events: DataFrame) -> DataFrame:
+        purchases = events.filter(F.col("event_type") == "purchase").select(
+            "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
+        )
+        views = events.filter(F.col("event_type") == "view").select(
+            "user_id", F.col("event_id").alias("v_id"), F.col("ts").alias("v_ts")
+        )
+        joined = stream_stream_interval_join(
+            purchases, views, key="user_id",
+            left_time="p_ts", right_time="v_ts", lookback="1 hour",
+            delay="1 minute" if drain else "7 days", how=how,
+        )
+        user_id = F.col("l.user_id")
+        if how == "full_outer":  # either side may be the null-padded one
+            user_id = F.coalesce(user_id, F.col("r.user_id"))
+        return joined.select(
+            user_id.alias("user_id"),
+            F.col("l.p_id").alias("purchase_id"),
+            F.col("r.v_id").alias("view_id"),
+            (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
+        )
+
+    out = _replay(
+        spark, feed, n_batches, ["ts", "event_id"], prefix, sf_dir, build,
+        partitions=2, drain=drain,
+    )
+    return out.filter(F.col("user_id") >= 0) if drain else out
+
+
+def _unique_visitors_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    delay: str,
+    dedup: Callable[[DataFrame, list[str]], DataFrame],
+) -> DataFrame:
+    """Daily unique visitors replayed as a stream: ``dedup`` of the
+    (day, user_id) pairs under a ``delay`` watermark, chained into a
+    tumbling-day count in APPEND mode. Two data batches (one
+    cross-batch dedup-state carry, the point) plus the drained
+    sentinel (:func:`_sentinel_staged`). The sentinel's own far-future
+    window never closes, so it never reaches the sink; the bound
+    filter is defensive only. ISO-string Date on both engines."""
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts")
+    staged, max_ts = _sentinel_staged(spark, ev)
+    visitors = _replay(
+        spark, staged, 2, ["ts", "event_id"], prefix, sf_dir,
+        lambda feed: (
+            dedup(
+                feed.withWatermark("ts", delay)
+                .withColumn("day", F.date_trunc("day", F.col("ts"))),
+                ["day", "user_id"],
+            )
+            .groupBy(F.window("ts", "1 day").alias("w"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_visitors"))
+            .select(F.col("w.start").cast("date").alias("Date"), "n_visitors")
+        ),
+        partitions=2, drain=True,
+    )
+    return visitors.filter(F.col("Date") <= F.lit(max_ts.date())).select(
+        F.date_format("Date", "yyyy-MM-dd").alias("Date"), "n_visitors"
+    )
+
+
+@_contextmanager
+def _paged_rest_events(
+    spark: SparkSession,
+    sf_dir: str,
+    schema: str,
+    seen_sites: set[str] | None = None,
+):
+    """Serve the events with ``event_id < 3000`` as a 3-site paged REST
+    API (site ``S<user_id % 3>``, id-ordered pages of 250) on a
+    loopback server and yield a ``paged_rest`` read of every site
+    under ``schema``, with Python filter pushdown enabled. The seed is
+    collected once (bounded: <= 3000 rows; harness scaffolding —
+    production servers already hold the data). Materialize inside the
+    block: the server shuts down on exit."""
+    from ..sources.rest_datasource import PagedRestDataSource
+
+    ev = (
+        load_table(spark, "events", sf_dir)
+        .filter(F.col("event_id") < 3000)
+        .select("event_id", "user_id", "event_type", "value")
+    )
+    by_site: dict[str, list[dict]] = {}
+    for r in ev.collect():
+        by_site.setdefault(f"S{r.user_id % 3}", []).append(
+            {"id": r.event_id, "etype": r.event_type, "value": r.value}
+        )
+    for items in by_site.values():
+        items.sort(key=lambda d: d["id"])
+    srv = _start_paged_rest_server(by_site, page_size=250, seen_sites=seen_sites)
+    try:
+        with _python_pushdown_enabled(spark):
+            spark.dataSource.register(PagedRestDataSource)
+            yield (
+                spark.read.format("paged_rest")
+                .schema(schema)
+                .option("base_url", f"http://127.0.0.1:{srv.server_address[1]}")
+                .option("entity", "events")
+                .option("sites", ",".join(sorted(by_site)))
+                .option("start_date", "2024-01-01")
+                .load()
+            )
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def _rest_totals(id_col: str) -> list:
+    """The REST entries' aggregate columns: row count, DECIMAL value
+    total rounded to 2 places, and the ``id_col`` range."""
+    return [
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.round(F.sum(F.col("value").cast(_MONEY)), 2)
+        .cast("double")
+        .alias("total_value"),
+        F.min(id_col).alias("min_id"),
+        F.max(id_col).alias("max_id"),
+    ]
 
 
 @query("co_aggregated_harness", _CO_AGG_HARNESS_ORACLE)
@@ -3853,9 +4068,7 @@ def q_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sql_api_pricing_summary",
-    """
+_PRICING_SUMMARY_SQL = """
 SELECT l_returnflag, l_linestatus,
        sum(l_quantity) AS sum_qty,
        CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_base_price,
@@ -3865,8 +4078,10 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= DATE '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
-""",
-)
+"""
+
+
+@query("sql_api_pricing_summary", _PRICING_SUMMARY_SQL)
 def q_sql_api_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL surface end-to-end: register the harness tables as temp
     views and run a TPC-H-Q1-style pricing summary as SQL TEXT through
@@ -3875,19 +4090,7 @@ def q_sql_api_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               sum(l_quantity) AS sum_qty,
-               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_base_price,
-               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE) AS sum_disc_price,
-               round(avg(l_quantity), 6) AS avg_qty,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= DATE '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-        """
-    )
+    return spark.sql(_PRICING_SUMMARY_SQL)
 
 
 @query(
@@ -4560,9 +4763,7 @@ def q_tpch_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
-@query(
-    "sql_api_correlated_scalar",
-    """
+_CORRELATED_SCALAR_SQL = """
 SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 2) AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#11'
@@ -4570,8 +4771,10 @@ WHERE p_brand = 'Brand#11'
     SELECT 0.2 * avg(l_quantity) FROM lineitem l2
     WHERE l2.l_partkey = lineitem.l_partkey
   )
-""",
-)
+"""
+
+
+@query("sql_api_correlated_scalar", _CORRELATED_SCALAR_SQL)
 def q_sql_api_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape AS SQL TEXT: a correlated scalar subquery
     (per-part average quantity) in the WHERE clause. Catalyst
@@ -4580,20 +4783,10 @@ def q_sql_api_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql("""
-        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 2) AS avg_yearly
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#11'
-          AND l_quantity < (
-            SELECT 0.2 * avg(l_quantity) FROM lineitem l2
-            WHERE l2.l_partkey = lineitem.l_partkey
-          )
-    """)
+    return spark.sql(_CORRELATED_SCALAR_SQL)
 
 
-@query(
-    "sql_api_exists_semi",
-    """
+_EXISTS_SEMI_SQL = """
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -4607,8 +4800,10 @@ WHERE o_orderdate >= TIMESTAMP '1997-01-01'
     WHERE l_orderkey = o_orderkey AND l_quantity > 49
   )
 GROUP BY o_orderpriority
-""",
-)
+"""
+
+
+@query("sql_api_exists_semi", _EXISTS_SEMI_SQL)
 def q_sql_api_exists_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape AS SQL TEXT with BOTH polarities: EXISTS
     (decorrelates to a left-semi join) and NOT EXISTS (left-anti) in
@@ -4616,21 +4811,7 @@ def q_sql_api_exists_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql("""
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-          AND o_orderdate < TIMESTAMP '1998-01-01'
-          AND EXISTS (
-            SELECT 1 FROM lineitem
-            WHERE l_orderkey = o_orderkey AND l_discount > 0.08
-          )
-          AND NOT EXISTS (
-            SELECT 1 FROM lineitem
-            WHERE l_orderkey = o_orderkey AND l_quantity > 49
-          )
-        GROUP BY o_orderpriority
-    """)
+    return spark.sql(_EXISTS_SEMI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -4658,43 +4839,13 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks; Spark bounds each side's join state from the range
     predicate. availableNow ordered replay + generous watermark ==
     exactly the batch join, hash-compared via the oracle."""
-    from ..streaming.join_stream import stream_stream_interval_join
-
-    ev = load_table(spark, "events", sf_dir).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
     # 2 data micro-batches (1 carry: batch-1 view state joins batch-2
     # purchases) at 2 partitions: the stream-stream join keeps FOUR
     # state stores per partition, so store count — not parallelism —
     # dominates at harness scale (r9 grid: 3b/4p 4.3 s, 2b/2p 3.0 s;
     # state commit is CPU-side serialization, tmpfs checkpoints were
     # measured flat).
-    n_batches = 2
-
-    def build(feed: DataFrame) -> DataFrame:
-        purchases = feed.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
-        )
-        views = feed.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("v_id"),
-            F.col("ts").alias("v_ts"),
-        ).withColumnRenamed("v_user", "user_id")
-        joined = stream_stream_interval_join(
-            purchases, views, key="user_id",
-            left_time="p_ts", right_time="v_ts", lookback="1 hour",
-        )
-        return joined.select(
-            F.col("l.user_id").alias("user_id"),
-            F.col("l.p_id").alias("purchase_id"),
-            F.col("r.v_id").alias("view_id"),
-            (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
-        )
-
-    return _replay(
-        spark, ev, n_batches, ["ts", "event_id"], "sg-ssj", sf_dir, build,
-        partitions=2,
-    )
+    return _interval_join_stream(spark, sf_dir, "inner", "sg-ssj", n_batches=2)
 
 
 # ---------------------------------------------------------------------------
@@ -7741,8 +7892,8 @@ def _start_paged_rest_server(
     seen_sites: set[str] | None = None,
 ):
     """Loopback ThreadingHTTPServer speaking the paged-REST protocol
-    (`items` + `_links.next`) over a per-site item dict — the shared
-    scaffolding behind the S1/S4 scan entries. Returns the started
+    (`items` + `_links.next`) over a per-site item dict — the server
+    behind :func:`_paged_rest_events`. Returns the started
     server; callers own shutdown()/server_close(). ``seen_sites``
     (optional) records every site a request ever asked for — the
     wire-level proof that partition pruning pruned."""
@@ -7819,52 +7970,17 @@ def q_rest_scan_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed the server (harness scaffolding — production servers already
     hold the data), and the result is collected before the server
     shuts down so the returned frame outlives it."""
-    from ..sources.rest_datasource import PagedRestDataSource
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .filter(F.col("event_id") < 3000)
-        .select("event_id", "user_id", "event_type", "value")
+    with _paged_rest_events(
+        spark, sf_dir, "id long, site string, etype string, value double"
+    ) as df:
+        rows = df.groupBy("site", F.col("etype").alias("event_type")).agg(
+            *_rest_totals("id")
+        ).collect()
+    return spark.createDataFrame(
+        rows,
+        "site string, event_type string, n long, total_value double,"
+        " min_id long, max_id long",
     )
-    by_site: dict[str, list[dict]] = {}
-    for r in ev.collect():  # bounded: <=3000 rows, seed data only
-        by_site.setdefault(f"S{r.user_id % 3}", []).append(
-            {"id": r.event_id, "etype": r.event_type, "value": r.value}
-        )
-    for items in by_site.values():
-        items.sort(key=lambda d: d["id"])
-    srv = _start_paged_rest_server(by_site, page_size=250)
-    try:
-        with _python_pushdown_enabled(spark):
-            spark.dataSource.register(PagedRestDataSource)
-            df = (
-                spark.read.format("paged_rest")
-                .schema("id long, site string, etype string, value double")
-                .option("base_url", f"http://127.0.0.1:{srv.server_address[1]}")
-                .option("entity", "events")
-                .option("sites", ",".join(sorted(by_site)))
-                .option("start_date", "2024-01-01")
-                .load()
-            )
-            agg = df.groupBy(
-                "site", F.col("etype").alias("event_type")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.round(F.sum(F.col("value").cast(_MONEY)), 2)
-                .cast("double")
-                .alias("total_value"),
-                F.min("id").alias("min_id"),
-                F.max("id").alias("max_id"),
-            )
-            rows = agg.collect()  # must materialize while the server lives
-        return spark.createDataFrame(
-            rows,
-            "site string, event_type string, n long, total_value double,"
-            " min_id long, max_id long",
-        )
-    finally:
-        srv.shutdown()
-        srv.server_close()
 
 
 @query("rest_sink_harness", _REST_SCAN_ORACLE)
@@ -7890,14 +8006,7 @@ def q_rest_sink_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.concat(F.lit("S"), (F.col("user_id") % 3).cast("string")).alias("site"),
         "event_type",
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(F.sum(F.col("value").cast(_MONEY)), 2)
-        .cast("double")
-        .alias("total_value"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
+    ).agg(*_rest_totals("event_id"))
 
     staged: dict[str, tuple[str, list]] = {}
     visible: list[dict] = []
@@ -8616,14 +8725,7 @@ def q_pagerank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays O(1) in iterations."""
     from ..operators.graph import pagerank
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    return pagerank(edges, "src", "dst", iterations=3)
+    return pagerank(_lineitem_graph(spark, sf_dir), "src", "dst", iterations=3)
 
 
 # ---------------------------------------------------------------------------
@@ -8695,14 +8797,8 @@ def q_pagerank_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     space that grows with the table."""
     from ..operators.graph import pagerank
 
-    li = load_table(spark, "lineitem", sf_dir)
-    key = F.col("l_orderkey").cast("long")
-    head = (key - (key % 32)).cast("long")
-    stars = li.filter(key % 32 != 0).select(key.alias("src"), head.alias("dst"))
-    chain = li.filter(head >= 32).select(
-        head.alias("src"), (head - 32).alias("dst")
-    )
-    return pagerank(stars.unionByName(chain), "src", "dst", iterations=3)
+    edges = _lineitem_star_chain(spark, sf_dir, head_loops=False)
+    return pagerank(edges, "src", "dst", iterations=3)
 
 
 # ---------------------------------------------------------------------------
@@ -8738,72 +8834,14 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     window. Certified against the batch LEFT JOIN; the sentinel trick
     (module doc of streaming/join_stream.py) is what makes the outer
     side deterministic on a bounded replay."""
-    import datetime as _dt
-
-    from ..streaming.join_stream import stream_stream_interval_join
-
-    ev = load_table(spark, "events", sf_dir).select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
     # ONE data batch (r9 verdict #3 accounting): cross-data-batch
-    # match carry is the INNER twin's certified concern; what is
-    # outer-specific — unmatched rows may only drain once the
-    # watermark proves no match can arrive — inherently spans the
-    # data batch and the sentinel batches whatever the data batch
-    # count, so a second data slice bought a 4th micro-batch's state
-    # commits without adding covered semantics.
-    n_batches = 1
-    # r12 floor: the sentinel pair rides IN the data batch (watermarks
-    # update at batch END — a dedicated sentinel batch bought nothing;
-    # the pair still cannot join real rows, 30d >> lookback, nor each
-    # other, 2h > lookback+delay). The single ZERO-ROW trailing batch
-    # is what applies the advanced watermark (real-max + 30d - delay)
-    # and drains every real unmatched purchase: 2 micro-batches total.
-    staged = ev.unionByName(
-        spark.createDataFrame(
-            [
-                (-1, -1, max_ts + _dt.timedelta(days=30), "purchase"),
-                (-1, -2, max_ts + _dt.timedelta(days=30, hours=2), "view"),
-            ],
-            "user_id long, event_id long, ts timestamp, event_type string",
-        )
+    # match carry is the INNER twin's certified concern; draining the
+    # unmatched rows spans the data batch and the trailing batch
+    # whatever the data batch count, so a second data slice bought one
+    # more micro-batch's state commits without adding covered semantics.
+    return _interval_join_stream(
+        spark, sf_dir, "left_outer", "sg-ssjo", n_batches=1
     )
-
-    def build(feed: DataFrame) -> DataFrame:
-        purchases = feed.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
-        )
-        views = feed.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("v_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        joined = stream_stream_interval_join(
-            purchases, views, key="user_id",
-            left_time="p_ts", right_time="v_ts", lookback="1 hour",
-            delay="1 minute", how="left_outer",
-        )
-        return joined.select(
-            F.col("l.user_id").alias("user_id"),
-            F.col("l.p_id").alias("purchase_id"),
-            F.col("r.v_id").alias("view_id"),
-            (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
-        )
-
-    out = _replay(
-        spark, staged, n_batches, ["ts", "event_id"], "sg-ssjo", sf_dir, build,
-        partitions=2, drain=True,
-    )
-    # The sentinel filter must stay OUT of the streaming query:
-    # user_id >= 0 is a predicate on the equi-join KEY, so Catalyst
-    # legally pushes it through the join into BOTH source scans —
-    # which prunes the sentinel rows before the watermark operator
-    # ever sees them, and the watermark (computed post-scan) never
-    # passes the real data. Found the hard way: offsets advanced,
-    # srcIn=0, one unmatched purchase never drained. Filter on the
-    # SINK table instead (a batch query, outside the stream).
-    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -9441,14 +9479,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a simple undirected graph)."""
     from ..operators.graph import triangle_count
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    return triangle_count(edges, "src", "dst")
+    return triangle_count(_lineitem_graph(spark, sf_dir), "src", "dst")
 
 
 # ---------------------------------------------------------------------------
@@ -9484,14 +9515,9 @@ def q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph as pagerank/triangle_count."""
     from ..operators.graph import bfs_levels
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
+    return bfs_levels(
+        _lineitem_graph(spark, sf_dir), "src", "dst", sources=[0], max_hops=3
     )
-    return bfs_levels(edges, "src", "dst", sources=[0], max_hops=3)
 
 
 # ---------------------------------------------------------------------------
@@ -9528,53 +9554,18 @@ def q_rest_pruned_scan_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the server recorded requests for exactly {S0, S2}; S1's whole
     page chain (a third of the network) was pruned before any HTTP.
     The aggregate of what ARRIVED is hashed against parquet truth."""
-    from ..sources.rest_datasource import PagedRestDataSource
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .filter(F.col("event_id") < 3000)
-        .select("event_id", "user_id", "event_type", "value")
-    )
-    by_site: dict[str, list[dict]] = {}
-    for r in ev.collect():  # bounded: <=3000 rows, seed data only
-        by_site.setdefault(f"S{r.user_id % 3}", []).append(
-            {"id": r.event_id, "etype": r.event_type, "value": r.value}
-        )
-    for items in by_site.values():
-        items.sort(key=lambda d: d["id"])
     seen: set[str] = set()
-    srv = _start_paged_rest_server(by_site, page_size=250, seen_sites=seen)
-    try:
-        with _python_pushdown_enabled(spark):
-            spark.dataSource.register(PagedRestDataSource)
-            df = (
-                spark.read.format("paged_rest")
-                .schema("id long, site string, value double")  # no etype
-                .option("base_url", f"http://127.0.0.1:{srv.server_address[1]}")
-                .option("entity", "events")
-                .option("sites", ",".join(sorted(by_site)))
-                .option("start_date", "2024-01-01")
-                .load()
-                .filter(F.col("site").isin("S0", "S2"))
-            )
-            agg = df.agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.round(F.sum(F.col("value").cast(_MONEY)), 2)
-                .cast("double")
-                .alias("total_value"),
-                F.min("id").alias("min_id"),
-                F.max("id").alias("max_id"),
-            )
-            rows = agg.collect()  # must materialize while the server lives
-        assert seen == {"S0", "S2"}, (
-            f"partition pruning leaked to the wire: sites fetched = {seen}"
-        )
-        return spark.createDataFrame(
-            rows, "n long, total_value double, min_id long, max_id long"
-        )
-    finally:
-        srv.shutdown()
-        srv.server_close()
+    with _paged_rest_events(
+        spark, sf_dir, "id long, site string, value double", seen  # no etype
+    ) as df:
+        pruned = df.filter(F.col("site").isin("S0", "S2"))
+        rows = pruned.agg(*_rest_totals("id")).collect()
+    assert seen == {"S0", "S2"}, (
+        f"partition pruning leaked to the wire: sites fetched = {seen}"
+    )
+    return spark.createDataFrame(
+        rows, "n long, total_value double, min_id long, max_id long"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -9769,14 +9760,7 @@ def q_kcore_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) deep — survivors with their surviving-subgraph degree."""
     from ..operators.graph import kcore
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    return kcore(edges, "src", "dst", k=13, rounds=3)
+    return kcore(_lineitem_graph(spark, sf_dir), "src", "dst", k=13, rounds=3)
 
 
 # ---------------------------------------------------------------------------
@@ -9848,14 +9832,8 @@ def q_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     before settling on the K30 core."""
     from ..operators.graph import kcore_converged
 
-    li = load_table(spark, "lineitem", sf_dir)
-    fam_a = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    fam_b = li.select(
+    fam_a = _lineitem_graph(spark, sf_dir)
+    fam_b = load_table(spark, "lineitem", sf_dir).select(
         (10000 + F.col("l_orderkey") % 30).alias("src"),
         (10000 + F.expr("l_orderkey div 30") % 30).alias("dst"),
     )
@@ -9911,34 +9889,8 @@ def q_streaming_unique_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch END, so a dedicated sentinel batch buys nothing — and the
     single zero-row trailing batch applies it: n_batches + 1
     micro-batches total, each stateful batch carrying real work."""
-    import datetime as _dt
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts")
-    max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
-    staged = ev.unionByName(
-        spark.createDataFrame(
-            [(-1, -1, max_ts + _dt.timedelta(days=30))],
-            "user_id long, event_id long, ts timestamp",
-        )
-    )
-    n_batches = 2  # 1 cross-batch DEDUP-state carry (the point)
-    visitors = _replay(
-        spark, staged, n_batches, ["ts", "event_id"], "sg-uniq", sf_dir,
-        lambda feed: (
-            feed.withWatermark("ts", "1 minute")
-            .withColumn("day", F.date_trunc("day", F.col("ts")))
-            .dropDuplicates(["day", "user_id"])
-            .groupBy(F.window("ts", "1 day").alias("w"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_visitors"))
-            .select(F.col("w.start").cast("date").alias("Date"), "n_visitors")
-        ),
-        partitions=2, drain=True,
-    )
-    # the sentinel's own far-future window never closes, so it
-    # never reaches the sink; the bound filter is defensive only.
-    # ISO-string Date on both engines (r14 WARN sweep).
-    return visitors.filter(F.col("Date") <= F.lit(max_ts.date())).select(
-        F.date_format("Date", "yyyy-MM-dd").alias("Date"), "n_visitors"
+    return _unique_visitors_stream(
+        spark, sf_dir, "sg-uniq", "1 minute", DataFrame.dropDuplicates
     )
 
 
@@ -9968,39 +9920,14 @@ def q_streaming_unique_visitors_wm(spark: SparkSession, sf_dir: str) -> DataFram
     count(DISTINCT) oracle. Sentinel accounting (r12 floor): the
     max+30d row rides IN the last data batch (watermarks update at
     batch end) and the single zero-row trailing batch applies it."""
-    import datetime as _dt
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts")
-    max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
-    staged = ev.unionByName(
-        spark.createDataFrame(
-            [(-1, -1, max_ts + _dt.timedelta(days=30))],
-            "user_id long, event_id long, ts timestamp",
-        )
-    )
-    n_batches = 2  # 1 cross-batch DEDUP-state carry (the point)
-    visitors = _replay(
-        spark, staged, n_batches, ["ts", "event_id"], "sg-uniqwm", sf_dir,
-        lambda feed: (
-            # 2-day delay: a (day, user) pair's duplicates span < 24h
-            # of event time and batches arrive ts-ordered, so every
-            # duplicate lands while the first occurrence's state is
-            # live — exact dedup — while the watermark still closes
-            # every real day window once the sentinel advances it.
-            feed.withWatermark("ts", "2 days")
-            .withColumn("day", F.date_trunc("day", F.col("ts")))
-            .dropDuplicatesWithinWatermark(["day", "user_id"])
-            .groupBy(F.window("ts", "1 day").alias("w"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_visitors"))
-            .select(F.col("w.start").cast("date").alias("Date"), "n_visitors")
-        ),
-        partitions=2, drain=True,
-    )
-    # the sentinel's own far-future window never closes, so it
-    # never reaches the sink; the bound filter is defensive only.
-    # ISO-string Date on both engines (r14 WARN sweep).
-    return visitors.filter(F.col("Date") <= F.lit(max_ts.date())).select(
-        F.date_format("Date", "yyyy-MM-dd").alias("Date"), "n_visitors"
+    # 2-day delay: a (day, user) pair's duplicates span < 24h of event
+    # time and batches arrive ts-ordered, so every duplicate lands
+    # while the first occurrence's state is live — exact dedup — while
+    # the watermark still closes every real day window once the
+    # sentinel advances it.
+    return _unique_visitors_stream(
+        spark, sf_dir, "sg-uniqwm", "2 days",
+        DataFrame.dropDuplicatesWithinWatermark,
     )
 
 
@@ -10039,17 +9966,7 @@ def q_neighbor_feature_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + one aggregate; integer-exact sum, one-division mean."""
     from ..operators.graph import neighbor_agg
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    nodes = edges.select(F.col("src").alias("node")).unionByName(
-        edges.select(F.col("dst").alias("node"))
-    ).distinct()
-    feats = nodes.select("node", (F.col("node") % 97).alias("f"))
+    edges, feats = _lineitem_graph_features(spark, sf_dir)
     return neighbor_agg(edges, "src", "dst", feats, "node", "f")
 
 
@@ -10106,17 +10023,7 @@ def q_neighbor_feature_agg_2round(spark: SparkSession, sf_dir: str) -> DataFrame
     round 2 engine-exact."""
     from ..operators.graph import neighbor_agg_rounds
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    nodes = edges.select(F.col("src").alias("node")).unionByName(
-        edges.select(F.col("dst").alias("node"))
-    ).distinct()
-    feats = nodes.select("node", (F.col("node") % 97).alias("f"))
+    edges, feats = _lineitem_graph_features(spark, sf_dir)
     return neighbor_agg_rounds(
         edges, "src", "dst", feats, "node", "f", rounds=2, scale=1_000_000
     )
@@ -10273,56 +10180,10 @@ def q_streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFram
     they cannot join each other) rides IN the data batch and advances
     BOTH watermarks at its end; the single zero-row trailing batch
     applies them (r12 floor accounting)."""
-    import datetime as _dt
-
-    from ..streaming.join_stream import stream_stream_interval_join
-
-    ev = load_table(spark, "events", sf_dir).select(
-        "user_id", "event_id", "ts", "event_type"
+    # one data batch: cross-batch carry is the inner twin's concern
+    return _interval_join_stream(
+        spark, sf_dir, "full_outer", "sg-ssjf", n_batches=1
     )
-    max_ts = ev.agg(F.max("ts")).first()[0]  # bounded: one scalar
-    staged = ev.unionByName(
-        spark.createDataFrame(
-            [
-                (-1, -1, max_ts + _dt.timedelta(days=30), "purchase"),
-                (-1, -2, max_ts + _dt.timedelta(days=30, hours=2), "view"),
-            ],
-            "user_id long, event_id long, ts timestamp, event_type string",
-        )
-    )
-    n_batches = 1  # cross-batch carry is the inner twin's concern
-
-    def build(feed: DataFrame) -> DataFrame:
-        purchases = feed.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
-        )
-        views = feed.filter(F.col("event_type") == "view").select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("v_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        joined = stream_stream_interval_join(
-            purchases, views, key="user_id",
-            left_time="p_ts", right_time="v_ts", lookback="1 hour",
-            delay="1 minute", how="full_outer",
-        )
-        # the sink filter needs BOTH sides' user_id since either may
-        # be the null-padded one.
-        return joined.select(
-            F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
-            F.col("l.p_id").alias("purchase_id"),
-            F.col("r.v_id").alias("view_id"),
-            (F.unix_micros("l.p_ts") - F.unix_micros("r.v_ts")).alias("gap_us"),
-        )
-
-    out = _replay(
-        spark, staged, n_batches, ["ts", "event_id"], "sg-ssjf", sf_dir, build,
-        partitions=2, drain=True,
-    )
-    # sentinel filter stays OUT of the stream (see the outer twin: an
-    # equi-key predicate pushes into both scans and stalls the
-    # watermark).
-    return out.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -10387,14 +10248,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (count desc, label asc) tie rule."""
     from ..operators.graph import label_propagation
 
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = li.select(
-        (F.col("l_orderkey") % 997).alias("src"),
-        ((F.col("l_orderkey") * 31 + F.col("l_linenumber") * 7) % 997).alias(
-            "dst"
-        ),
-    )
-    return label_propagation(edges, "src", "dst", rounds=2)
+    return label_propagation(_lineitem_graph(spark, sf_dir), "src", "dst", rounds=2)
 
 
 # ---------------------------------------------------------------------------
@@ -10466,16 +10320,8 @@ def q_label_propagation_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     table instead of a fixed 997-node fold."""
     from ..operators.graph import label_propagation
 
-    li = load_table(spark, "lineitem", sf_dir)
-    key = F.col("l_orderkey").cast("long")
-    head = (key - (key % 32)).cast("long")
-    stars = li.select(key.alias("src"), head.alias("dst"))
-    chain = li.filter(head >= 32).select(
-        head.alias("src"), (head - 32).alias("dst")
-    )
-    return label_propagation(
-        stars.unionByName(chain), "src", "dst", rounds=2
-    )
+    edges = _lineitem_star_chain(spark, sf_dir, head_loops=True)
+    return label_propagation(edges, "src", "dst", rounds=2)
 
 
 # ---------------------------------------------------------------------------
@@ -10502,6 +10348,8 @@ SELECT user_id,
 FROM events
 GROUP BY user_id
 """
+# signup is deliberately absent: explicit values mean explicit omission
+_PIVOT_CATS = ("view", "purchase", "click", "error")
 
 
 @query("pivot_event_types", _PIVOT_ORACLE)
@@ -10518,7 +10366,7 @@ def q_pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     out = (
         ev.groupBy("user_id")
-        .pivot("event_type", ["view", "purchase", "click", "error"])
+        .pivot("event_type", list(_PIVOT_CATS))
         .agg(
             F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
             .cast("double")
@@ -10526,7 +10374,7 @@ def q_pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "user_id",
-        *[F.col(c).alias(f"{c}_total") for c in ("view", "purchase", "click", "error")],
+        *[F.col(c).alias(f"{c}_total") for c in _PIVOT_CATS],
     )
 
 
@@ -10552,19 +10400,18 @@ def q_pivot_event_types_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order-exact before the final rounding."""
     from ..operators.aggregate import pivot_wide
 
-    cats = ("view", "purchase", "click", "error")
     ev = load_table(spark, "events", sf_dir).withColumn(
         "__val", F.col("value").cast(_MONEY)
     )
     wide = pivot_wide(
-        ev, ["user_id"], "event_type", cats, "__val",
+        ev, ["user_id"], "event_type", _PIVOT_CATS, "__val",
         agg="sum", suffix="_total",
     )
     return wide.select(
         "user_id",
         *[
             F.round(F.col(f"{c}_total"), 2).cast("double").alias(f"{c}_total")
-            for c in cats
+            for c in _PIVOT_CATS
         ],
     )
 
@@ -10614,19 +10461,18 @@ def q_pivot_event_types_wide_multi(
     matched rows, 0 for an absent category on both engines."""
     from ..operators.aggregate import pivot_wide_multi
 
-    cats = ("view", "purchase", "click", "error")
     ev = load_table(spark, "events", sf_dir).withColumn(
         "__val", F.col("value").cast(_MONEY)
     )
     wide = pivot_wide_multi(
-        ev, ["user_id"], "event_type", cats,
+        ev, ["user_id"], "event_type", _PIVOT_CATS,
         [("total", "sum", "__val"), ("n", "count", "value")],
     )
     return wide.select(
         "user_id",
         *[
             col
-            for c in cats
+            for c in _PIVOT_CATS
             for col in (
                 F.round(F.col(f"{c}_total"), 2)
                 .cast("double")

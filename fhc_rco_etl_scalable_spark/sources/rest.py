@@ -30,19 +30,14 @@ from .json_flatten import flatten_structs
 DEFAULT_ROW_SIZE = 9999
 
 
-def default_fetch(
-    url: str,
-    timeout: float = 30.0,
-    retries: int = 3,
-    backoff: float = 0.5,
-    headers: dict[str, str] | None = None,
-) -> dict:
-    """Production HTTP fetcher for ``rest_scan``: urllib GET with
-    timeout and exponential-backoff retries on transient failures
-    (5xx, 429 rate limiting — honoring ``Retry-After`` when the server
-    sends one — and connection resets). Other 4xx raise immediately:
-    retrying a bad request only hides the bug. Injectable ``fetch``
-    callables remain the test/fixture path; this is the live one."""
+def _send_with_retries(req, timeout: float, retries: int, backoff: float) -> str:
+    """Send ``req`` (a ``urllib.request.Request``) and return the
+    decoded response body, retrying transient failures with exponential
+    backoff: 5xx, 429 rate limiting (honoring ``Retry-After`` when the
+    server sends one, clamped to 60 s) and connection resets. Other
+    4xx raise immediately: retrying a bad request only hides the bug.
+    The one retry policy of the GET (:func:`default_fetch`) and POST
+    (``rest_datasource._post_json``) paths."""
     import time as _time
     import urllib.error
     import urllib.request
@@ -53,9 +48,8 @@ def default_fetch(
     for attempt in range(retries + 1):
         retry_after: float | None = None
         try:
-            req = urllib.request.Request(url, headers=headers or {})
             with urllib.request.urlopen(req, timeout=timeout) as resp:
-                return json.loads(resp.read().decode("utf-8"))
+                return resp.read().decode("utf-8")
         except urllib.error.HTTPError as exc:
             # 429 is the MOST common transient failure for paginated
             # ingest — treat it like 5xx, not like a client bug
@@ -79,6 +73,23 @@ def default_fetch(
                 retry_after if retry_after is not None else backoff * (2 ** attempt)
             )
     raise last  # type: ignore[misc]
+
+
+def default_fetch(
+    url: str,
+    timeout: float = 30.0,
+    retries: int = 3,
+    backoff: float = 0.5,
+    headers: dict[str, str] | None = None,
+) -> dict:
+    """Production HTTP fetcher for ``rest_scan``: urllib GET with
+    timeout and the transient-failure retries of
+    :func:`_send_with_retries`. Injectable ``fetch`` callables remain
+    the test/fixture path; this is the live one."""
+    import urllib.request
+
+    req = urllib.request.Request(url, headers=headers or {})
+    return json.loads(_send_with_retries(req, timeout, retries, backoff))
 
 
 def iter_pages(

@@ -240,38 +240,25 @@ def _post_json(
     retries: int = 4,
     backoff: float = 0.5,
 ) -> dict:
-    """POST with the same transient-failure policy as the read path's
-    ``default_fetch`` (5xx/429/connection errors retried with
-    exponential backoff, other 4xx raise immediately) — a momentary
-    throttle on one partition's stage call must not fail the job.
-    Safe to retry: stage is idempotent per batch_id, and commit/abort
-    are idempotent per job_id."""
+    """POST with the read path's transient-failure policy
+    (``rest._send_with_retries``: 5xx/429/connection errors retried,
+    429 waiting ``Retry-After``, other 4xx raise immediately) — a
+    momentary throttle on one partition's stage call must not fail the
+    job. Safe to retry: stage is idempotent per batch_id, and
+    commit/abort are idempotent per job_id."""
     import json as _json
-    import time as _time
-    import urllib.error
     import urllib.request
 
-    last: Exception | None = None
-    for attempt in range(retries + 1):
-        req = urllib.request.Request(
-            url,
-            data=_json.dumps(payload).encode("utf-8"),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
-                body = resp.read().decode("utf-8")
-                return _json.loads(body) if body else {}
-        except urllib.error.HTTPError as exc:
-            if exc.code < 500 and exc.code != 429:
-                raise
-            last = exc
-        except (urllib.error.URLError, TimeoutError, ConnectionError) as exc:
-            last = exc
-        if attempt < retries:
-            _time.sleep(backoff * (2**attempt))
-    raise last  # type: ignore[misc]
+    from fhc_rco_etl_scalable_spark.sources.rest import _send_with_retries
+
+    req = urllib.request.Request(
+        url,
+        data=_json.dumps(payload).encode("utf-8"),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    body = _send_with_retries(req, timeout, retries, backoff)
+    return _json.loads(body) if body else {}
 
 
 class RestBatchWriter(DataSourceWriter):

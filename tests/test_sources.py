@@ -1,6 +1,8 @@
 """Source adapters: paginated REST (fixture fetch), JSON flattening,
 JDBC scan construction."""
 
+import pytest
+
 from fhc_rco_etl_scalable_spark.sources.jdbc import JdbcWindowScan
 from fhc_rco_etl_scalable_spark.sources.json_flatten import (
     explode_records,
@@ -202,20 +204,26 @@ def test_rest_scan_live_http_server(spark):
         srv.server_close()
 
 
-def test_default_fetch_retries_429_and_honors_retry_after():
+@pytest.mark.parametrize("method", ["GET", "POST"])
+def test_default_fetch_retries_429_and_honors_retry_after(method):
     """429 (rate limiting) is the most common transient failure for
     paginated ingest: it must be retried like 5xx — waiting the
     server's Retry-After when present — while other 4xx still raise
-    immediately."""
+    immediately. The read path (GET, ``default_fetch``) and the sink
+    path (POST, ``_post_json``) share one retry policy."""
     import http.server
     import json as _json
     import threading
     import time as _time
-
-    import pytest
     import urllib.error
 
     from fhc_rco_etl_scalable_spark.sources.rest import default_fetch
+    from fhc_rco_etl_scalable_spark.sources.rest_datasource import _post_json
+
+    def call(url):
+        if method == "GET":
+            return default_fetch(url, retries=2, backoff=0.001)
+        return _post_json(url, {}, retries=2, backoff=0.001)
 
     state = {"throttles_left": 1, "throttled_at": 0.0, "served_at": 0.0}
 
@@ -240,6 +248,8 @@ def test_default_fetch_retries_429_and_honors_retry_after():
             self.end_headers()
             self.wfile.write(payload)
 
+        do_POST = do_GET
+
         def log_message(self, *a):
             pass
 
@@ -248,13 +258,13 @@ def test_default_fetch_retries_429_and_honors_retry_after():
     try:
         base = f"http://127.0.0.1:{srv.server_address[1]}"
         # backoff tiny so a pass proves the 1 s wait came from Retry-After
-        out = default_fetch(f"{base}/ok", retries=2, backoff=0.001)
+        out = call(f"{base}/ok")
         assert out == {"items": [{"id": 1}]}
         assert state["throttles_left"] == 0
         assert state["served_at"] - state["throttled_at"] >= 0.9
         # other 4xx still fail fast
         with pytest.raises(urllib.error.HTTPError):
-            default_fetch(f"{base}/bad", retries=2, backoff=0.001)
+            call(f"{base}/bad")
     finally:
         srv.shutdown()
         srv.server_close()

@@ -840,12 +840,7 @@ def main() -> int:
         PagedRestDataSource,
     )
 
-    _pd_conf = "spark.sql.python.filterPushdown.enabled"
-    _prior_pd = {r["key"]: r["value"] for r in spark.sql("SET").collect()}.get(
-        _pd_conf
-    )
-    try:
-        spark.conf.set(_pd_conf, "true")
+    with hq._python_pushdown_enabled(spark):
         spark.dataSource.register(PagedRestDataSource)
         scan = (
             spark.read.format("paged_rest")
@@ -871,11 +866,6 @@ def main() -> int:
             cols == ["id", "site", "value"],
             detail=f"scan cols {cols}",
         )
-    finally:
-        if _prior_pd is None:
-            spark.conf.unset(_pd_conf)
-        else:
-            spark.conf.set(_pd_conf, _prior_pd)
 
     print(f"\n{len(failures)} hard failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
