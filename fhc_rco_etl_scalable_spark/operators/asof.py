@@ -304,12 +304,11 @@ def pit_lookup(
     join on ``key`` as a residual filter. Set ``broadcast_dim=False``
     when the chain genuinely outgrows ``autoBroadcastJoinThreshold``/
     executor memory: the fallback is NOT a shuffled range join (whose
-    non-equi residual would explode on hot keys) but the union/ffill
-    as-of trick from :func:`asof_join` applied to ``valid_from`` —
-    tag facts and versions, union on ``key``, ONE exchange, a single
-    in-partition window scan carries the latest version starting at
-    or before each fact, and the ``valid_to`` bound is a projection
-    on the picked struct. Identical output on any chain
+    non-equi residual would explode on hot keys) but :func:`asof_join`
+    on ``valid_from`` — ONE exchange on ``key``, a single in-partition
+    window scan carries the latest version starting at or before each
+    fact, and the ``valid_to`` bound is a projection on the picked
+    values. Identical output on any chain
     :func:`validate_scd2_chain` certifies sound (on a BROKEN chain
     with overlapping versions the broadcast path duplicates facts
     while the fallback picks one version — run the validator, that is
@@ -335,87 +334,45 @@ def pit_lookup(
         )
         return facts.join(d, cond, "left").drop("__dk", "__vf", "__vt")
 
-    from pyspark.sql import types as T
-
-    # The fallback stages working columns ON the facts frame (the
-    # broadcast path only decorates the dim side), so a facts frame
-    # already carrying one of those names — or a dim_<c> output name —
-    # would analyze into duplicate/ambiguous columns or a silently
-    # wrong pick. Fail fast, mirroring asof_join's value_cols guard.
-    reserved = {"__ts", "__is_left", "__v", "__pick"}
-    out_names = {f"dim_{c}" for c in cols}
-    clash = sorted(set(facts.columns) & (reserved | out_names))
+    # The fallback is asof_join on valid_from with valid_to riding
+    # among the values. asof_join stages its working columns and the
+    # dim_<c> outputs ON the facts frame (the broadcast path only
+    # decorates the dim side), so a facts frame already carrying one
+    # of those names would analyze into duplicate/ambiguous columns or
+    # a silently wrong pick. Fail fast, mirroring asof_join's
+    # value_cols guard.
+    out_cols = [f"dim_{c}" for c in cols]
+    tie = ["__open", "__vt"]
+    reserved = {"__ts", "__is_left", "__v", "__pick", "__vt"}
+    reserved |= {f"__tb_{c}" for c in tie}
+    clash = sorted(set(facts.columns) & (reserved | set(out_cols)))
     if clash:
         raise ValueError(
             f"pit_lookup fallback: facts columns {clash} collide with "
-            "working/output names (__ts/__is_left/__v/__pick/dim_<c>); "
-            "alias them first"
+            "working/output names (__ts/__is_left/__v/__pick/__vt/"
+            "__tb_*/dim_<c>); alias them first"
         )
-
-    # union/ffill fallback: one shuffle on key, no range join. A NULL
-    # key or NULL valid_from version can never match (SQL semantics) —
-    # filter dim-side; NULL-key facts keep their row with NULL
-    # attributes (they land in the NULL partition with no donors).
-    fields = [T.StructField("__vt", dim.schema[valid_to].dataType)]
-    fields += [
-        T.StructField(f"dim_{c}", dim.schema[c].dataType) for c in cols
-    ]
-    v_type = T.StructType(fields)
-    fact_cols = list(facts.columns)
-    l_tag = facts.select(
-        *fact_cols,
-        F.col(fact_ts).alias("__ts"),
-        F.lit(1).alias("__is_left"),
-        F.lit(None).cast(v_type).alias("__v"),
-    )
-    r_tag = dim.filter(
-        F.col(key).isNotNull() & F.col(valid_from).isNotNull()
-    ).select(
-        *[
-            F.lit(None).cast(facts.schema[c].dataType).alias(c)
-            for c in fact_cols
-            if c != key
-        ],
+    # Among equal valid_from versions (already a broken chain) the
+    # open one wins, otherwise the latest valid_to: the backward scan
+    # keeps the LAST version in (valid_from, valid_to IS NULL,
+    # valid_to) order.
+    versions = dim.select(
         F.col(key),
-        F.col(valid_from).alias("__ts"),
-        F.lit(0).alias("__is_left"),
-        F.struct(
-            F.col(valid_to).alias("__vt"),
-            *[F.col(c).alias(f"dim_{c}") for c in cols],
-        ).alias("__v"),
-    ).select(*l_tag.columns)
-    # version rows sort BEFORE an equal-ts fact row (valid_from <=
-    # fact_ts is inclusive); among equal valid_from versions (already
-    # a broken chain) the latest valid_to wins, deterministically.
-    w = (
-        Window.partitionBy(key)
-        .orderBy(
-            F.col("__ts").asc(),
-            F.col("__is_left").asc(),
-            F.col("__v").getField("__vt").asc_nulls_last(),
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
+        F.col(valid_from).alias("__vf"),
+        F.col(valid_to).alias("__vt"),
+        F.col(valid_to).isNull().alias("__open"),
+        *[F.col(c).alias(o) for c, o in zip(cols, out_cols)],
     )
-    picked = (
-        l_tag.unionByName(r_tag)
-        .withColumn("__pick", F.last("__v", ignorenulls=True).over(w))
-        .filter(F.col("__is_left") == 1)
+    picked = asof_join(
+        facts, versions, [key], fact_ts, "__vf", ["__vt", *out_cols],
+        tie_break=tie,
     )
     # the picked version starts <= fact_ts by construction; it must
     # also still be open at fact_ts (valid_to NULL or > fact_ts) —
     # a fact in a chain GAP gets NULL attributes, like the join path.
-    valid = F.col("__pick").isNotNull() & (
-        F.col("__pick").getField("__vt").isNull()
-        | (F.col("__ts") < F.col("__pick").getField("__vt"))
-    )
+    open_at = F.col("__vt").isNull() | (F.col(fact_ts) < F.col("__vt"))
     return picked.select(
-        *fact_cols,
-        *[
-            F.when(valid, F.col("__pick").getField(f"dim_{c}")).alias(
-                f"dim_{c}"
-            )
-            for c in cols
-        ],
+        *facts.columns, *[F.when(open_at, F.col(o)).alias(o) for o in out_cols]
     )
 
 

@@ -432,33 +432,6 @@ def jaccard_pairs(
     )
 
 
-def simhash64(text: Column, ngram: int = 2, hasher=None, bits: int = 63) -> Column:
-    """SimHash over token n-grams: per-bit majority vote of feature
-    hashes. Near-dups have small hamming distance.
-
-    Default ``hasher`` is xxhash64 with 63 voted bits (bit 63 clear so
-    the sign stays +). Pass ``hasher=md5_60`` (below) with ``bits=60``
-    for an oracle-portable variant DuckDB reproduces bit-for-bit.
-
-    NULL text is treated as '' (both forms — column and frame — so a
-    NULL-text id still gets a signature, and the same one)."""
-    feats = F.transform(
-        token_ngrams(F.coalesce(text, F.lit("")), ngram),
-        hasher or (lambda g: F.xxhash64(g)),
-    )
-
-    def bit_vote(i: int) -> Column:
-        mask = 1 << i
-        ones = F.size(F.filter(feats, lambda h: h.bitwiseAND(F.lit(mask)) != 0))
-        return F.when(ones * 2 > F.size(feats), F.lit(mask)).otherwise(F.lit(0))
-
-    votes = [bit_vote(i) for i in range(bits)]
-    out = F.lit(0)
-    for b in votes:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def simhash64_frame(
     df: DataFrame,
     id_col: str,
@@ -467,18 +440,22 @@ def simhash64_frame(
     hasher=None,
     bits: int = 63,
 ) -> DataFrame:
-    """SimHash signatures as a FRAME (id, simhash), computed entirely
-    MAP-SIDE: the gram-hash array is materialized once per doc, then a
-    single ``F.aggregate`` fold packs all per-bit one-counts into
-    ceil(bits/3) accumulator longs (three 21-bit counters per long).
-    No explode, no shuffle — the signature is a pure per-doc function.
+    """SimHash signatures as a FRAME (id, simhash) over token
+    n-grams: per-bit majority vote of the feature hashes (a bit is set
+    when ones*2 > n_grams); near-dups have small hamming distance.
+    Default ``hasher`` is xxhash64 with 63 voted bits (bit 63 clear so
+    the sign stays +). Pass ``hasher=md5_60`` (below) with ``bits=60``
+    for an oracle-portable variant DuckDB reproduces bit-for-bit. NULL
+    text coalesces to '' so every input id gets a signature.
 
-    Semantically identical to the column expression :func:`simhash64`
-    (vote: ones*2 > n_grams per bit; NULL text coalesces to '' so every
-    input id gets a signature), but the cost shape differs:
+    Computed entirely MAP-SIDE: the gram-hash array is materialized
+    once per doc, then a single ``F.aggregate`` fold packs all per-bit
+    one-counts into ceil(bits/3) accumulator longs (three 21-bit
+    counters per long). No explode, no shuffle — the signature is a
+    pure per-doc function. Two other shapes were measured slower:
 
-    - the column form evaluates ``bits`` filter-lambdas over the
-      gram-hash array and defeats subexpression elimination across
+    - a column expression evaluating ``bits`` filter-lambdas over the
+      gram-hash array defeats subexpression elimination across
       higher-order functions (the md5/gram build re-executes per bit)
       — measured 10x slower at the 5k-doc corpus;
     - the previous long-format form (explode grams to rows + one
@@ -582,7 +559,7 @@ def simhash_near_dups(
     come from ONE equi-join shuffle on (band index, band value) — a
     hot prefix now splits across n_bands buckets instead of pinning
     one unsplittable task. ``ngram``/``hasher``/``bits`` pass through
-    to :func:`simhash64` (use ``hasher=md5_60, bits=60`` for the
+    to :func:`simhash64_frame` (use ``hasher=md5_60, bits=60`` for the
     oracle-portable signature family).
     """
     from .skew import spread

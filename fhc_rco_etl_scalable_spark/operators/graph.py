@@ -147,15 +147,10 @@ def _degrees(und: DataFrame) -> DataFrame:
     )
 
 
-def orient_edges(und: DataFrame, orient: str = "degree") -> DataFrame:
-    """Orient normalized undirected edges (a, b) low->high under a
-    total node order: ``"degree"`` orders by (degree, id) — the
-    compact-forward trick that caps oriented out-degree at O(sqrt(m))
-    — ``"id"`` keeps the id order (``und`` is already id-oriented)."""
-    if orient == "id":
-        return und
-    if orient != "degree":
-        raise ValueError(f"orient must be 'degree' or 'id', got {orient!r}")
+def orient_edges(und: DataFrame) -> DataFrame:
+    """Orient normalized undirected edges (a, b) low->high under the
+    (degree, id) node order — the compact-forward trick that caps
+    oriented out-degree at O(sqrt(m))."""
     deg = _degrees(und)
     return (
         und.join(deg.select(F.col("node").alias("a"), F.col("degree").alias("__da")), "a")
@@ -173,9 +168,7 @@ def orient_edges(und: DataFrame, orient: str = "degree") -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str, dst: str, orient: str = "degree"
-) -> DataFrame:
+def triangle_count(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Exact triangle count of the undirected simple graph induced by
     ``edges`` (self-loops dropped, duplicates collapsed, direction
     ignored). Returns ONE row: (n_nodes, n_edges, n_triangles).
@@ -188,16 +181,13 @@ def triangle_count(
     cartesian). The triangle count is the same under ANY total order;
     only the wedge count (join fan-out) differs.
 
-    ``orient`` picks the order:
-
-    - ``"degree"`` (default) — order by (degree, id), the standard
-      compact-forward / degree-ordering trick: every node's
-      out-degree in the oriented graph is O(sqrt(m)), so wedge
-      counts drop from O(deg^2) on hubs to O(m^{3/2}) total — the
-      100 TB-safe choice on power-law graphs, at the cost of one
-      degree aggregate + one join to attach orders to endpoints.
-    - ``"id"`` — order by node id directly (no degree pass; fine
-      when the graph is near-regular or tiny).
+    The order is (degree, id), the standard compact-forward /
+    degree-ordering trick: every node's out-degree in the oriented
+    graph is O(sqrt(m)), so wedge counts drop from O(deg^2) on hubs to
+    O(m^{3/2}) total — the 100 TB-safe choice on power-law graphs, at
+    the cost of one degree aggregate + one join to attach orders to
+    endpoints. (Id order skips the degree pass but put 98% of 48M
+    wedges on one node of the 8x hub graph in the scale probe.)
     """
     # Both edge frames feed several consumers (e three join sides;
     # und the degree pass, the node census, and the edge count) —
@@ -206,7 +196,7 @@ def triangle_count(
     # localCheckpoint discipline as pagerank/LPA's symmetrized edges;
     # the frames are edge-sized, never larger than the input.
     und = undirected_simple_edges(edges, src, dst).localCheckpoint(eager=False)
-    e = orient_edges(und, orient).localCheckpoint(eager=False)
+    e = orient_edges(und).localCheckpoint(eager=False)
     nodes = _symmetric(und).select("__node").distinct()
     # Directed-path closure: a triangle x<y<z under the total order
     # has oriented edges x->y, y->z, x->z — exactly one path

@@ -527,72 +527,31 @@ def embedding_near_dups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
-    method: str = "exact",
-    n_planes: int = 8,
-    n_tables: int = 16,
-    dim: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: every (id_a < id_b) with
     ``cosine >= threshold``. Returns (id_a, id_b, cos_sim).
 
-    ``method="exact"`` — upper-triangle comparison. The correctness
-    baseline, and the right choice when one side broadcasts or the
-    threshold is low (low thresholds make LSH buckets huge, so the
-    bucket join degenerates toward the cross product anyway).
-
-    ``method="lsh"`` — multi-table sign-bit buckets generate candidate
-    pairs, exact cosine verifies. The 100 TB path for true near-dup
-    thresholds (cos >= ~0.8): per-plane agreement p = 1 - theta/pi is
-    high, so few planes isolate tiny buckets and the equi bucket join
-    replaces the O(n^2) cross product; signatures (one numpy matmul
-    per Arrow batch) are the only thing that shuffles besides the
-    surviving candidates. Precision is exact for both methods because
-    every candidate is verified; lsh recall is 1-(1-p^planes)^tables
-    (property-tested on planted near-dups in test_extensions).
+    Blocked-BLAS candidate generation at a slack threshold, then the
+    surviving pairs — a vanishing fraction of the upper triangle —
+    re-attach vectors and go through the NATIVE dot at the exact
+    threshold, so emitted cos_sim values and the boundary comparison
+    are bit-identical to the pre-kernel theta-join formulation the
+    oracles certified. The theta-join evaluated the codegen'd dot
+    n^2/2 times (~100 s at 200k vectors); the kernel keeps the same
+    FLOPs inside dgemm (~5 s).
     """
     from .skew import spread
 
     base = spread(df, id_col).select(
         F.col(id_col).alias("__id"), _unit(F.col(vec_col)).alias("__v")
     )
-    if method == "exact":
-        # Blocked-BLAS candidate generation (slack threshold), then the
-        # surviving pairs — a vanishing fraction of the upper triangle —
-        # re-attach vectors and go through the NATIVE dot at the exact
-        # threshold below, so emitted cos_sim values and the boundary
-        # comparison are bit-identical to the pre-kernel theta-join
-        # formulation the oracles certified. The theta-join evaluated
-        # the codegen'd dot n^2/2 times (~100 s at 200k vectors); the
-        # kernel keeps the same FLOPs inside dgemm (~5 s).
-        cand = _blas_candidate_pairs(base, threshold - _BLAS_EPS)
-        a = base.select(F.col("__id").alias("id_a"), F.col("__v").alias("__va"))
-        b = base.select(F.col("__id").alias("id_b"), F.col("__v").alias("__vb"))
-        pairs = cand.join(a, "id_a").join(b, "id_b")
-    elif method == "lsh":
-        tables = [
-            _hyperplanes(dim, n_planes, seed=f"spark-graft-nd{t}")
-            for t in range(n_tables)
-        ]
-        sig = base.withColumn(
-            "__bucket", F.explode(_signature_udf(tables)(F.col("__v")))
-        )
-        a = sig.select(
-            F.col("__id").alias("id_a"),
-            F.col("__v").alias("__va"),
-            F.col("__bucket").alias("__ba"),
-        )
-        b = sig.select(
-            F.col("__id").alias("id_b"),
-            F.col("__v").alias("__vb"),
-            F.col("__bucket").alias("__bb"),
-        )
-        pairs = a.join(
-            b, (F.col("__ba") == F.col("__bb")) & (F.col("id_a") < F.col("id_b"))
-        ).dropDuplicates(["id_a", "id_b"])
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    cand = _blas_candidate_pairs(base, threshold - _BLAS_EPS)
+    a = base.select(F.col("__id").alias("id_a"), F.col("__v").alias("__va"))
+    b = base.select(F.col("__id").alias("id_b"), F.col("__v").alias("__vb"))
     return (
-        pairs.withColumn("cos_sim", dot(F.col("__va"), F.col("__vb")))
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("cos_sim", dot(F.col("__va"), F.col("__vb")))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
     )

@@ -22,7 +22,7 @@ plan.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -212,156 +212,19 @@ def lttb_downsample(
     )
 
 
-def ewma_pow2(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    id_col: str,
-    m: int = 1,
-    segment_rows: int | None = None,
-) -> DataFrame:
-    """Exponentially weighted moving average with decay ``1-alpha =
-    2^-m`` (``m=1`` -> alpha = 1/2), fully native, no series-length
-    limit.
-
-    The EWMA recurrence ``y_i = alpha*x_i + (1-alpha)*y_{i-1}`` is
-    sequential, but for power-of-two decay it has an EXACT parallel
-    form: ``y_i = 2^(-m*i) * (x_0 + alpha * sum_{j<=i} x_j * 2^(m*j))``
-    where every multiply is a power-of-two SCALING (exact in IEEE
-    doubles, exponent arithmetic only). Within Spark the running
-    window sum folds rows sequentially, so results are deterministic
-    across runs and partitionings. They are NOT bit-identical to
-    other engines' window sums (measured: DuckDB evaluates running
-    SUM with a segment tree, so prefix sums associate differently by
-    ~1 ulp) — which is why the oracle entry pairs the explicit
-    fold form (`F.aggregate` vs `list_reduce`) instead.
-
-    The scaled terms grow as ``2^(m*local_index)``, so the series is
-    SEGMENTED every ``segment_rows`` rows (default ``max(1, 512//m)``
-    — exponents stay <= 512, far inside double range) and the scaling
-    restarts per segment. The state crossing a segment boundary is
-    ONE number: the carry ``c_s`` = the EWMA value at the previous
-    segment's last row. Within segment ``s`` at local index ``l``::
-
-        s = 0:   y = 2^(-m*l) * (x_0 + alpha * sum_{0<j<=l} x_j 2^(m*j))
-        s >= 1:  y = 2^(-m*(l+1)) * c_s
-                   + alpha * 2^(-m*l) * sum_{j<=l} x_j 2^(m*j)
-
-    and the carries satisfy ``c_{s+1} = 2^(-m*k_s) * c_s + G_s`` with
-    ``G_s`` a per-segment aggregate — a fold over n/segment_rows
-    elements per key, evaluated JVM-side with ``F.aggregate`` over
-    the collected per-segment summaries (hundreds of elements for a
-    50k-row series; never per-row). Cross-segment rounding differs
-    from the strict sequential fold only below ~1 ulp of the
-    contributing terms (contributions older than one full segment
-    have decayed by >= 2^-512); the property test pins parity against
-    the Arrow fold on 50k-row series. The general-alpha twin
-    :func:`ewma` (Arrow ``applyInPandas`` fold) remains the
-    arbitrary-alpha path.
-    """
-    keys = list(keys)
-    k = segment_rows if segment_rows is not None else max(1, 512 // m)
-    if k < 1 or m * k > 900:
-        raise ValueError(f"segment_rows={k} out of range for m={m}")
-    alpha = 1.0 - 2.0 ** (-m)
-    # Order both windows by the MATERIALIZED column __t, not the
-    # expression unix_micros(ts): expression-keyed orderings do not
-    # propagate through the intermediate projection, so Catalyst would
-    # insert a second per-partition sort it cannot prove redundant
-    # (measured: 2 Sort nodes with the expression, 1 with the column).
-    w = Window.partitionBy(*keys).orderBy("__t", id_col)
-    pts = (
-        df.select(
-            *keys,
-            F.col(id_col),
-            F.col(ts_col),
-            F.unix_micros(F.col(ts_col)).alias("__t"),
-            F.col(value_col).cast("double").alias("__x"),
-        )
-        .withColumn("__i", F.row_number().over(w) - F.lit(1))
-        .withColumn("__s", F.expr(f"__i div {k}"))
-        .withColumn("__l", F.col("__i") % k)
-    )
-    # Within-segment scaled prefix sum; segment 0's first row is the
-    # unweighted x_0 of the closed form, so its term is excluded.
-    ws = Window.partitionBy(*keys, "__s").orderBy("__l")
-    run = ws.rowsBetween(Window.unboundedPreceding, 0)
-    scaled = pts.withColumn(
-        "__u",
-        F.when((F.col("__s") == 0) & (F.col("__l") == 0), F.lit(0.0)).otherwise(
-            F.col("__x") * F.pow(F.lit(2.0), F.col("__l") * m)
-        ),
-    )
-    xs0 = F.first("__x").over(run)  # x at local index 0 of this segment
-    prefix = F.sum("__u").over(run)
-    rows = scaled.select(
-        *keys, id_col, ts_col, "__s", "__l", "__u",
-        xs0.alias("__x0"), prefix.alias("__p"),
-    )
-    # Per-segment summaries -> per-key ordered fold -> carry into each
-    # segment. G_0 folds x_0 in (it IS c_1 when segment 0 is full);
-    # G_{s>=1} = alpha * 2^(-m*(k_s-1)) * sum x_j 2^(m*j).
-    segs = (
-        scaled.groupBy(*keys, "__s")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__u").alias("__tot"),
-            F.max(F.when(F.col("__l") == 0, F.col("__x"))).alias("__sx0"),
-        )
-        .withColumn(
-            "__g",
-            F.when(
-                F.col("__s") == 0,
-                F.pow(F.lit(2.0), -(F.col("__n") - 1) * m)
-                * (F.col("__sx0") + F.lit(alpha) * F.col("__tot")),
-            ).otherwise(
-                F.lit(alpha)
-                * F.pow(F.lit(2.0), -(F.col("__n") - 1) * m)
-                * F.col("__tot")
-            ),
-        )
-    )
-    carries = (
-        segs.groupBy(*keys)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("__s", "__n", "__g"))
-            ).alias("__segs")
-        )
-        .select(
-            *keys,
-            F.posexplode(
-                F.expr(
-                    f"""
-                    aggregate(
-                      __segs,
-                      named_struct('arr', array(cast(0.0d as double)),
-                                   'c',   cast(0.0d as double)),
-                      (acc, t) -> named_struct(
-                        'arr', CASE WHEN t.__s = 0 THEN acc.arr
-                                    ELSE concat(acc.arr, array(acc.c)) END,
-                        'c',   CASE WHEN t.__s = 0 THEN t.__g
-                                    ELSE pow(2.0d, -t.__n * {m}) * acc.c
-                                         + t.__g END),
-                      acc -> acc.arr)
-                    """
-                )
-            ).alias("__s", "__c"),
-        )
-    )
-    joined = rows.join(carries, [*keys, "__s"])
-    y = F.when(
-        F.col("__s") == 0,
-        F.pow(F.lit(2.0), -F.col("__l") * m)
-        * (F.col("__x0") + F.lit(alpha) * F.col("__p")),
-    ).otherwise(
-        F.pow(F.lit(2.0), -(F.col("__l") + 1) * m) * F.col("__c")
-        + F.lit(alpha)
-        * F.pow(F.lit(2.0), -F.col("__l") * m)
-        * F.col("__p")
-    )
-    return joined.select(*keys, id_col, ts_col, y.alias("ewma"))
+def _ewma_fold(
+    xs: Iterable[float], alpha: float, y: float | None = None
+) -> list[float]:
+    """The EWMA recurrence ``y = x if y is None else alpha*x +
+    (1-alpha)*y`` folded over ``xs`` in order, continuing from the
+    carried ``y``. The one body behind :func:`ewma` and the streaming
+    fold (``streaming/ewma_stream.py``): the same float ops in the
+    same order, so stream == batch bit-for-bit."""
+    out = []
+    for x in xs:
+        y = x if y is None else alpha * x + (1.0 - alpha) * y
+        out.append(y)
+    return out
 
 
 def ewma(
@@ -391,17 +254,12 @@ def ewma(
         import pandas as pd
 
         pdf = pdf.sort_values(["__t", id_col], kind="mergesort")
-        y = []
-        prev = None
-        for x in pdf["__x"]:
-            prev = x if prev is None else alpha * x + (1.0 - alpha) * prev
-            y.append(prev)
         return pd.DataFrame(
             {
                 **{k: pdf[k] for k in keys},
                 id_col: pdf[id_col],
                 ts_col: pdf[ts_col],
-                "ewma": y,
+                "ewma": _ewma_fold(pdf["__x"], alpha),
             }
         )
 

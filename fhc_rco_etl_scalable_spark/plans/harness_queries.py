@@ -884,12 +884,10 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # exact method: the synthetic embeddings have no planted near-dups
-    # (max pairwise cos ~0.51), so the data-appropriate threshold is
-    # 0.4 — too low for LSH buckets to beat the upper triangle. The
-    # lsh method is exercised on planted near-dups in pytest.
+    # the synthetic embeddings have no planted near-dups (max pairwise
+    # cos ~0.51), so the data-appropriate threshold is 0.4.
     emb = load_table(spark, "embeddings", sf_dir)
-    return SIM.embedding_near_dups(emb, threshold=0.4, method="exact")
+    return SIM.embedding_near_dups(emb, threshold=0.4)
 
 
 @query("embedding_topk_lsh", _TOPK_ORACLE)
@@ -9295,11 +9293,10 @@ def q_trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round 9: EWMA smoothing. The recurrence y = a*x + (1-a)*y_prev is
-# sequential, but for power-of-two decay it has an EXACT parallel
-# form (every multiply a 2^k scaling — exponent arithmetic, no
-# rounding; the running sum folds in deterministic order), so the
-# native plan is bit-reproducible and oracle-hashable. The
-# general-alpha applyInPandas twin is pinned to this form in pytest.
+# sequential; the entry evaluates it as an explicit left fold that
+# DuckDB reproduces bit-for-bit. The linear scale path, the
+# applyInPandas fold of operators.timeseries.ewma, is pinned to the
+# same recurrence in pytest.
 # ---------------------------------------------------------------------------
 
 _EWMA_ORACLE = """
@@ -9326,10 +9323,9 @@ def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a per-row prefix slice vs DuckDB ``list_reduce`` — identical
     association order, bit-identical doubles, no sink rounding). The
     per-row prefix fold is quadratic in series length — deliberately,
-    as the oracle-exact config; the linear scale paths are
-    :func:`operators.timeseries.ewma` (Arrow fold, any alpha) and
-    :func:`operators.timeseries.ewma_pow2` (native, power-of-two
-    decay), both pinned to this recurrence in pytest. Cross-engine
+    as the oracle-exact config; the linear scale path is
+    :func:`operators.timeseries.ewma` (Arrow fold, any alpha), pinned
+    to this recurrence in pytest. Cross-engine
     window SUM association differs (DuckDB segment tree, ~1 ulp), so
     a window-sum formulation cannot hash — measured, not assumed."""
     ev = load_table(spark, "events", sf_dir).filter(F.col("user_id") < 40)

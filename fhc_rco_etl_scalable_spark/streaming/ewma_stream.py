@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.timeseries import _ewma_fold
+
 EWMA_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -41,23 +43,22 @@ def ewma_fold_rows(
     prior: float | None,
     alpha: float,
 ) -> tuple[list[tuple], float | None]:
-    """Pure fold: (output rows, carried y). Identical float ops to the
-    batch recurrence so stream == batch bit-for-bit."""
-    y = prior
-    out: list[tuple] = []
+    """Pure fold: (output rows, carried y). The batch recurrence's own
+    fold, continued from ``prior``, so stream == batch bit-for-bit."""
     # A key's rows in one micro-batch can span multiple Arrow chunks
     # (arrow.maxRecordsPerBatch); fold order must be GLOBAL event-time
     # order, so concatenate every chunk before the single sort.
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if not chunks:
-        return out, y
+        return [], prior
     batch = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
     batch = batch.sort_values(["ts", "event_id"])
-    for row in batch.itertuples(index=False):
-        x = float(row.value)
-        y = x if y is None else alpha * x + (1.0 - alpha) * y
-        out.append((key, int(row.event_id), row.ts, y))
-    return out, y
+    ys = _ewma_fold(map(float, batch["value"]), alpha, prior)
+    out = [
+        (key, int(row.event_id), row.ts, y)
+        for row, y in zip(batch.itertuples(index=False), ys)
+    ]
+    return out, ys[-1]
 
 
 def make_ewma_fn(alpha: float):

@@ -473,6 +473,52 @@ def test_pit_lookup_fallback_rejects_reserved_fact_columns(spark):
             assert out.count() == 1
 
 
+def test_pit_lookup_fallback_broken_chain_pick(spark):
+    """The union/ffill fallback picks ONE version on a broken chain:
+    among versions with equal valid_from the open one wins, otherwise
+    the latest valid_to. A dim row with a NULL valid_from or a NULL
+    key never donates, and a NULL-key fact keeps its row with NULL
+    attributes."""
+    from fhc_rco_etl_scalable_spark.operators.asof import pit_lookup
+
+    dim = spark.createDataFrame(
+        [
+            ("K1", 2, _ts(0), None),       # open: wins the equal-start tie
+            ("K1", 1, _ts(0), _ts(50)),
+            ("K2", 3, _ts(0), _ts(20)),
+            ("K2", 4, _ts(0), _ts(40)),    # later valid_to wins
+            ("K4", 7, None, None),         # NULL valid_from: never matches
+            ("K4", 8, _ts(5), _ts(100)),
+            (None, 9, _ts(0), None),       # NULL key: never matches
+        ],
+        "k string, v long, valid_from timestamp, valid_to timestamp",
+    )
+    facts = spark.createDataFrame(
+        [
+            ("f1", "K1", _ts(10)),
+            ("f2", "K1", _ts(60)),
+            ("f3", "K2", _ts(10)),
+            ("f4", "K2", _ts(30)),
+            ("f5", "K2", _ts(45)),   # past the latest end -> NULL
+            ("f6", "K4", _ts(1)),    # before K4's first dated version
+            ("f7", "K4", _ts(10)),
+            ("f8", None, _ts(10)),
+        ],
+        "fid string, k string, fact_ts timestamp",
+    )
+    out = pit_lookup(
+        facts, dim, key="k", fact_ts="fact_ts", value_cols=["v"],
+        broadcast_dim=False,
+    )
+    assert out.columns == ["fid", "k", "fact_ts", "dim_v"]
+    got = {r.fid: r.dim_v for r in out.collect()}
+    assert got == {
+        "f1": 2, "f2": 2, "f3": 4, "f4": 4, "f5": None,
+        "f6": None, "f7": 8, "f8": None,
+    }
+    assert out.count() == 8
+
+
 def test_validate_scd2_chain_flags_violations(spark):
     """Sound chains come back empty; overlapping versions, an open
     version with a successor, empty intervals, and double-open keys

@@ -107,8 +107,8 @@ def test_simhash_identical_zero_hamming(spark, docs):
     dups = DD.simhash_near_dups(docs, "doc_id", "text", n_bands=4)
     got = {(r.id_a, r.id_b): r.hamming for r in dups.collect()}
     assert got.get((1, 2)) == 0  # normalized-identical text -> same sig?  # noqa
-    sig = {r.doc_id: r.sh for r in docs.select(
-        "doc_id", DD.simhash64(F.col("text")).alias("sh")).collect()}
+    sig = {r.doc_id: r.simhash for r in DD.simhash64_frame(
+        docs, "doc_id", "text").collect()}
     assert sig[1] >= 0 and sig[3] >= 0  # sign bit clear
 
 
@@ -131,8 +131,8 @@ def test_simhash_band_rotation_recall(spark):
         else:
             corpus.append((i, " ".join(rng.choice(words) for _ in range(30))))
     docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    sig = {r.doc_id: r.sh for r in docs.select(
-        "doc_id", DD.simhash64(F.col("text")).alias("sh")).collect()}
+    sig = {r.doc_id: r.simhash for r in DD.simhash64_frame(
+        docs, "doc_id", "text").collect()}
     want = {
         (a, b)
         for a, b in itertools.combinations(sorted(sig), 2)
@@ -229,14 +229,9 @@ def test_embedding_near_dups_lsh_vs_exact_on_planted(spark):
         w /= np.linalg.norm(w)
         rows.append((1000 + i, [float(x) for x in w]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact = SIM.embedding_near_dups(emb, threshold=0.9, method="exact").collect()
-    lsh = SIM.embedding_near_dups(emb, threshold=0.9, method="lsh").collect()
+    exact = SIM.embedding_near_dups(emb, threshold=0.9).collect()
     exact_set = {(r.id_a, r.id_b) for r in exact}
-    lsh_set = {(r.id_a, r.id_b) for r in lsh}
-    assert len(exact_set) == 40  # every planted pair found by the baseline
-    assert lsh_set <= exact_set  # verification step => exact precision
-    recall = len(lsh_set & exact_set) / len(exact_set)
-    assert recall >= 0.95, f"near-dup LSH recall {recall}"
+    assert len(exact_set) == 40  # every planted pair found
 
 
 def test_ivf_probe_all_equals_brute_force(spark):
@@ -283,17 +278,33 @@ def test_ivf_persisted_index_roundtrip_equals_brute_force(spark, tmp_path):
     assert recall >= 0.5, f"stored-index IVF recall {recall}"
 
 
+def _simhash64_col(text, ngram=2, bits=63):
+    """Reference model of ``simhash64_frame``: the signature as one
+    column expression, a per-bit majority vote over the xxhash64
+    gram hashes (NULL text treated as '')."""
+    feats = F.transform(
+        DD.token_ngrams(F.coalesce(text, F.lit("")), ngram), lambda g: F.xxhash64(g)
+    )
+    out = F.lit(0)
+    for i in range(bits):
+        ones = F.size(F.filter(feats, lambda h: h.bitwiseAND(F.lit(1 << i)) != 0))
+        out = out.bitwiseOR(
+            F.when(ones * 2 > F.size(feats), F.lit(1 << i)).otherwise(F.lit(0))
+        )
+    return out
+
+
 def test_simhash_null_text_keeps_row_both_forms(spark):
-    """NULL text coalesces to '' in BOTH simhash forms: the frame form
-    must not drop the id (explode of a NULL gram array would), and both
-    forms must agree on the signature (ADVICE r2)."""
+    """NULL text coalesces to '': the frame form must not drop the id
+    (explode of a NULL gram array would), and it must agree with the
+    column-expression model on every signature (ADVICE r2)."""
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, "real text here")], "doc_id int, text string"
     )
     frame = {r.doc_id: r.simhash for r in DD.simhash64_frame(df, "doc_id", "text").collect()}
     col = {
         r.doc_id: r.sh
-        for r in df.select("doc_id", DD.simhash64(F.col("text")).alias("sh")).collect()
+        for r in df.select("doc_id", _simhash64_col(F.col("text")).alias("sh")).collect()
     }
     assert set(frame) == {1, 2, 3}  # NULL-text id 1 keeps a signature row
     assert frame == col             # and the two forms agree, incl. NULL == ''
@@ -1372,9 +1383,10 @@ def test_triangle_count_counts_each_triangle_once(spark):
 
 
 def test_triangle_count_orientations_agree(spark):
-    """The triangle census is invariant under the orientation order;
-    degree (default) and id orientations must agree, including on a
-    hub-heavy graph where the orders genuinely differ."""
+    """The degree-oriented census equals a brute-force Python census
+    on a hub-heavy graph, where degree order and id order genuinely
+    differ."""
+    import itertools
     import random
 
     from fhc_rco_etl_scalable_spark.operators.graph import triangle_count
@@ -1388,10 +1400,17 @@ def test_triangle_count_orientations_agree(spark):
         if a != b:
             pairs.add((min(a, b), max(a, b)))
     edges = spark.createDataFrame(sorted(pairs), "src long, dst long")
-    by_deg = triangle_count(edges, "src", "dst", orient="degree").first()
-    by_id = triangle_count(edges, "src", "dst", orient="id").first()
-    assert by_deg == by_id
-    assert by_deg.n_triangles > 0
+    row = triangle_count(edges, "src", "dst").first()
+    nodes = {v for p in pairs for v in p}
+    want = sum(
+        1
+        for a, b, c in itertools.combinations(sorted(nodes), 3)
+        if {(a, b), (a, c), (b, c)} <= pairs
+    )
+    assert (row.n_nodes, row.n_edges, row.n_triangles) == (
+        len(nodes), len(pairs), want
+    )
+    assert want > 0
 
 
 def test_neighbor_agg_hand_computed(spark):

@@ -215,7 +215,7 @@ def test_gapfill_matches_python_model(spark, rows):
         assert abs(gi - interp) < 1e-9
 
 
-# --- EWMA: three forms pinned to one recurrence ------------------------------
+# --- EWMA: batch and streaming folds pinned to one recurrence --------------
 
 
 def _py_ewma(xs, alpha):
@@ -238,51 +238,17 @@ def test_ewma_applyinpandas_matches_recurrence_exactly(spark):
     assert [by_id[i] for i in range(60)] == want
 
 
-def test_ewma_pow2_matches_recurrence_within_ulps(spark):
-    from fhc_rco_etl_scalable_spark.operators.timeseries import ewma_pow2
-
-    vals = [float(((i * 53) % 97) - 48) / 3.0 for i in range(60)]
-    df = _series(spark, vals)
-    out = ewma_pow2(df, ["k"], "ts", "x", "id", m=1)
-    by_id = {r["id"]: r["ewma"] for r in out.collect()}
-    want = _py_ewma(vals, 0.5)
-    # the exact-scaling form reassociates the sum: equal to ~1 ulp
-    for i in range(60):
-        assert by_id[i] == pytest.approx(want[i], rel=1e-12)
-
-
-def test_ewma_pow2_segmented_crosses_boundaries(spark):
-    """Tiny forced segments: every carry path (full segment, partial
-    last segment, all-zero segment where ONLY the carry survives) must
-    match the sequential recurrence."""
-    from fhc_rco_etl_scalable_spark.operators.timeseries import ewma_pow2
-
-    vals = [3.0, -1.5, 2.25, 0.0, 0.0, 0.0, 0.0, 0.0, 7.0, -4.0, 1.0]
-    df = _series(spark, vals)
-    out = ewma_pow2(df, ["k"], "ts", "x", "id", m=2, segment_rows=3)
-    by_id = {r["id"]: r["ewma"] for r in out.collect()}
-    want = _py_ewma(vals, 0.75)
-    for i in range(len(vals)):
-        assert by_id[i] == pytest.approx(want[i], rel=1e-12, abs=1e-300)
-
-
-def test_ewma_pow2_50k_rows_matches_recurrence(spark):
-    """The documented series-length limit is gone: 50k rows on one key
-    (~98 segments at m=1) stays within 1e-12 of the sequential fold."""
-    from fhc_rco_etl_scalable_spark.operators.timeseries import ewma_pow2
+def test_ewma_50k_rows_matches_recurrence(spark):
+    """A long series on one key: 50k rows through the Arrow fold equal
+    the sequential recurrence exactly."""
+    from fhc_rco_etl_scalable_spark.operators.timeseries import ewma
 
     n = 50_000
     vals = [float(((i * 53) % 997) - 498) / 13.0 for i in range(n)]
     df = _series(spark, vals)
-    out = ewma_pow2(df, ["k"], "ts", "x", "id", m=1)
+    out = ewma(df, ["k"], "ts", "x", "id", alpha=0.5)
     by_id = {r["id"]: r["ewma"] for r in out.collect()}
-    want = _py_ewma(vals, 0.5)
-    assert len(by_id) == n
-    # spot-dense check: every 97th row plus all segment-boundary rows
-    idx = set(range(0, n, 97)) | {s * 512 + d for s in range(n // 512 + 1)
-                                  for d in (-1, 0, 1) if 0 <= s * 512 + d < n}
-    for i in idx:
-        assert by_id[i] == pytest.approx(want[i], rel=1e-12), i
+    assert [by_id[i] for i in range(n)] == _py_ewma(vals, 0.5)
 
 
 # --- property: LTTB vs a pure-python model -----------------------------------

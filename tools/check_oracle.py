@@ -152,7 +152,8 @@ def canon_pandas(df) -> list[str]:
 
 
 def vanilla_spark():
-    """A bone-vanilla SparkSession — master + UI off and NOTHING else.
+    """A bone-vanilla SparkSession — master, UI off, console progress
+    bar off and NOTHING else.
 
     The gate exists to reproduce the driver's environment, and the
     driver grades entries on a session with no engine confs set
@@ -162,6 +163,9 @@ def vanilla_spark():
     replica vanilla makes every entry self-provision any conf it
     needs — the actual driver contract.  An entry that goes red here
     is a bug in the entry, never a reason to re-add a conf below.
+    The progress bar conf changes console rendering only, not
+    execution: the bar redraws with ``\r`` on the stdout the OK/FAIL
+    lines go to, so with it on a line count of the log misses results.
     """
     from pyspark.sql import SparkSession
 
@@ -172,6 +176,7 @@ def vanilla_spark():
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("oracle-check-vanilla")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -2,11 +2,13 @@
 
 Usage: python tools/dump_plan.py <outdir> <suffix> <entry> [entry ...]
 
-Writes <outdir>/<entry>_<suffix>.txt for each entry. Streaming entries
-(whose builders RUN a stream and return a materialized frame) still
-produce the plan of the returned frame; for those the interesting
-evidence is the batch plan of the foreachBatch/sink path, which the
-builder has already executed — noted in the file header.
+Writes <outdir>/<entry>_<suffix>.txt for each entry. When the
+optimized plan's root is a ``LogicalRDD``, ``LocalRelation`` or
+``MemoryPlan`` — the entry returns a checkpoint, or its builder RAN a
+stream into a memory sink — the dump shows only the scan of that
+result and cannot show a change in the builder's plan. The file
+header then carries a WARNING line, and the same line goes to stderr,
+so an empty diff of two such dumps is not read as plan identity.
 """
 
 from __future__ import annotations
@@ -18,6 +20,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from fhc_rco_etl_scalable_spark.session import get_spark  # noqa: E402
+
+
+MATERIALIZED_WARNING = (
+    "# WARNING: materialized result (checkpoint or memory sink): "
+    "this dump cannot show a change in the builder's plan"
+)
 
 
 def main() -> None:
@@ -32,11 +40,17 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+        root = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+        warn = root in ("LogicalRDD", "LocalRelation", "MemoryPlan")
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} — explain('formatted') at {sf_dir}\n")
+            if warn:
+                fh.write(MATERIALIZED_WARNING + "\n")
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)", file=sys.stderr)
+        if warn:
+            print(MATERIALIZED_WARNING, file=sys.stderr)
 
 
 if __name__ == "__main__":

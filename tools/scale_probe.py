@@ -10,6 +10,8 @@ is evidence the plan has no all-pairs / driver-side bottleneck hiding
 at test scale.
 
 Usage: python tools/scale_probe.py [--probe site|minhash|corpus|span|margin|fuzzy|funnel|semdedup|ngram|bpe|substr|substr_skew|graph|sliding|negsample|incdedup|gapfill|lttb|ewma|kcore|lpa|lpa_scale|pivot] [--base B] [sf_dir] [N ...]
+--probe graph times the degree-oriented triangle census on a hub graph;
+--probe ewma times the Arrow-fold ewma (alpha 1/2).
 Prints one line per N plus a JSON summary. --base B pre-replicates
 the input B-fold before the probe's own N-fold replication, so
 N=1/4/8 at --base 10 measures an sf1-equivalent base corpus where
@@ -518,13 +520,14 @@ def hub_edges(spark, n: int):
 
 
 def run_graph(spark, edges) -> dict:
-    """triangle_count under both orientations on the hub graph.
+    """triangle_count (degree orientation) on the hub graph.
 
-    Walls time the wedge joins over a pre-materialized normalized
-    edge set (the shared distinct is not what differs); wedge counts
-    are the path-join fan-out sum(indeg*outdeg), and max_node_wedges
-    is the single hottest node's contribution — the partition that
-    melts on a power-law graph when edges orient by id."""
+    The wall times the wedge joins over a pre-materialized normalized
+    edge set (the shared distinct is not what is measured); wedge
+    counts are the path-join fan-out sum(indeg*outdeg), and
+    max_node_wedges is the single hottest node's contribution — the
+    partition that would melt on a power-law graph without the degree
+    order."""
     from fhc_rco_etl_scalable_spark.operators.graph import (
         orient_edges,
         triangle_count,
@@ -534,18 +537,17 @@ def run_graph(spark, edges) -> dict:
 
     und = undirected_simple_edges(edges, "src", "dst").localCheckpoint()
     res: dict = {"edges": und.count()}
-    for orient in ("degree", "id"):
-        t0 = time.time()
-        row = triangle_count(und, "a", "b", orient=orient).first()
-        res[f"wall_{orient}"] = round(time.time() - t0, 2)
-        res["triangles"] = int(row["n_triangles"])
-        e = orient_edges(und, orient)
-        o = e.groupBy(F.col("a").alias("y")).agg(F.count(F.lit(1)).alias("od"))
-        i = e.groupBy(F.col("b").alias("y")).agg(F.count(F.lit(1)).alias("ind"))
-        w = o.join(i, "y").select((F.col("od") * F.col("ind")).alias("w"))
-        wrow = w.agg(F.sum("w").alias("s"), F.max("w").alias("m")).first()
-        res[f"wedges_{orient}"] = int(wrow["s"] or 0)
-        res[f"max_node_wedges_{orient}"] = int(wrow["m"] or 0)
+    t0 = time.time()
+    row = triangle_count(und, "a", "b").first()
+    res["wall"] = round(time.time() - t0, 2)
+    res["triangles"] = int(row["n_triangles"])
+    e = orient_edges(und)
+    o = e.groupBy(F.col("a").alias("y")).agg(F.count(F.lit(1)).alias("od"))
+    i = e.groupBy(F.col("b").alias("y")).agg(F.count(F.lit(1)).alias("ind"))
+    w = o.join(i, "y").select((F.col("od") * F.col("ind")).alias("w"))
+    wrow = w.agg(F.sum("w").alias("s"), F.max("w").alias("m")).first()
+    res["wedges"] = int(wrow["s"] or 0)
+    res["max_node_wedges"] = int(wrow["m"] or 0)
     release_checkpoint(und)
     return res
 
@@ -663,19 +665,16 @@ def run_lttb(spark, ev) -> dict[str, int]:
 
 
 def run_ewma(spark, ev) -> dict[str, int]:
-    """ewma_pow2 on replicated users: since r10's segment rescaling
-    (no series-length limit) the plan is two key-partitioned window
-    passes, the per-segment summary aggregate, the per-key carry fold
-    (F.aggregate over n/512 elements), and a (key, segment) join —
-    all key-partitioned, per-row work still O(1), so wall grows
-    ~linearly with rows. (The fold-form oracle config is quadratic BY
-    DESIGN and is not the scale path — this probe measures the
-    production form.)"""
-    from fhc_rco_etl_scalable_spark.operators.timeseries import ewma_pow2
+    """ewma (the Arrow applyInPandas fold, alpha 1/2) on replicated
+    users: one key-partitioned exchange, then a sequential fold per
+    key inside the Python worker, so wall should grow ~linearly with
+    rows while the per-key series length stays fixed (replicas add
+    users, not events per user)."""
+    from fhc_rco_etl_scalable_spark.operators.timeseries import ewma
 
-    out = ewma_pow2(
+    out = ewma(
         ev, keys=["user_id"], ts_col="ts", value_col="value",
-        id_col="event_id", m=1,
+        id_col="event_id", alpha=0.5,
     )
     return {"rows": out.count()}
 
