@@ -56,27 +56,9 @@ def _stop_ratio(lowered: Column, words: tuple[str, ...]) -> Column:
     return _hit_counter(lowered, words) / F.greatest(F.size(lowered), F.lit(1))
 
 
-def language_scores(text: Column | str) -> Column:
-    """Map lang -> stopword-hit count; argmax is the language guess.
-
-    The lowered token array is bound as a lambda variable so the
-    tokenizer runs once per document, not once per language (the
-    winnow_fingerprints higher-order re-evaluation discipline)."""
-
-    def scores(ts: Column) -> Column:
-        return F.map_from_arrays(
-            F.array(*[F.lit(lg) for lg in LANG_STOPWORDS]),
-            F.array(
-                *[_hit_counter(ts, words) for words in LANG_STOPWORDS.values()]
-            ),
-        )
-
-    lowered = F.transform(tokens(text), lambda t: F.lower(t))
-    return F.transform(F.array(lowered), scores)[0]
-
-
 def detect_language(text: Column | str) -> Column:
-    """Argmax of language_scores with 'und' when nothing matches.
+    """Argmax of the per-language stopword-hit counts, with 'und' when
+    nothing matches.
 
     Two-level let-binding (r15): the naive form embedded the
     per-language hit-count EXPRESSION — each containing the whole
@@ -114,12 +96,12 @@ def punct_ratio(text: Column | str) -> Column:
     return (F.length(c) - F.length(stripped)) / F.greatest(F.length(c), F.lit(1))
 
 
-def quality_score(text: Column | str, lang: str = "en") -> Column:
+def quality_score(text: Column | str) -> Column:
     """Composite [0,1] quality heuristic: length sweet-spot, low punct
-    density, healthy stopword ratio, mean-word-length sanity (the
-    standard Gopher/C4-style cheap filters)."""
+    density, healthy English stopword ratio, mean-word-length sanity
+    (the standard Gopher/C4-style cheap filters)."""
     c = F.col(text) if isinstance(text, str) else text
-    words = LANG_STOPWORDS[lang]
+    words = LANG_STOPWORDS["en"]
 
     # Token array bound once (r15): token_count + the stopword ratio each
     # re-ran the tokenizer (4+ split/filter passes per row); all the
@@ -221,13 +203,13 @@ PII_PATTERNS = {
 }
 
 
-def scrub_pii(text: Column | str, replacement: str = " ") -> Column:
-    """Corpus-prep scrub: emails, URLs and long digit runs replaced
-    (C4-style cheap PII pass). Chained native regexp_replace — one
+def scrub_pii(text: Column | str) -> Column:
+    """Corpus-prep scrub: emails, URLs and long digit runs replaced by
+    one space (C4-style cheap PII pass). Chained native regexp_replace — one
     projection, no UDF."""
     c = F.col(text) if isinstance(text, str) else text
     for pat in PII_PATTERNS.values():
-        c = F.regexp_replace(c, pat, replacement)
+        c = F.regexp_replace(c, pat, " ")
     return c
 
 
@@ -306,18 +288,16 @@ def _run_fold(grams: Column) -> Column:
     return F.aggregate(F.array_sort(grams), init, step, flush)
 
 
-def repetition_signals(
-    text: Column | str, top_ngram: int = 2, dup_ngram: int = 5
-) -> Column:
+def repetition_signals(text: Column | str) -> Column:
     """Gopher-style repetition quality counters (Rae et al. 2021,
     Appendix A — public methodology) as one struct column:
 
     - ``dup_word_frac``: fraction of tokens that repeat an earlier
       token — (n_tokens - n_distinct_tokens) / n_tokens;
     - ``top_ngram_char_frac``: count x length of the most frequent
-      ``top_ngram``-gram over the text length;
+      2-gram over the text length;
     - ``dup_ngram_char_frac``: summed count x length of every
-      ``dup_ngram``-gram occurring more than once, over text length.
+      5-gram occurring more than once, over text length.
 
     High values mark boilerplate / degenerate generations for the
     pre-training filter. All-native (sorted-array folds), zero shuffle
@@ -326,8 +306,8 @@ def repetition_signals(
     toks = tokens(c)
     n_tok = F.size(toks)
     chars = F.greatest(F.length(c), F.lit(1)).cast("double")
-    top_fold = _run_fold(_ngrams_all(c, top_ngram))
-    dup_fold = _run_fold(_ngrams_all(c, dup_ngram))
+    top_fold = _run_fold(_ngrams_all(c, 2))
+    dup_fold = _run_fold(_ngrams_all(c, 5))
     return F.struct(
         ((n_tok - F.size(F.array_distinct(toks))) / F.greatest(n_tok, F.lit(1)))
         .alias("dup_word_frac"),

@@ -8,14 +8,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def runtime_per_day(
-    downtime: DataFrame,
-    server: str,
-    cap_minutes: float | None = 1440.0,
-    drop_first_day: bool = True,
-) -> DataFrame:
-    """Per-(Date, LINE) runtime sum with the reference's cap and
-    first-day elimination (A3/F10/F11; reference
+def runtime_per_day(downtime: DataFrame, server: str) -> DataFrame:
+    """Per-(Date, LINE) runtime sum with the reference's cap at 1440
+    minutes and first-day elimination (A3/F10/F11; reference
     data_from_mdc.py:237-249, ref/RCO_Maple_orchestrator.R:162-185).
 
     First-day elimination uses a per-LINE min — the reference's global
@@ -38,14 +33,12 @@ def runtime_per_day(
         downtime.na.drop(subset=["START_TIME"])
         .groupBy(F.to_date("START_TIME").alias("Date"), "LINE")
         .agg(F.sum("UPTIME").alias("Runtime"))
+        .withColumn("Runtime", F.least(F.col("Runtime"), F.lit(1440.0)))
     )
-    if cap_minutes is not None:
-        daily = daily.withColumn("Runtime", F.least(F.col("Runtime"), F.lit(cap_minutes)))
-    if drop_first_day:
-        w = Window.partitionBy("LINE")
-        daily = daily.withColumn("__min_date", F.min("Date").over(w)).filter(
-            F.col("Date") > F.col("__min_date")
-        ).drop("__min_date")
+    w = Window.partitionBy("LINE")
+    daily = daily.withColumn("__min_date", F.min("Date").over(w)).filter(
+        F.col("Date") > F.col("__min_date")
+    ).drop("__min_date")
     return daily.withColumn("Server", F.lit(server))
 
 
@@ -112,7 +105,6 @@ def sliding_distinct(
     key_col: str,
     size_days: int,
     slide_days: int = 1,
-    extra_group: Sequence[str] = (),
 ) -> DataFrame:
     """Exact DISTINCT count over sliding event-time windows (e.g.
     trailing-7-day active users per day) — the rolling-uniques metric
@@ -133,15 +125,15 @@ def sliding_distinct(
     exactly); trim by window_start if only complete windows matter.
 
     The explode input is PRE-DEDUPED at day granularity
-    (``dropDuplicates([*extra, key, day])``): countDistinct collapses
+    (``dropDuplicates([key, day])``): countDistinct collapses
     duplicates anyway, so the result is unchanged, but the fan-out
     drops from events*k to day-uniques*k — on 100-events/user/day
     telemetry that is a ~100x cut in exploded rows for the price of
     one narrow (key, day) exchange whose map-side partial dedup
     already collapses most of it.
 
-    Returns (``*extra_group``, window_start DATE, window_end DATE,
-    n_distinct). ALIGNMENT: a row labels the FORWARD window
+    Returns (window_start DATE, window_end DATE, n_distinct).
+    ALIGNMENT: a row labels the FORWARD window
     ``[window_start, window_end)`` with ``window_end = window_start +
     size_days`` (exclusive). Read as a trailing metric, the trailing
     window ENDING on day d is the row with ``window_start ==
@@ -151,29 +143,24 @@ def sliding_distinct(
     if size_days % slide_days:
         raise ValueError("size_days must be a multiple of slide_days")
     k = size_days // slide_days
-    extra = list(extra_group)
     days = df.select(
-        *extra,
         F.col(key_col),
         F.date_trunc("day", F.col(ts_col)).alias("__d"),
-    ).dropDuplicates([*extra, key_col, "__d"])
+    ).dropDuplicates([key_col, "__d"])
     memb = days.select(
-        *extra,
         key_col,
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("__k"),
         F.col("__d"),
     ).select(
-        *extra,
         key_col,
         (
             F.col("__d") - F.col("__k") * F.expr(f"INTERVAL {slide_days} DAYS")
         ).cast("date").alias("window_start"),
     )
     return (
-        memb.groupBy(*extra, "window_start")
+        memb.groupBy("window_start")
         .agg(F.countDistinct(key_col).cast("long").alias("n_distinct"))
         .select(
-            *extra,
             "window_start",
             F.date_add("window_start", size_days).alias("window_end"),
             "n_distinct",

@@ -48,10 +48,9 @@ def word_type_counts(
     docs: DataFrame,
     text_col: str = "text",
     min_count: int = 2,
-    max_word_types: int = 50_000,
 ) -> DataFrame:
-    """The ONE corpus pass: (word, count) for the most frequent word
-    types (deterministic top-K: count desc, then word). Everything
+    """The ONE corpus pass: (word, count) for the 50,000 most frequent
+    word types (deterministic top-K: count desc, then word). Everything
     downstream is vocabulary-sized."""
     counts = (
         docs.select(F.explode(_tokens(F.col(text_col))).alias("w"))
@@ -59,7 +58,7 @@ def word_type_counts(
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .filter(F.col("c") >= min_count)
     )
-    return counts.orderBy(F.col("c").desc(), F.col("w")).limit(max_word_types)
+    return counts.orderBy(F.col("c").desc(), F.col("w")).limit(50_000)
 
 
 def initial_pair_counts(word_counts: DataFrame) -> DataFrame:
@@ -128,14 +127,13 @@ def learn_bpe(
     text_col: str = "text",
     n_merges: int = 200,
     min_count: int = 2,
-    max_word_types: int = 50_000,
 ) -> list[tuple[str, str]]:
     """Learn an ordered BPE merge table from the corpus. One
     distributed word-count pass; the greedy loop runs driver-side on
     the bounded word-type table (see module doc)."""
     rows = word_type_counts(
-        docs, text_col, min_count=min_count, max_word_types=max_word_types
-    ).collect()  # bounded: <= max_word_types rows by construction
+        docs, text_col, min_count=min_count
+    ).collect()  # bounded: <= 50,000 rows by construction
     return _merge_loop([(r.w, r.c) for r in rows], n_merges)
 
 

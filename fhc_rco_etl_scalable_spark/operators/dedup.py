@@ -44,6 +44,13 @@ def ppm_bucket(id_col: str, salt: str) -> Column:
 # integer arithmetic (portable to any SQL oracle, overflow-safe:
 # a < 2^30, x < 2^32 -> product < 2^62).
 MINHASH_PRIME = 4294967311  # smallest prime > 2^32
+# The one MinHash configuration: 16 permutations in 4 bands of 4 rows
+# over token 3-grams. The DuckDB twin
+# (harness_queries._minhash_banded_ctes) reads the same constants, so
+# operator and oracle cannot drift apart.
+MINHASH_NUM_HASHES = 16
+MINHASH_BANDS = 4
+MINHASH_NGRAM = 3
 
 
 def _perm_coeffs(i: int) -> tuple[int, int]:
@@ -54,17 +61,17 @@ def _perm_coeffs(i: int) -> tuple[int, int]:
     return (a | 1, b)
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str, normalized: bool = True
-) -> DataFrame:
-    """Exact-duplicate clustering: content hash -> keep the min-id doc
-    per cluster. Returns (id, fingerprint, cluster_size, keep)."""
+def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Exact-duplicate clustering: normalized content hash
+    (:func:`normalized_fingerprint`) -> keep the min-id doc per cluster.
+    Returns (id, fingerprint, cluster_size, keep)."""
     from .skew import spread
 
     from pyspark.sql import Window
 
-    fp = normalized_fingerprint(text_col) if normalized else F.md5(F.col(text_col))
-    hashed = spread(df, id_col).select(F.col(id_col), fp.alias("fingerprint"))
+    hashed = spread(df, id_col).select(
+        F.col(id_col), normalized_fingerprint(text_col).alias("fingerprint")
+    )
     # Window over the fingerprint instead of groupBy + join back: ONE
     # normalization pass, ONE exchange, no self-join to re-execute the
     # regex lineage (measured 2x at sf0.1; same shuffle key at 100 TB).
@@ -102,13 +109,11 @@ def minhash_bands(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
     materialize: bool = True,
 ) -> DataFrame:
     """The banded MinHash index rows for a corpus: one row per
-    (``id_col``, band, band_sig). This IS the persistable LSH index —
+    (``id_col``, band, band_sig), with the module's 16 hashes in 4
+    bands over token 3-grams. This IS the persistable LSH index —
     write it to a table and new batches dedup against it without
     re-minhashing history (:func:`incremental_minhash_dedup`); it is
     also the shared first stage of :func:`minhash_lsh_candidates`.
@@ -123,21 +128,22 @@ def minhash_bands(
     read the frame twice need (the self-join); pass False when the
     rows go straight to a sink.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
     from .skew import spread
 
     # project BEFORE the spread exchange: only (id, text) shuffle,
     # not every column of the corpus frame
     df = spread(df.select(id_col, text_col), id_col)
     grams_long = df.select(
-        F.col(id_col), F.explode(token_ngrams(F.col(text_col), ngram)).alias("__g")
+        F.col(id_col),
+        F.explode(token_ngrams(F.col(text_col), MINHASH_NGRAM)).alias("__g"),
     ).withColumn("__h", md5_int(F.col("__g")))
     mins = grams_long.groupBy(id_col).agg(
         *[
             F.min(
                 (F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(MINHASH_PRIME)
             ).alias(f"__m{i}")
-            for i, (a, b) in ((i, _perm_coeffs(i)) for i in range(num_hashes))
+            for i, (a, b) in enumerate(map(_perm_coeffs, range(MINHASH_NUM_HASHES)))
         ]
     )
     banded = mins.select(
@@ -149,7 +155,7 @@ def minhash_bands(
                         ",",
                         *[F.col(f"__m{b * rows_per_band + r}") for r in range(rows_per_band)],
                     )
-                    for b in range(bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("band", "band_sig"),
@@ -161,20 +167,18 @@ def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
 ) -> DataFrame:
-    """Near-duplicate candidate pairs via MinHash banding: docs sharing
-    any band of their signature. Returns (id_a, id_b, n_shared_bands)
-    with id_a < id_b.
+    """Near-duplicate candidate pairs via MinHash banding (the module's
+    16 hashes in 4 bands over token 3-grams): docs sharing any band of
+    their signature. Returns (id_a, id_b, n_shared_bands) with
+    id_a < id_b.
 
     One shuffle on (band, band-signature); pair explosion is bounded by
     bucket sizes, not corpus size.
     """
     # barrier inside minhash_bands: the self-join reads `banded` twice —
     # without it the gram explode + min-reduce execute once per side.
-    banded = minhash_bands(df, id_col, text_col, num_hashes, bands, ngram)
+    banded = minhash_bands(df, id_col, text_col)
     # distinct alias names on both sides: same-lineage self-join would
     # otherwise resolve `band == band` to one attribute (always true).
     a = banded.select(
@@ -201,9 +205,6 @@ def incremental_minhash_dedup(
     index: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup an arriving batch against a PERSISTED LSH index — the
     production shape at 100 TB: history is minhashed once, its
@@ -211,9 +212,9 @@ def incremental_minhash_dedup(
     hashes only ITSELF. No recompute of history, ever.
 
     ``index`` carries history's :func:`minhash_bands` rows (same
-    id_col name, same num_hashes/bands/ngram — the caller owns that
-    consistency; a mismatched banding silently finds nothing, so
-    persist the parameters next to the index table).
+    id_col name, built with the module's 16 hashes / 4 bands / 3-grams
+    — the caller owns that consistency; a mismatched banding silently
+    finds nothing).
 
     A batch doc is a duplicate when any band collides with (a) an
     index row — cross-batch — or (b) a SMALLER-id batch doc —
@@ -237,7 +238,7 @@ def incremental_minhash_dedup(
     self-join bounded by bucket sizes, one min-aggregate. History text
     is never read.
     """
-    nb = minhash_bands(batch, id_col, text_col, num_hashes, bands, ngram)
+    nb = minhash_bands(batch, id_col, text_col)
     hist_hits = (
         nb.alias("n")
         .join(
@@ -290,11 +291,11 @@ def jaccard_pairs(
     text_col: str,
     block_cols: list[str],
     threshold: float = 0.5,
-    ngram: int = 3,
     materialize: bool = True,
     max_df: float | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs within the same block.
+    """Exact token 3-gram Jaccard similarity for pairs within the same
+    block.
     Returns (id_a, id_b, jaccard) with jaccard >= threshold, id_a < id_b.
 
     ``threshold`` must be > 0: pairs sharing zero grams are never
@@ -334,7 +335,7 @@ def jaccard_pairs(
         F.explode(
             F.array_distinct(
                 F.transform(
-                    token_ngrams(F.col(text_col), ngram),
+                    token_ngrams(F.col(text_col)),
                     lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
                 )
             )
@@ -828,10 +829,9 @@ def deterministic_sample(
     df: DataFrame,
     id_col: str,
     fraction: float,
-    salt: str = "sample",
 ) -> DataFrame:
     """Hash-based deterministic sampling: keep rows whose
-    ``md5(salt || id)`` bucket (of 1e6) falls below ``fraction``.
+    ``md5('sample' || id)`` bucket (of 1e6) falls below ``fraction``.
 
     Training-data pipelines need samples that are (a) reproducible
     across runs/engines — no RNG state, no partition-order dependence
@@ -840,7 +840,7 @@ def deterministic_sample(
     sampled tables stay aligned. Pure map-side: no shuffle, prunes
     with the scan.
     """
-    bucket = ppm_bucket(id_col, salt)
+    bucket = ppm_bucket(id_col, "sample")
     return df.filter(bucket < int(fraction * 1_000_000))
 
 
@@ -848,13 +848,13 @@ def stratified_split(
     df: DataFrame,
     id_col: str,
     weights: dict[str, float],
-    salt: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each id hashes into
-    [0, 1e6) once; consecutive weight intervals label it. Adds a
-    ``split`` column; weights must sum to <= 1 (remainder unlabeled
-    NULL — useful as a holdout). Same hash-consistency guarantees as
-    :func:`deterministic_sample`; map-side only."""
+    [0, 1e6) once (salt ``'split'``); consecutive weight intervals
+    label it. Adds a ``split`` column; weights must sum to <= 1
+    (remainder unlabeled NULL — useful as a holdout). Same
+    hash-consistency guarantees as :func:`deterministic_sample`;
+    map-side only."""
     if not weights:
         raise ValueError("stratified_split: weights must be non-empty")
     if any(w < 0 for w in weights.values()):
@@ -866,7 +866,7 @@ def stratified_split(
         raise ValueError(
             f"stratified_split: weights sum to {sum(weights.values())} > 1"
         )
-    bucket = ppm_bucket(id_col, salt)
+    bucket = ppm_bucket(id_col, "split")
     expr = None
     lo, cum = 0, 0.0
     for name, w in weights.items():
@@ -881,15 +881,15 @@ def stratified_split(
     return df.withColumn("split", expr.otherwise(F.lit(None).cast("string")))
 
 
-def dense_index(df: DataFrame, id_col: str, buckets: int = 64) -> DataFrame:
+def dense_index(df: DataFrame, id_col: str) -> DataFrame:
     """Distributed contiguous index: a deterministic bijection of the
     rows onto ``0..n-1`` (column ``__i``) without a global sort.
 
-    The scalable zipWithIndex shape: bucket by ``id % buckets``,
+    The scalable zipWithIndex shape: bucket by ``id % 64``,
     within-bucket ``row_number`` (a KEY-partitioned window), then an
     exclusive running sum over the per-bucket counts gives each
     bucket's offset — that window is global but its input is the
-    aggregate-bounded ``buckets``-row frame (the bounded-global-window
+    aggregate-bounded 64-row frame (the bounded-global-window
     pattern explain_audit section 35 checks), and the offsets
     broadcast back. The index is deterministic and engine-portable
     (pure modulo + rank arithmetic, no engine hash), NOT id-sorted —
@@ -905,7 +905,7 @@ def dense_index(df: DataFrame, id_col: str, buckets: int = 64) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    b = df.select(F.col(id_col), (F.col(id_col) % buckets).alias("__b"))
+    b = df.select(F.col(id_col), (F.col(id_col) % 64).alias("__b"))
     w = Window.partitionBy("__b").orderBy(id_col)
     rn = b.withColumn("__rn", F.row_number().over(w) - 1)
     counts = b.groupBy("__b").agg(F.count(F.lit(1)).alias("__c"))
@@ -951,10 +951,6 @@ def negative_sample(
     df: DataFrame,
     id_col: str,
     k: int,
-    mult_a: int = 2654435761,
-    mult_b: int = 40503,
-    seed: int = 7,
-    buckets: int = 64,
     method: str = "affine",
 ) -> DataFrame:
     """``k`` deterministic pseudo-random negatives per anchor from the
@@ -962,7 +958,7 @@ def negative_sample(
     complement of the margin-mining hard negatives).
 
     Negative ``t`` of the anchor at dense index ``i`` is the row at
-    index ``(i*mult_a + t*mult_b + seed) % (n-1)``, skip-self mapped
+    index ``(i*2654435761 + t*40503 + 7) % (n-1)``, skip-self mapped
     (``j -> j+1`` when ``j >= i``) so an anchor never draws itself —
     a bijection of ``[0, n-2]`` onto the other ``n-1`` rows per draw.
     Draws are WITH replacement across ``t``; arithmetic is plain
@@ -980,25 +976,21 @@ def negative_sample(
     SQL-transcribable, no engine RNG):
 
     - ``'affine'`` (default, the original contract):
-      ``j_t = (i*mult_a + t*mult_b + seed) mod (n-1)``. Caveat
+      ``j_t = (i*2654435761 + t*40503 + 7) mod (n-1)``. Caveat
       (documented, deliberate): for a fixed anchor the ``k`` draws
-      form an arithmetic progression (stride ``mult_b mod (n-1)``) —
+      form an arithmetic progression (stride ``40503 mod (n-1)``) —
       each draw is marginally uniform but draws are CORRELATED across
-      ``t``, and two anchors with ``i*mult_a`` congruent mod ``n-1``
-      share the same negative set.
+      ``t``, and two anchors with ``i*2654435761`` congruent mod
+      ``n-1`` share the same negative set.
     - ``'md5'`` (VERDICT r11 #5 — the decorrelated form): ``(i, t)``
       mix through the catalog's portable md5-prefix idiom before the
-      mod-reduce — ``j_t = hex60(md5('negs|{seed}|' || i || '|' ||
+      mod-reduce — ``j_t = hex60(md5('negs|7|' || i || '|' ||
       t)) mod (n-1)`` with ``hex60`` the first 15 hex chars as a
       60-bit integer (exact in int64; DuckDB transcribes it as
       ``('0x' || substr(md5(..),1,15))::BIGINT``). Draws are
       pairwise-independent-looking across both ``i`` and ``t``
       (avalanche), at the cost of md5 per draw and a ~(n-1)/2^60
-      modulo bias — negligible for any real corpus. ``mult_a``/
-      ``mult_b`` are ignored.
-
-    Training pipelines can also re-key per epoch (vary ``seed``)
-    under either method.
+      modulo bias — negligible for any real corpus.
 
     Shape: dense index (key-partitioned window + broadcast offsets),
     one ``sequence``+``explode`` (k rows per anchor), one equi-join
@@ -1010,7 +1002,7 @@ def negative_sample(
     # barrier each re-derives dense_index's two-scan subtree from the
     # raw input (measured r13: 6 FileScans in one plan). The frame is
     # (id, long): narrow, row-sized — checkpoint-cheap.
-    ix = dense_index(df, id_col, buckets).localCheckpoint(eager=False)
+    ix = dense_index(df, id_col).localCheckpoint(eager=False)
     n = ix.agg(F.count(F.lit(1)).cast("long").alias("__n")).select(
         # fail-fast n >= 2: the guard lives INSIDE the __n expression
         # so column pruning can never drop it.
@@ -1039,9 +1031,9 @@ def negative_sample(
                 F.col("__i"),
                 F.col("neg_rank"),
                 F.col("__n") - 1,
-                mult_a,
-                mult_b,
-                seed,
+                2654435761,
+                40503,
+                7,
             )
             if method == "affine"
             else (
@@ -1049,7 +1041,7 @@ def negative_sample(
                     F.substring(
                         F.md5(
                             F.concat(
-                                F.lit(f"negs|{int(seed)}|"),
+                                F.lit("negs|7|"),
                                 F.col("__i").cast("string"),
                                 F.lit("|"),
                                 F.col("neg_rank").cast("string"),
@@ -1348,7 +1340,6 @@ def domain_mixture(
     domain_col: str,
     id_col: str,
     total_budget: int,
-    salt: str = "mix",
 ) -> DataFrame:
     """Budget-constrained domain-mixture sampling: give every domain an
     equal share of ``total_budget`` documents and take a deterministic
@@ -1357,9 +1348,9 @@ def domain_mixture(
     tokenization (upsampling is out of scope; rates cap at 1).
 
     Determinism contract: the per-domain rate is floored to an integer
-    ppm and compared against the same md5 bucket used by
-    ``deterministic_sample``, so membership is reproducible across
-    engines and stable under re-partitioning.
+    ppm and compared against an md5 bucket of the id (salt ``'mix'``,
+    the idiom of ``deterministic_sample``), so membership is
+    reproducible across engines and stable under re-partitioning.
 
     Scale: one count aggregation over the domain column (tiny result),
     the rate table broadcasts back onto the corpus, and selection is a
@@ -1383,7 +1374,7 @@ def domain_mixture(
         .cast("long")
         .alias("rate_ppm"),
     )
-    bucket = ppm_bucket(id_col, salt)
+    bucket = ppm_bucket(id_col, "mix")
     return (
         df.join(F.broadcast(rates), domain_col)
         .filter(bucket < F.col("rate_ppm"))
@@ -1396,14 +1387,13 @@ def weighted_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    salt: str = "wsample",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement (Efraimidis
     & Spirakis A-ES, IPL 2006): each row gets key ``u^(1/w)`` with
-    ``u`` a hash-derived uniform in (0,1); the global top-k by key is
-    an exact weighted sample — rows surface with probability
-    proportional to weight, reproducibly (no RNG state, no partition-
-    order dependence).
+    ``u`` a hash-derived uniform in (0,1) (salt ``'wsample'``); the
+    global top-k by key is an exact weighted sample — rows surface
+    with probability proportional to weight, reproducibly (no RNG
+    state, no partition-order dependence).
 
     Scale: the key is map-side arithmetic and the top-k plans as
     TakeOrdered (per-partition heads merged on the driver) — no global
@@ -1411,7 +1401,7 @@ def weighted_sample(
     decimals with an id tiebreak, so a libm ulp difference in ``pow``
     can never reorder the sample between engines.
     """
-    bucket = ppm_bucket(id_col, salt)
+    bucket = ppm_bucket(id_col, "wsample")
     u = (bucket + F.lit(0.5)) / F.lit(1_000_000.0)  # uniform, never 0 or 1
     key = F.round(
         F.pow(u, F.lit(1.0) / F.col(weight_col).cast("double")), 12

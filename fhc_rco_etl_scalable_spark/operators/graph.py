@@ -39,8 +39,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    scale: int = 10_000_000,
-    damping_pct: int = 85,
 ) -> DataFrame:
     """Fixed-iteration integer-scaled PageRank (link centrality, as
     web-corpus pipelines use to weight crawl hosts before sampling).
@@ -49,8 +47,8 @@ def pagerank(
     the edge, matching the multigraph reading of repeated links).
     Returns (node, rank): every node appearing as source or
     destination, with its rank after ``iterations`` rounds, as longs
-    at ``scale`` (initial rank = ``scale``; base term =
-    ``scale - scale*damping_pct div 100``).
+    at scale 10^7 with damping 85% (initial rank = 10,000,000; base
+    term = ``10^7 - 10^7*85 div 100`` = 1,500,000).
 
     Ranks are longs, per-edge contributions use integer division by
     out-degree and the damping mix is integer ``div``, so every sum is
@@ -85,8 +83,7 @@ def pagerank(
     )
     out_deg = e.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
     deg_edges = e.join(out_deg, "__src").localCheckpoint(eager=False)
-    base = scale - (scale * damping_pct) // 100
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
+    ranks = nodes.select("node", F.lit(10_000_000).cast("long").alias("rank"))
     for _ in range(iterations):
         contrib = (
             deg_edges.join(ranks.withColumnRenamed("node", "__src"), "__src")
@@ -101,10 +98,8 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(__m, 0L)) div 100"
-                    )
+                    F.lit(1_500_000)
+                    + F.expr("(85 * coalesce(__m, 0L)) div 100")
                 )
                 .cast("long")
                 .alias("rank"),

@@ -21,7 +21,7 @@ Spark-first shape, sized for 100 TB:
   corpus until the final per-doc aggregate, zero Python anywhere.
 * **Stupid backoff** (Brants et al. 2007) rather than Kneser-Ney:
   no normalization pass, score = c2/c1 on a bigram hit, else
-  alpha * c1/N, else alpha/N — exactly the large-scale trade the
+  0.4 * c1/N, else 0.4/N — exactly the large-scale trade the
   paper proposes (quality parity at corpus scale, trivially
   distributable arithmetic).
 
@@ -65,14 +65,10 @@ def bigram_logprob_score(
     docs: DataFrame,
     doc_id: str = "doc_id",
     text: str = "text",
-    train_mod: int = 10,
-    train_rem: int = 0,
-    alpha: float = 0.4,
-    min_bigram_count: int = 2,
 ) -> DataFrame:
-    """Score every held-out document (``doc_id % train_mod !=
-    train_rem``) with a stupid-backoff bigram LM trained on the
-    held-in slice.
+    """Score every held-out document (``doc_id % 10 != 0``) with a
+    stupid-backoff bigram LM (backoff weight 0.4) trained on the
+    held-in slice, keeping bigrams seen at least twice.
 
     Returns (doc_id, n_transitions, avg_logprob): the number of scored
     bigram transitions and their mean natural-log probability (rounded
@@ -88,7 +84,7 @@ def bigram_logprob_score(
     tok = docs.select(
         F.col(doc_id).alias("doc_id"), _tokens(F.col(text)).alias("toks")
     )
-    is_train = (F.col("doc_id") % train_mod) == train_rem
+    is_train = (F.col("doc_id") % 10) == 0
     train = tok.filter(is_train)
 
     # The unigram model is VOCABULARY-sized; localCheckpoint it so the
@@ -113,7 +109,7 @@ def bigram_logprob_score(
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c2"))
-        .filter(F.col("c2") >= min_bigram_count)
+        .filter(F.col("c2") >= 2)
     )
 
     pairs = tok.filter(~is_train).select(
@@ -135,9 +131,9 @@ def bigram_logprob_score(
         )
         .when(
             F.col("__u2_c").isNotNull(),
-            F.log(F.lit(alpha) * F.col("__u2_c").cast("double") / F.col("n_total")),
+            F.log(F.lit(0.4) * F.col("__u2_c").cast("double") / F.col("n_total")),
         )
-        .otherwise(F.log(F.lit(alpha) / F.col("n_total")))
+        .otherwise(F.log(F.lit(0.4) / F.col("n_total")))
     )
     return (
         scored.select("doc_id", lp.alias("lp"))
@@ -151,20 +147,11 @@ def bigram_logprob_score(
     )
 
 
-def perplexity(avg_logprob: Column) -> Column:
-    """exp(-avg_logprob): the conventional reporting form. Kept OUT of
-    the oracle-graded surface (exp() ulp drift would sit directly in
-    the hash); filters should threshold avg_logprob itself."""
-    return F.exp(-avg_logprob)
-
-
 def dsir_logratio_score(
     docs: DataFrame,
     target: Column,
     doc_id: str = "doc_id",
     text: str = "text",
-    n_buckets: int = 1024,
-    salt: str = "dsir",
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling" — the public
@@ -174,14 +161,14 @@ def dsir_logratio_score(
 
         w(doc) = avg_t [ ln p_target(h(t)) - ln p_raw(h(t)) ]
 
-    with add-one smoothing over ``n_buckets`` hashed buckets. Rows
+    with add-one smoothing over 1024 hashed buckets (salt ``'dsir'``). Rows
     where ``target`` is true define the target distribution; the raw
     model is the whole corpus. Importance RESAMPLING then composes
     with the engine's weighted_sample on exp(w) — this operator ships
     the weights, which is the part with distributed structure.
 
     One corpus pass builds BOTH models (count + conditional count per
-    bucket in a single groupBy); the bucket table (<= n_buckets rows)
+    bucket in a single groupBy); the bucket table (<= 1024 rows)
     broadcasts; scoring is one broadcast join + a per-doc aggregate —
     the same 100 TB shape as bigram_logprob_score. The bucket hash is
     the catalog's portable md5-prefix idiom, so the DuckDB oracle
@@ -189,18 +176,18 @@ def dsir_logratio_score(
     """
     bucket = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt + "|"), F.col("__w"))), 1, 8),
+            F.substring(F.md5(F.concat(F.lit("dsir|"), F.col("__w"))), 1, 8),
             16,
             10,
         ).cast("long")
-        % n_buckets
+        % 1024
     )
     base = docs.select(
         F.col(doc_id).alias("doc_id"),
         target.alias("__t"),
         F.explode(_tokens(F.col(text))).alias("__w"),
     ).select("doc_id", "__t", bucket.alias("__bk"))
-    # <= n_buckets rows: checkpoint so `totals` reuses the materialized
+    # <= 1024 rows: checkpoint so `totals` reuses the materialized
     # bucket table instead of re-deriving the aggregate from a second
     # corpus scan (same r13 fix as bigram_logprob_score's `uni`).
     counts = base.groupBy("__bk").agg(
@@ -211,7 +198,7 @@ def dsir_logratio_score(
         F.sum("__cs").cast("double").alias("__ns"),
         F.sum("__ct").cast("double").alias("__nt"),
     )
-    b = float(n_buckets)
+    b = 1024.0
     lr = F.log((F.col("__ct") + 1.0) / (F.col("__nt") + b)) - F.log(
         (F.col("__cs") + 1.0) / (F.col("__ns") + b)
     )

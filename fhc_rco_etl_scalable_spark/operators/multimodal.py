@@ -209,7 +209,6 @@ def fake_image_decoder(payload: bytes, mime: str) -> list[float]:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes, str], list[float]] = not_implemented_decoder,
-    batch_size_hint: int | None = None,
 ) -> DataFrame:
     """payload -> feature vector via mapInPandas (Arrow batches; the
     decoder sees raw bytes, never Spark rows)."""
@@ -265,9 +264,7 @@ def _encode_netpbm(img) -> bytes:
     return magic + f"\n{w} {h}\n255\n".encode() + img.tobytes()
 
 
-def resize_images(
-    media: DataFrame, out_w: int, out_h: int, batch_size_hint: int | None = None
-) -> DataFrame:
+def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Binary -> binary media TRANSFORM (not just feature extraction):
     decode netpbm/BMP, nearest-neighbor resample to (out_w, out_h),
     re-encode as netpbm. Returns the media frame with ``payload``
@@ -332,17 +329,18 @@ def resize_images(
 
 
 def audio_spectrogram_decoder(
-    payload: bytes, mime: str, n_bands: int = 16, frame: int = 1024
+    payload: bytes, mime: str, n_bands: int = 16
 ) -> list[float]:
     """Spectral feature extractor for ``extract_features``: frame the
-    channel-mean PCM signal (hop = frame/2, rectangular window), rfft
-    each frame, average the power spectrum over frames, and emit
-    ``n_bands`` log10 band energies — the classic cheap audio
+    channel-mean PCM signal (1024-sample frames, hop 512, rectangular
+    window), rfft each frame, average the power spectrum over frames,
+    and emit ``n_bands`` log10 band energies — the classic cheap audio
     fingerprint surface (band-energy spectrogram), pure numpy."""
     import numpy as np
 
     samples, rate, _channels = _decode_wav(payload)
     mono = samples.mean(axis=1)
+    frame = 1024
     if len(mono) < frame:
         mono = np.pad(mono, (0, frame - len(mono)))
     hop = frame // 2

@@ -31,10 +31,9 @@ def bm25_topk(
     text_col: str,
     query: str,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """Top-``k`` documents for a keyword ``query`` under BM25.
+    """Top-``k`` documents for a keyword ``query`` under BM25 with
+    ``k1=1.2, b=0.75``.
 
     Returns (id_col, score, rank) with ``score`` rounded to 6 decimals
     and ranks tie-broken by id — the rounded score keeps the ordering
@@ -60,8 +59,8 @@ def bm25_topk(
     )
 
     idf = F.log(F.lit(1.0) + (F.col("__n") - F.col("__df") + 0.5) / (F.col("__df") + 0.5))
-    tf_term = (F.col("__tf") * (k1 + 1)) / (
-        F.col("__tf") + k1 * (1 - b + b * F.col("__dl") / F.col("__avgdl"))
+    tf_term = (F.col("__tf") * 2.2) / (
+        F.col("__tf") + 1.2 * (0.25 + 0.75 * F.col("__dl") / F.col("__avgdl"))
     )
     scored = (
         tf.join(F.broadcast(df_counts), "__t")

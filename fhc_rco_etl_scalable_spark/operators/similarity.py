@@ -73,8 +73,6 @@ def _blas_candidate_pairs(
     base: DataFrame,
     threshold: float,
     group_col: str | None = None,
-    block_rows: int = 8192,
-    strip_rows: int = 512,
     mask_col: str | None = None,
 ) -> DataFrame:
     """All unordered id pairs whose BLAS cosine clears ``threshold``,
@@ -82,10 +80,10 @@ def _blas_candidate_pairs(
 
     ``base`` is a (__id, __v) frame of UNIT vectors (plus ``group_col``
     when pairs are restricted to rows sharing a group, e.g. an IVF
-    cell). Rows hash into ~``block_rows``-sized blocks; each block PAIR
+    cell). Rows hash into ~8192-row blocks; each block PAIR
     (i <= j) becomes one ``applyInPandas`` group whose kernel runs one
-    numpy matmul per ``strip_rows`` strip (bounds the score matrix to
-    strip_rows x block_rows doubles) and emits only the surviving
+    numpy matmul per 512-row strip (bounds the score matrix to
+    512 x 8192 doubles) and emits only the surviving
     (id_a < id_b) pairs. Data movement is n x n_blocks rows — the
     quadratic work stays inside dgemm at memory bandwidth instead of
     surfacing as 10^10 codegen'd rows (measured 20x+ at 200k vectors).
@@ -118,7 +116,7 @@ def _blas_candidate_pairs(
     if n == 0:
         schema = f"id_a {id_t}, id_b {id_t}"
         return base.sparkSession.createDataFrame([], schema)
-    nb = max(1, _math.ceil(n / block_rows))
+    nb = max(1, _math.ceil(n / 8192))
     rows = base.withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(nb)).cast("int")
     )
@@ -171,8 +169,8 @@ def _blas_candidate_pairs(
                 bsub[mask_col].to_numpy().astype(np.int64) if mask_col else None
             )
         out_a, out_b = [], []
-        for s in range(0, len(ids_a), strip_rows):
-            sc = ma[s : s + strip_rows] @ mb.T
+        for s in range(0, len(ids_a), 512):
+            sc = ma[s : s + 512] @ mb.T
             ia, ib = np.where(sc >= threshold)
             if mask_col:
                 shared = (msk_a[ia + s] & msk_b[ib]) != 0
@@ -638,17 +636,15 @@ def _unit_sample(
     return np.asarray([r.uv for r in sample_rows], dtype=np.float64)
 
 
-def _kmeans_centroids(
-    sample: np.ndarray, n_cells: int, iters: int = 10
-) -> np.ndarray:
-    """Deterministic Lloyd iterations on a fixed, id-ordered sample.
+def _kmeans_centroids(sample: np.ndarray, n_cells: int) -> np.ndarray:
+    """10 deterministic Lloyd iterations on a fixed, id-ordered sample.
     No RNG: init = the first ``n_cells`` sample vectors, ties in
     assignment break to the lower cell index. Centroids re-normalized
     per iteration so cell assignment is by cosine (max dot on unit
     vectors)."""
     c = sample[:n_cells].copy()
     c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    for _ in range(iters):
+    for _ in range(10):
         assign = np.argmax(sample @ c.T, axis=1)
         for j in range(n_cells):
             members = sample[assign == j]
@@ -666,7 +662,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    sample_size: int = 512,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a coarse k-means
     quantizer partitions the corpus into ``n_cells`` cells; each query
@@ -677,7 +672,7 @@ def ivf_topk(
     |corpus|.
 
     Centroids are trained driver-side on a deterministic id-ordered
-    sample (k-means over <=``sample_size`` vectors is microscopic next
+    sample (k-means over <=512 vectors is microscopic next
     to the corpus scan; at 100 TB you train on the same sample and
     broadcast the matrix — the quantizer is data, not data-scale).
     ``n_probe == n_cells`` degenerates to exhaustive search and must
@@ -694,7 +689,7 @@ def ivf_topk(
     """
     from .skew import spread
 
-    sample = _unit_sample(corpus, id_col, vec_col, sample_size)
+    sample = _unit_sample(corpus, id_col, vec_col, 512)
     if sample is None:
         # empty corpus: return an empty, correctly-typed result instead
         # of crashing in the quantizer (np.linalg.norm axis error on a
@@ -950,14 +945,14 @@ def brute_force_topk_l2(
     )
 
 
-def _kmeans_l2(sample: np.ndarray, n_codes: int, iters: int = 10) -> np.ndarray:
-    """Deterministic Lloyd iterations under EUCLIDEAN distance (PQ
+def _kmeans_l2(sample: np.ndarray, n_codes: int) -> np.ndarray:
+    """10 deterministic Lloyd iterations under EUCLIDEAN distance (PQ
     codebooks quantize residual subvectors, where magnitude carries
     signal — no re-normalization, unlike the cosine coarse quantizer).
     Init = first ``n_codes`` sample rows; empty cells keep their
     previous centroid."""
     c = sample[:n_codes].copy()
-    for _ in range(iters):
+    for _ in range(10):
         d2 = ((sample[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
         assign = np.argmin(d2, axis=1)
         for j in range(len(c)):

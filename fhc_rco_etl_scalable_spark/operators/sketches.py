@@ -19,8 +19,8 @@ Why sketches, concretely, at scale:
   (asserted in tests/test_extensions.py) — re-runs reproduce, and the
   partition-invariance matrix applies.
 * **Bounded error.** Relative standard error ~= 1.04 / sqrt(2^lg_k)
-  (~0.8% at the lg_k=14 default); choose lg_k for the error budget,
-  pay 2^lg_k bytes per group.
+  (~0.8% at the lg_k=14 that ``distinct_sketch`` builds), at 2^lg_k
+  bytes per group.
 
 These helpers are deliberately NOT harness-oracle entries: the sketch
 bytes and estimator are engine-specific (DuckDB's approx_count_distinct
@@ -42,15 +42,14 @@ def distinct_sketch(
     df: DataFrame,
     key: str,
     group_cols: Sequence[str] = (),
-    lg_k: int = 14,
 ) -> DataFrame:
-    """Per-group HLL sketch of ``key``'s distinct values: returns
-    ``(*group_cols, sketch binary, n_distinct_est long)``. Keep the
+    """Per-group HLL sketch (lg_k=14) of ``key``'s distinct values:
+    returns ``(*group_cols, sketch binary, n_distinct_est long)``. Keep the
     sketch column in stored rollups — it is the mergeable state; the
     estimate column is a convenience projection of it."""
     groups = list(group_cols)
     out = df.groupBy(*groups).agg(
-        F.hll_sketch_agg(key, F.lit(int(lg_k))).alias("sketch")
+        F.hll_sketch_agg(key, F.lit(14)).alias("sketch")
     )
     return out.withColumn(
         "n_distinct_est", F.hll_sketch_estimate(F.col("sketch")).cast("long")

@@ -27,9 +27,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def spread(df: DataFrame, *key_cols: str, factor: int = 1) -> DataFrame:
-    """Pin an explicit N-way hash repartition ahead of a compute-dense
-    projection (gram explosion, signature matmul, 64-way bit votes).
+def spread(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Pin an explicit ``defaultParallelism``-way hash repartition ahead
+    of a compute-dense projection (gram explosion, signature matmul,
+    64-way bit votes).
 
     Two failure modes make this necessary rather than decorative:
     single-file inputs arrive as ONE scan partition (parquet can't
@@ -41,7 +42,7 @@ def spread(df: DataFrame, *key_cols: str, factor: int = 1) -> DataFrame:
     partitioning is exactly what a downstream per-key groupBy reuses,
     so the exchange is never wasted.
     """
-    n = df.sparkSession.sparkContext.defaultParallelism * factor
+    n = df.sparkSession.sparkContext.defaultParallelism
     if key_cols:
         return df.repartition(n, *[F.col(c) for c in key_cols])
     return df.repartition(n)
@@ -52,9 +53,8 @@ def salted_aggregate(
     keys: Sequence[str],
     partial_aggs: dict[str, Column],
     merge_aggs: dict[str, Column],
-    salt_buckets: int = 16,
 ) -> DataFrame:
-    """Two-stage salted aggregation.
+    """Two-stage salted aggregation over 16 salt buckets.
 
     ``partial_aggs``: name -> aggregate over the raw rows (stage 1,
     grouped by keys + salt). ``merge_aggs``: name -> aggregate over the
@@ -68,7 +68,7 @@ def salted_aggregate(
     """
     keys = list(keys)
     salted = df.withColumn(
-        "__salt", (F.rand(seed=7) * salt_buckets).cast("int")
+        "__salt", (F.rand(seed=7) * 16).cast("int")
     )
     partial = salted.groupBy(*keys, "__salt").agg(
         *[c.alias(n) for n, c in partial_aggs.items()]

@@ -597,18 +597,19 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MD5_INT_SQL = "(('0x' || substr(md5({x}), 1, 8))::BIGINT)"
 
 
-def _minhash_banded_ctes(
-    prefix: str = "",
-    where: str = "",
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
-) -> str:
+def _minhash_banded_ctes(prefix: str = "", where: str = "") -> str:
     """CTE chain ``{p}g -> {p}mins -> {p}sigs -> {p}banded`` computing
     the (doc_id, band, band_sig) LSH index rows for an optionally
     filtered documents slice — the transcription of
-    ``operators.dedup.minhash_bands``."""
-    from ..operators.dedup import MINHASH_PRIME, _perm_coeffs
+    ``operators.dedup.minhash_bands`` with the module's MinHash
+    constants."""
+    from ..operators.dedup import (
+        MINHASH_BANDS as bands,
+        MINHASH_NGRAM as ngram,
+        MINHASH_NUM_HASHES as num_hashes,
+        MINHASH_PRIME,
+        _perm_coeffs,
+    )
 
     p = prefix
     rows = num_hashes // bands
@@ -638,9 +639,9 @@ def _minhash_banded_ctes(
     {p}banded AS ({band_rows})"""
 
 
-def _minhash_ctes(num_hashes: int = 16, bands: int = 4, ngram: int = 3) -> str:
+def _minhash_ctes() -> str:
     return (
-        _minhash_banded_ctes("", "", num_hashes, bands, ngram)
+        _minhash_banded_ctes()
         + """,
     cand AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared_bands
@@ -651,10 +652,10 @@ def _minhash_ctes(num_hashes: int = 16, bands: int = 4, ngram: int = 3) -> str:
     )
 
 
-def _minhash_sql(num_hashes: int = 16, bands: int = 4, ngram: int = 3) -> str:
+def _minhash_sql() -> str:
     return (
         "WITH "
-        + _minhash_ctes(num_hashes, bands, ngram)
+        + _minhash_ctes()
         + "\nSELECT id_a, id_b, n_shared_bands FROM cand"
     )
 
@@ -4397,11 +4398,11 @@ def _dec(name: str):
     return F.col(name).cast(_MONEY)
 
 
-def _revenue(nd: int = 2):
-    """``round(sum(l_extendedprice*(1-l_discount)), nd)`` with DECIMAL
+def _revenue():
+    """``round(sum(l_extendedprice*(1-l_discount)), 2)`` with DECIMAL
     accumulation, emitted as DOUBLE — exact and order-independent."""
     rev = _dec("l_extendedprice") * (F.lit(1).cast(_MONEY) - _dec("l_discount"))
-    return F.round(F.sum(rev), nd).cast("double")
+    return F.round(F.sum(rev), 2).cast("double")
 
 
 _REV_SQL = (

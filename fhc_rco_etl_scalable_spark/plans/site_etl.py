@@ -95,7 +95,6 @@ def site_etl(
     line_config: DataFrame | None = None,
     run_machine_level: bool = True,
     data_update_time: datetime | None = None,
-    cause_summary_categories: Sequence[str] | None = None,
 ) -> dict[str, DataFrame]:
     """Run the complete RCO analysis for one site.
 
@@ -103,10 +102,6 @@ def site_etl(
     derived here if absent). ``production``: production event log for
     brandcode master derivation (optional).
     """
-    if cause_summary_categories is None:
-        # the per-site config home (SiteParams) is the default; the
-        # explicit argument stays as a call-site override.
-        cause_summary_categories = site.cause_summary_categories
     flagged = (
         with_derived_flags(downtime, line_config)
         if "isConstraint" not in downtime.columns or line_config is not None
@@ -134,9 +129,9 @@ def site_etl(
 
     outputs["Runtime_per_Day_data"] = runtime_per_day(line_dt_full, site.server)
 
-    if cause_summary_categories is not None:
+    if site.cause_summary_categories is not None:
         outputs["Daily_Cause_Summary"] = daily_cause_summary(
-            line_dt_full, cause_summary_categories, site.server
+            line_dt_full, site.cause_summary_categories, site.server
         )
 
     if production is not None:

@@ -229,33 +229,15 @@ def cause_slug(name: str) -> str:
     return re.sub(r"[^a-z0-9]+", "_", name.lower()).strip("_")
 
 
-def daily_cause_summary_schema(categories: Sequence[str]) -> T.StructType:
-    """Schema of the ``Daily_Cause_Summary`` output for a site's
-    category list (VERDICT r13 #2 — the one OUTPUT_SCHEMAS entry whose
-    columns depend on per-site config, so it's a function, not a
-    constant): ``Date, LINE, <slug>_min per category, Server``.
-    """
-    slugs = [cause_slug(c) for c in categories]
-    if not slugs:
-        raise ValueError("daily_cause_summary_schema: empty category list")
-    if len(set(slugs)) != len(slugs):
-        raise ValueError(f"cause categories collide after slugging: {slugs}")
-    return _struct(
-        ("Date", T.DateType()),
-        ("LINE", T.StringType()),
-        *[(f"{s}_min", T.DoubleType()) for s in slugs],
-        ("Server", T.StringType()),
-    )
-
-
 def dynamic_output_schema(name: str, df: DataFrame) -> T.StructType:
     """Resolve the schema of a config-shaped output table from the
-    batch itself — the loader-side twin of
-    :func:`daily_cause_summary_schema` for when the category list is
-    not in scope (``incremental_site_loader`` sees only the site's
-    outputs dict). Validates the expected column shape instead of
-    trusting it: a site_etl refactor that reorders or renames the
-    frame fails HERE, not as a silently misaligned parquet write.
+    batch itself: ``Daily_Cause_Summary`` has one ``<slug>_min``
+    column per site cause category (``Date, LINE, <slug>_min...,
+    Server``), and ``incremental_site_loader`` sees only the site's
+    outputs dict, not the category list. Validates the expected column
+    shape instead of trusting it: a site_etl refactor that reorders or
+    renames the frame fails HERE, not as a silently misaligned parquet
+    write.
     """
     if name != "Daily_Cause_Summary":
         raise ValueError(f"no dynamic schema rule for output table {name!r}")

@@ -33,14 +33,14 @@ def write_bucketed(
     bucket_cols: Sequence[str],
     n_buckets: int = 32,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a hash-bucketed, optionally sorted managed
-    table. ``n_buckets`` should match (a divisor of) the downstream
-    shuffle partition count so bucket-to-partition mapping is 1:1."""
+    table, overwriting any existing one. ``n_buckets`` should match (a
+    divisor of) the downstream shuffle partition count so
+    bucket-to-partition mapping is 1:1."""
     bucket_cols = list(bucket_cols)
     writer = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *bucket_cols)
     )
@@ -114,8 +114,6 @@ def write_zordered(
     cols: Sequence[str],
     n_files: int = 32,
     bits_per_col: int = 10,
-    relative_error: float | None = None,
-    exact_ranks: bool = False,
 ) -> None:
     """Z-order (Morton-curve) clustered export: interleave the bits of
     each column's rank bucket into one clustering key, then range-
@@ -132,19 +130,8 @@ def write_zordered(
     columns still spread over the full 2^bits range because the
     breakpoints ARE the value-distribution quantiles.
 
-    ``exact_ranks=True`` swaps in the exact ``percent_rank`` bucketing
-    — an UNPARTITIONED window, i.e. a global single-task sort per
-    clustering column.  It exists ONLY as the exactness oracle for
-    tests at toy scale; never use it on real data (VERDICT r5 #4).
-
     The z-value itself is built natively (shift/OR folds — no UDF)."""
-    zdf = zorder_key(
-        df,
-        cols,
-        bits_per_col=bits_per_col,
-        relative_error=relative_error,
-        exact_ranks=exact_ranks,
-    )
+    zdf = zorder_key(df, cols, bits_per_col=bits_per_col)
     (
         zdf.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
@@ -164,7 +151,14 @@ def zorder_key(
     """``df`` plus the interleaved Morton key as ``__z`` (the
     distributed-bucketing core of :func:`write_zordered`, exposed so
     tests can assert the plan shape — no global-sort Window in the
-    default path)."""
+    default path).
+
+    ``relative_error`` overrides the ``approxQuantile`` error
+    (default ``max(1e-4, 0.25 / 2^bits)``). ``exact_ranks=True`` swaps
+    in the exact ``percent_rank`` bucketing — an UNPARTITIONED window,
+    i.e. a global single-task sort per clustering column. It exists
+    ONLY as the exactness oracle for tests at toy scale; never use it
+    on real data (VERDICT r5 #4)."""
     cols = list(cols)
     # one 64-bit z-value: shiftleft wraps its amount mod 64, so bits
     # past position 62 would silently collide across columns

@@ -85,6 +85,6 @@ def site_config_frame(raw: DataFrame, item_id: bool = False) -> DataFrame:
     return _project(raw, SITE_CONFIG_COLUMNS, item_id)
 
 
-def line_config_frame(raw: DataFrame, item_id: bool = False) -> DataFrame:
+def line_config_frame(raw: DataFrame) -> DataFrame:
     """Line config list -> canonical frame (App/rco_main.py:165-188)."""
-    return _project(raw, LINE_CONFIG_COLUMNS, item_id)
+    return _project(raw, LINE_CONFIG_COLUMNS, item_id=False)

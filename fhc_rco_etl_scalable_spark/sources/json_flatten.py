@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def flatten_structs(df: DataFrame, sep: str = ".") -> DataFrame:
+def flatten_structs(df: DataFrame) -> DataFrame:
     """Recursively lift struct fields to top-level ``a.b.c`` columns.
     Non-struct columns pass through; arrays are left intact (use
     ``explode_records`` first for record paths)."""
@@ -29,7 +29,7 @@ def flatten_structs(df: DataFrame, sep: str = ".") -> DataFrame:
             if isinstance(f.dataType, T.StructType):
                 for sub in f.dataType.fields:
                     cols.append(
-                        F.col(f"`{f.name}`.`{sub.name}`").alias(f"{f.name}{sep}{sub.name}")
+                        F.col(f"`{f.name}`.`{sub.name}`").alias(f"{f.name}.{sub.name}")
                     )
             else:
                 cols.append(F.col(f"`{f.name}`"))

@@ -130,10 +130,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str | None = None, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
+def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
+    return {n: load_table(spark, n, sf_dir) for n in TABLES}
 
 
 #: SparkSession (weakly held) -> sf_dir whose views are registered.

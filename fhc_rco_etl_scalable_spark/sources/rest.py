@@ -30,6 +30,18 @@ from .json_flatten import flatten_structs
 DEFAULT_ROW_SIZE = 9999
 
 
+def _query_url(base_url: str, path: str, params: dict) -> str:
+    """``base_url/path?query`` with every key and value URL-encoded, so
+    a site key like ``'Lima SUD'`` (a space) or one holding ``&`` reaches
+    the server as one intact value. ``:`` and ``,`` stay literal — the
+    URL shape the reference emits for ``prOption=PR In:`` and id lists.
+    The one query builder of every REST reader here and in
+    ``rest_datasource``."""
+    from urllib.parse import quote, urlencode
+
+    return f"{base_url}/{path}?" + urlencode(params, quote_via=quote, safe=":,")
+
+
 def _send_with_retries(req, timeout: float, retries: int, backoff: float) -> str:
     """Send ``req`` (a ``urllib.request.Request``) and return the
     decoded response body, retrying transient failures with exponential
@@ -157,23 +169,14 @@ def kpi_scan(
     Downstream: join the lines dim on PLId and aggregate per day —
     ``operators.aggregate.runtime_per_day`` (A3, reference :240).
     """
-    from urllib.parse import quote
-
-    # URL-encode every parameter (callers pass human-readable values
-    # like 'PR In:'); ':' and ',' stay literal — matching the exact
-    # URL shape the reference emits.
-    enc = {
-        k: quote(str(v), safe=":,")
-        for k, v in {
-            "startTime": start_date, "endTime": end_date, "ids": line_ids,
+    url = _query_url(
+        base_url,
+        "API-iODS/api/Kpi/GetProductionDaysKpis",
+        {
+            "startTime": start_date, "endTime": end_date,
+            "filterType": "lines", "ids": line_ids,
             "kpi": kpi, "prOption": pr_option,
-        }.items()
-    }
-    url = (
-        f"{base_url}/API-iODS/api/Kpi/GetProductionDaysKpis"
-        f"?startTime={enc['startTime']}&endTime={enc['endTime']}"
-        f"&filterType=lines&ids={enc['ids']}&kpi={enc['kpi']}"
-        f"&prOption={enc['prOption']}"
+        },
     )
     payload = fetch(url)
     page = {"items": payload} if isinstance(payload, list) else payload
@@ -194,7 +197,6 @@ def rest_scan(
     """The ``get_raw_data`` surface (reference App/mdc/__init__.py:151-181):
     report table in {'pe','dt','po'}, site + date-window params become
     query args (server-side predicate pushdown)."""
-    query = {"site": site, "startDate": start_date, "rowSize": str(row_size), **params}
-    qs = "&".join(f"{k}={v}" for k, v in query.items())
-    first_url = f"{base_url}/{table}?{qs}"
+    query = {"site": site, "startDate": start_date, "rowSize": row_size, **params}
+    first_url = _query_url(base_url, table, query)
     return pages_to_dataframe(spark, iter_pages(fetch, first_url), record_path)

@@ -103,13 +103,19 @@ class PagedRestReader(DataSourceReader):
         if partition is None or partition.site is None:
             return  # all partitions pruned by pushdown: zero rows
         from fhc_rco_etl_scalable_spark.sources.rest import (
+            _query_url,
             default_fetch,
             iter_pages,
         )
 
-        url = (
-            f"{self.base_url}/{self.entity}?site={partition.site}"
-            f"&startDate={self.start_date}&rowSize={self.row_size}"
+        url = _query_url(
+            self.base_url,
+            self.entity,
+            {
+                "site": partition.site,
+                "startDate": self.start_date,
+                "rowSize": self.row_size,
+            },
         )
         names = [f.name for f in self.schema.fields]
         for page in iter_pages(default_fetch, url):
@@ -168,16 +174,15 @@ class RestCursorStreamReader(SimpleDataSourceStreamReader):
 
     def _fetch(self, after: int, upto: int | None):
         from fhc_rco_etl_scalable_spark.sources.rest import (
+            _query_url,
             default_fetch,
             iter_pages,
         )
 
-        url = (
-            f"{self.base_url}/{self.entity}?site={self.site}"
-            f"&{self.cursor_param}={after}"
-        )
+        params = {"site": self.site, self.cursor_param: after}
         if upto is not None:
-            url += f"&{self.end_param}={upto}"
+            params[self.end_param] = upto
+        url = _query_url(self.base_url, self.entity, params)
         names = [f.name for f in self.schema.fields]
         rows, hi = [], after
         for page in iter_pages(default_fetch, url):

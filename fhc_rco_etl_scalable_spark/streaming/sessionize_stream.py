@@ -148,14 +148,12 @@ def streaming_sessionize(events: DataFrame, p_minutes: float) -> DataFrame:
     )
 
 
-def streaming_runtime_per_day(
-    events: DataFrame, watermark: str = "1 day"
-) -> DataFrame:
+def streaming_runtime_per_day(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-day uptime rollup (streaming twin of
-    runtime_per_day; late data handled by the watermark instead of the
-    batch overlap-reload)."""
+    runtime_per_day; late data handled by a 1-day watermark instead of
+    the batch overlap-reload)."""
     return (
-        events.withWatermark("START_TIME", watermark)
+        events.withWatermark("START_TIME", "1 day")
         .groupBy(F.window("START_TIME", "1 day").alias("w"), "LINE")
         .agg(F.sum("UPTIME").alias("Runtime"))
         .select(F.col("w.start").cast("date").alias("Date"), "LINE", "Runtime")
@@ -166,19 +164,18 @@ def streaming_hopping_runtime(
     events: DataFrame,
     size_days: int = 2,
     slide_days: int = 1,
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Watermarked HOPPING (sliding) uptime rollup: overlapping
     ``size_days`` windows advancing every ``slide_days`` — the
     trailing-average shape tumbling windows cannot express. Each event
     lands in size/slide windows; Spark assigns them all in one
     Generate (no self-union), and window state is still bounded by the
-    watermark. Window starts are epoch-aligned, so day-granularity
+    1-day watermark. Window starts are epoch-aligned, so day-granularity
     slides fall on midnight — which is what makes the batch/SQL twin
     (event contributes to starts trunc_day(ts)-k, k < size/slide)
     line up exactly."""
     return (
-        events.withWatermark("START_TIME", watermark)
+        events.withWatermark("START_TIME", "1 day")
         .groupBy(
             F.window(
                 "START_TIME", f"{size_days} days", f"{slide_days} days"

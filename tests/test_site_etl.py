@@ -342,9 +342,9 @@ def test_daily_cause_summary_wide_by_cause(spark):
     with pytest.raises(ValueError, match="collide"):
         daily_cause_summary(line_dt_full, ("A b", "a_B"), "SRV")
     # wired through site_etl: the extra output appears only on request
-    site = SiteParams(server="SRV")
-    outs = site_etl(downtime, None, site,
-                    cause_summary_categories=("Changeover", "Failure"),
-                    data_update_time=datetime(2024, 1, 5))
+    site = SiteParams(
+        server="SRV", cause_summary_categories=("Changeover", "Failure")
+    )
+    outs = site_etl(downtime, None, site, data_update_time=datetime(2024, 1, 5))
     assert "Daily_Cause_Summary" in outs
     assert outs["Daily_Cause_Summary"].count() == 2

@@ -204,6 +204,79 @@ def test_rest_scan_live_http_server(spark):
         srv.server_close()
 
 
+@pytest.fixture
+def query_server():
+    """Local HTTP server that records each request's decoded query and
+    answers with one single-page payload. Yields (base_url, queries)."""
+    import http.server
+    import json as _json
+    import threading
+    from urllib.parse import parse_qs, urlsplit
+
+    queries = []
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            q = parse_qs(urlsplit(self.path).query)
+            queries.append(q)
+            body = {"items": [{"id": 1, "site": q["site"][0]}], "_links": {}}
+            payload = _json.dumps(body).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(payload)))
+            self.end_headers()
+            self.wfile.write(payload)
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_address[1]}", queries
+    srv.shutdown()
+    srv.server_close()
+
+
+def test_rest_scan_url_encodes_site(spark, query_server):
+    """A site key with a space and an '&' (the catalog has 'Lima SUD')
+    reaches the server as one decoded value: unencoded, urllib refuses
+    the URL and an '&' would split the query."""
+    from fhc_rco_etl_scalable_spark.sources.rest import default_fetch
+
+    base, queries = query_server
+    df = rest_scan(
+        spark, default_fetch, base, "dt", site="Lima SUD&x", start_date="2024-01-01"
+    )
+    assert [r.site for r in df.collect()] == ["Lima SUD&x"]
+    assert queries == [
+        {"site": ["Lima SUD&x"], "startDate": ["2024-01-01"], "rowSize": ["9999"]}
+    ]
+
+
+def test_paged_rest_url_encodes_site(spark, query_server):
+    """The paged_rest reader encodes its per-site query the same way."""
+    from fhc_rco_etl_scalable_spark.sources.rest_datasource import (
+        PagedRestDataSource,
+    )
+
+    base, queries = query_server
+    spark.dataSource.register(PagedRestDataSource)
+    rows = (
+        spark.read.format("paged_rest")
+        .schema("id long, site string")
+        .option("base_url", base)
+        .option("entity", "dt")
+        .option("sites", "Lima SUD&x")
+        .option("start_date", "2024-01-01")
+        .load()
+        .collect()
+    )
+    assert [(r.id, r.site) for r in rows] == [(1, "Lima SUD&x")]
+    assert queries == [
+        {"site": ["Lima SUD&x"], "startDate": ["2024-01-01"], "rowSize": ["500"]}
+    ]
+
+
 @pytest.mark.parametrize("method", ["GET", "POST"])
 def test_default_fetch_retries_429_and_honors_retry_after(method):
     """429 (rate limiting) is the most common transient failure for

@@ -25,9 +25,7 @@ tail -2 /tmp/close_audit.log
 echo "== gate 2/3: full-catalog oracle sweep at $SF_DIR =="
 python tools/check_oracle.py "$SF_DIR" > /tmp/close_oracle.log 2>&1
 o=$?
-# match anywhere in the line: Spark progress bars emit carriage
-# returns that leave some OK lines mid-line
-grep -c "OK   " /tmp/close_oracle.log | xargs -I{} echo "{} entries OK"
+grep -c '^OK ' /tmp/close_oracle.log | xargs -I{} echo "{} entries OK"
 grep -E "FAIL |^WARN" /tmp/close_oracle.log | head -20
 [ $o -ne 0 ] && { echo "FAIL check_oracle (exit $o)"; rc=1; }
 

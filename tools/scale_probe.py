@@ -559,8 +559,8 @@ def run_ngram(spark, docs) -> dict:
     corpus side pays one explode + broadcast joins + a per-doc
     aggregate, never a corpus-keyed pre-aggregation shuffle), and the
     broadcast MODEL stays bounded — vocabulary saturates and
-    min_bigram_count prunes the tail, so model rows must stay ~O(1)
-    while the corpus grows O(n). DSIR's bucket table is <= n_buckets
+    the bigram-count floor of 2 prunes the tail, so model rows must stay
+    ~O(1) while the corpus grows O(n). DSIR's bucket table is <= 1024
     rows by construction; the probe records it to prove the cap is
     honored, not assumed."""
     from fhc_rco_etl_scalable_spark.operators.lm import (
@@ -601,7 +601,7 @@ def run_bpe(spark, docs) -> dict:
     """BPE corpus pass (word_type_counts) on suffix-replicated docs.
     Claim: the driver-side merge-loop input stays bounded — word TYPES
     saturate as the corpus replicates (only the per-replica shard
-    token adds new types), and the min_count/max_word_types caps bound
+    token adds new types), and the min_count floor and 50,000-type cap bound
     the table regardless, so the driver loop's input must stay ~O(1)
     while corpus tokens grow O(n)."""
     from fhc_rco_etl_scalable_spark.operators.bpe import word_type_counts
