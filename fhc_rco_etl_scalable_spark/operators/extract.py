@@ -12,7 +12,7 @@ needs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 BLOCKED_STARVED = ("DTMach-Blocked", "DTMach-Starved")
@@ -91,6 +91,28 @@ def production_only_filter(production: DataFrame) -> DataFrame:
     return production.filter(F.col("LineStatus") == "In Production")
 
 
+def _one_stop_per_line_start(df: DataFrame) -> DataFrame:
+    """Multi-constraint dedup: one row per (LINE, START_TIME), kept by
+    min downtime_id — a deterministic pick, where a bare dropDuplicates
+    would keep an arbitrary row and make session and downtime sums
+    run-dependent."""
+    w = Window.partitionBy("LINE", "START_TIME").orderBy("downtime_id")
+    return (
+        df.withColumn("__dd", F.row_number().over(w))
+        .filter(F.col("__dd") == 1)
+        .drop("__dd")
+    )
+
+
+def constraints_per_line(line_dt: DataFrame) -> DataFrame:
+    """Number_of_Constraints per LINE: the distinct constraint machines
+    of the line stream (A2; reference machine_level.py:24-25,
+    overall_etl.py:205-212)."""
+    return line_dt.groupBy("LINE").agg(
+        F.countDistinct("MACHINE").alias("Number_of_Constraints")
+    )
+
+
 def downtime_variants(
     flagged: DataFrame, multi_constraint: bool = False
 ) -> dict[str, DataFrame]:
@@ -118,14 +140,7 @@ def downtime_variants(
     constraint = F.col("isConstraint")
     line_stream = flagged
     if multi_constraint:
-        from pyspark.sql import Window
-
-        w_dedup = Window.partitionBy("LINE", "START_TIME").orderBy("downtime_id")
-        line_stream = (
-            flagged.withColumn("__dd", F.row_number().over(w_dedup))
-            .filter(F.col("__dd") == 1)
-            .drop("__dd")
-        )
+        line_stream = _one_stop_per_line_start(flagged)
     line_dt_full = line_stream.filter(constraint)
     line_dt = line_dt_full.filter(~F.col("isExcluded")).na.drop(subset=["START_TIME"])
     machine_dt_full = flagged.na.drop(subset=["START_TIME"])

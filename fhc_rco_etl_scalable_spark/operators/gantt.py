@@ -47,6 +47,7 @@ def _arr(cond: Column, *points: Column) -> Column:
 
 
 from ..functions.scalar import ts_plus_seconds as _plus_s  # shared micro-arithmetic
+from .extract import constraints_per_line
 
 
 def attach_stops_to_windows(co_agg: DataFrame, stops: DataFrame) -> DataFrame:
@@ -256,12 +257,11 @@ def _gantt_analysis_impl(
     line_dt_full: DataFrame,
     server: str,
 ) -> tuple[DataFrame, DataFrame]:
-    # Number of constraints = distinct constraint machines per line
-    # (A2; machine_level.py:24-25).
-    n_constraints = line_dt.groupBy("LINE").agg(
-        F.countDistinct("MACHINE").alias("Number_of_Constraints")
+    single_lines = (
+        constraints_per_line(line_dt)
+        .filter(F.col("Number_of_Constraints") == 1)
+        .select("LINE")
     )
-    single_lines = n_constraints.filter(F.col("Number_of_Constraints") == 1).select("LINE")
 
     stop_cols = [
         "LINE", "MACHINE", "START_TIME", "END_TIME", "DOWNTIME", "UPTIME",
@@ -271,12 +271,7 @@ def _gantt_analysis_impl(
     ]
 
     # --- non-constraint pass ---
-    # Each *_windowed frame feeds both its Gantt emitter and the event
-    # log; each gantt output feeds the union AND the constraint-machine
-    # removal — lazy barriers keep every pass single-execution.
-    nc_windowed = attach_stops_to_windows(
-        co_agg, machine_dt.select(*stop_cols)
-    ).localCheckpoint(eager=False)
+    nc_windowed = attach_stops_to_windows(co_agg, machine_dt.select(*stop_cols))
     nc_gantt = generate_gantt_points(nc_windowed, status=F.lit(2.0))
 
     # --- constraint pass (single-constraint lines) ---
@@ -287,12 +282,14 @@ def _gantt_analysis_impl(
         .join(co_flag, ["LINE", "downtime_id"], "left")
         .na.fill(0, ["CO_Event"])
     )
+    # c_windowed feeds the constraint Gantt points (read twice: the
+    # union and the constraint-machine removal) and the event log; the
+    # one cut of this function pays (removing it cost ~13% of a
+    # two-site, two-load run's CPU in paired runs).
     c_windowed = attach_stops_to_windows(co_agg, line_stops).localCheckpoint(
         eager=False
     )
-    c_gantt = generate_gantt_points(c_windowed, status=constraint_status()).localCheckpoint(
-        eager=False
-    )
+    c_gantt = generate_gantt_points(c_windowed, status=constraint_status())
 
     # Remove constraint machines from the non-constraint output on
     # single-constraint lines (machine_level.py:366-375).

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import minutes_between, scrub_text, ts_plus_minutes
 from ..operators.asof import asof_join_range
+from ..operators.extract import _one_stop_per_line_start
 from ..operators.sessionize import (
     co_trigger_column,
     rco_session_trigger,
@@ -88,6 +89,11 @@ def _w_line() -> Window:
     return Window.partitionBy("LINE").orderBy(*ORDER_COLS)
 
 
+def _w_co() -> Window:
+    """Per-line changeover order (ties on start broken by identifier)."""
+    return Window.partitionBy("LINE").orderBy("CO_StartTime", "CO_Identifier")
+
+
 def detect_changeovers(line_dt: DataFrame, site: SiteParams) -> DataFrame:
     """Filter CO events (dynamic per-site predicate) and sessionize.
 
@@ -96,19 +102,11 @@ def detect_changeovers(line_dt: DataFrame, site: SiteParams) -> DataFrame:
     """
     co = line_dt.filter(F.expr(site.co_predicate))
     if site.run_multi_constraint_analysis:
-        # Multi-constraint lines record one stop per constraint machine;
-        # keep ONE row per (START_TIME, LINE) — deterministically, by
-        # min downtime_id (bare dropDuplicates keeps an arbitrary row,
-        # which would make sessions/downtime sums run-dependent and
-        # break load idempotence; reference data_from_mdc.py:93-94, R
-        # semantics — the Python inplace bug is documented, not
-        # replicated).
-        w_dedup = Window.partitionBy("LINE", "START_TIME").orderBy("downtime_id")
-        co = (
-            co.withColumn("__dd", F.row_number().over(w_dedup))
-            .filter(F.col("__dd") == 1)
-            .drop("__dd")
-        )
+        # Multi-constraint lines record one stop per constraint machine
+        # (reference data_from_mdc.py:93-94, R semantics — the Python
+        # inplace bug is documented, not replicated). downtime_variants
+        # already dedups; a caller handing mes_etl its own frame may not.
+        co = _one_stop_per_line_start(co)
     co = co.na.drop(subset=["START_TIME"]).withColumn(
         "CO_Trigger_Column", co_trigger_column()
     )
@@ -213,7 +211,7 @@ def aggregate_changeovers(co_events: DataFrame, site: SiteParams) -> DataFrame:
 def with_neighbor_context(co_agg: DataFrame, site: SiteParams) -> DataFrame:
     """lead/lag changeover neighbors with ±pad synthetic windows at the
     line edges (W2; reference mes_etl.py:158-174, R:179-195)."""
-    w = Window.partitionBy("LINE").orderBy("CO_StartTime", "CO_Identifier")
+    w = _w_co()
     pad = site.boundary_pad_minutes
     return co_agg.withColumn(
         "Previous_CO_EndTime",
@@ -321,14 +319,13 @@ def first_stop_analysis(
     carries ``Total_Uptime_till_Next_CO`` per CO_Identifier
     (reference joins it back into CO_Aggregated, overall_etl.py:163-165).
     """
-    w = Window.partitionBy("LINE").orderBy("CO_StartTime", "CO_Identifier")
     horizon_min = site.first_stop_last_co_horizon_days * 24 * 60
     anchors = (
         co_agg.select("LINE", "CO_Identifier", "CO_StartTime", "CO_EndTime")
         .withColumn(
             "__next_co_start",
             F.coalesce(
-                F.lead("CO_StartTime").over(w),
+                F.lead("CO_StartTime").over(_w_co()),
                 ts_plus_minutes(F.col("CO_EndTime"), horizon_min),
             ),
         )
@@ -357,7 +354,8 @@ def first_stop_analysis(
         F.sum(F.col("UPTIME") + F.col("DOWNTIME")).over(cum),
     )
     # consumed by both the first-stop pick and the backfill sum — one
-    # barrier, or the CO x stop range join runs twice.
+    # cut, or the CO x stop range join runs twice (removing it alone
+    # cost 1.3 s per warm site build).
     sl = sl.localCheckpoint(eager=False)
 
     unplanned = (
@@ -385,10 +383,9 @@ def first_stop_analysis(
     # Total uptime till next CO: slice uptime sum + the uptime carried
     # by the next CO's first event (A9, first_stop.py:78-87).
     slice_sum = sl.groupBy("CO_Identifier").agg(F.sum("UPTIME").alias("__slice_uptime"))
-    w_sess_first = Window.partitionBy("LINE").orderBy("CO_StartTime", "CO_Identifier")
     backfill = (
         co_agg.select("LINE", "CO_Identifier", "CO_StartTime", "__first_uptime")
-        .withColumn("__next_first_uptime", F.lead("__first_uptime").over(w_sess_first))
+        .withColumn("__next_first_uptime", F.lead("__first_uptime").over(_w_co()))
         .join(slice_sum, "CO_Identifier", "left")
         .select(
             "CO_Identifier",
@@ -414,14 +411,13 @@ def mes_etl(
     detection input). ``line_dt_full``: every line-level stop event
     (the brandcode/first-stop context).
     """
-    # Materialization barriers on the SMALL fan-out frames (CO events
-    # and per-CO aggregates are ~10^3 smaller than the stop log): the
-    # event-log, aggregate, first-stop and Gantt branches all consume
-    # them, and without a barrier each branch re-runs the
-    # sessionization windows from the raw scan. The big frames
-    # (line_dt / line_dt_full) are deliberately NOT checkpointed —
-    # at 100 TB a parquet re-scan with pushdown is cheaper than
-    # caching the full log.
+    # Lazy cuts on the SMALL fan-out frames only (CO events and per-CO
+    # aggregates are ~10^3 smaller than the stop log). Under AQE each
+    # cut plans its subtree and runs its shuffle stages at build time,
+    # so a cut stays only while paired runs show it pays. The big
+    # frames (line_dt / line_dt_full) are deliberately NOT
+    # checkpointed — at 100 TB a parquet re-scan with pushdown is
+    # cheaper than caching the full log.
     with fast_planning(line_dt):
         return _mes_etl_impl(line_dt, line_dt_full, site)
 
@@ -431,17 +427,22 @@ def _mes_etl_impl(
     line_dt_full: DataFrame,
     site: SiteParams,
 ) -> dict[str, DataFrame]:
+    # co_events feeds the aggregate and the CO_Event_Log; the cut runs
+    # the sessionization windows once. Removing it alone stayed within
+    # noise in a warm site build; no paired two-site run has tested it
+    # (ROADMAP direction 2).
     co_events = detect_changeovers(line_dt, site).localCheckpoint(eager=False)
     # aggregate_changeovers carries __first_uptime (first event's UPTIME
     # per session) for the A9 backfill — one window pass, no extra join.
     co_agg = aggregate_changeovers(co_events, site)
     co_agg = with_neighbor_context(co_agg, site)
+    # co_agg feeds the event log, first stop, the output and both Gantt
+    # passes: without the cut each re-runs the as-of brandcode joins
+    # (removing it alone cost 2.6 s and 34 jobs per warm site build).
     co_agg = resolve_brandcodes(co_agg, line_dt_full).localCheckpoint(eager=False)
 
     outputs: dict[str, DataFrame] = {}
-    outputs["CO_Event_Log"] = build_co_event_log(co_events, co_agg, site).localCheckpoint(
-        eager=False
-    )
+    outputs["CO_Event_Log"] = build_co_event_log(co_events, co_agg, site)
 
     if site.run_first_stop_analysis:
         firsts, backfill = first_stop_analysis(co_agg, line_dt_full, site)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..operators.aggregate import pivot_wide, runtime_per_day
 from ..operators.brandcode import brandcode_master
 from ..operators.extract import (
+    constraints_per_line,
     downtime_variants,
     production_only_filter,
     with_derived_flags,
@@ -172,9 +173,7 @@ def site_etl(
             F.max("__last").alias("Last_Available_Data_Point"),
         )
     )
-    n_constraints = line_dt.groupBy("LINE").agg(
-        F.countDistinct("MACHINE").alias("Number_of_Constraints")
-    )
+    n_constraints = constraints_per_line(line_dt)
     update_time = data_update_time or datetime.utcnow()
     outputs["Script_Data"] = (
         bounds_dsh.join(n_constraints, "LINE", "left")

@@ -140,8 +140,8 @@ _FAST_PLANNING_LOCK = threading.Lock()
 @contextlib.contextmanager
 def fast_planning(df):
     """Context manager: disable Catalyst constraint propagation while
-    CONSTRUCTING a deep pipeline plan (the lazy-checkpoint subtree
-    planning inside mes_etl/gantt). On those window-heavy trees the
+    CONSTRUCTING a deep pipeline plan (the subtree planning of the
+    lazy-checkpoint cuts mes_etl and gantt_analysis keep). On those window-heavy trees the
     rule's cost is quadratic in predicate count and adds ~1 s of pure
     driver CPU per pipeline build at ANY data scale; its benefit —
     inferred isnotnull pushdowns — is redundant there because the

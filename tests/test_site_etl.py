@@ -39,8 +39,7 @@ def _dt(did, line, machine, start_min, dt_min, up_min, brand, c1, c2,
             "note", "F1")
 
 
-@pytest.fixture(scope="module")
-def site_outputs(spark):
+def _small_site_etl(spark):
     rows = [
         _dt("d1", "L1", "L1 CM", 0, 10, 30, "A", "Planned Downtime", "Changeover"),
         _dt("d2", "L1", "L1 CM", 20, 5, 10, "B", "Planned Downtime", "Changeover"),
@@ -73,9 +72,13 @@ def site_outputs(spark):
         " ProdGroup string, FirstPackCount double, StatFactor double",
     )
     site = SiteParams(server="SRV", co_trigger_parameter=30.0)
-    outs = site_etl(downtime, prod, site, line_config=line_config,
+    return site_etl(downtime, prod, site, line_config=line_config,
                     data_update_time=datetime(2024, 1, 5))
-    return outs
+
+
+@pytest.fixture(scope="module")
+def site_outputs(spark):
+    return _small_site_etl(spark)
 
 
 def test_all_eight_outputs_present_and_aligned(site_outputs):
@@ -84,6 +87,25 @@ def test_all_eight_outputs_present_and_aligned(site_outputs):
         aligned = align_to_schema(df, OUTPUT_SCHEMAS[name])
         assert aligned.columns == [f.name for f in OUTPUT_SCHEMAS[name].fields]
         assert aligned.count() >= 0  # materializes
+
+
+# The lazy localCheckpoint cuts one site build keeps: CO events, the
+# brandcode-resolved per-CO aggregate, the first-stop inter-CO slice
+# and the constraint pass's windowed stops.
+SITE_BUILD_CUTS = 4
+
+
+def test_site_build_checkpoints_cuts_plus_outputs(spark):
+    # As incremental_site_loader does: one eager checkpoint per output.
+    # Ids are compared as sets (test_graph_release), and every frame
+    # stays referenced while they are read.
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    outs = _small_site_etl(spark)
+    materialized = {name: df.localCheckpoint(eager=True) for name, df in outs.items()}
+    left = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(outs) == len(materialized) == 8
+    assert len(left) == SITE_BUILD_CUTS + len(materialized)
 
 
 def test_flag_lattice(spark):
